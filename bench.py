@@ -20,14 +20,14 @@ Policies (rounds 3-10):
   portable variant.
 
 * **Regression gate.** After timing, the harness diffs per-query times
-  against the newest *parseable* committed ``BENCH_r*.json`` and
-  prints a WARNING line to stderr for every >2x regression not in
-  ``REGRESSION_ALLOWLIST`` (deliberate swaps, documented inline). The
-  JSON contract on stdout is unchanged. ``compare_bench`` is pure and
-  unit-tested in tests/test_plan_shapes.py. The gate self-re-arms: a
-  corrupt newest record (the BENCH_r09 ``parsed: null`` truncation)
-  is skipped and the comparison falls back to the newest record that
-  actually parses, so one bad artifact can never disarm it.
+  against the newest *parseable* committed ``BENCH_r*.json`` measured
+  at the same core count (the record's top-level ``cpus``) and prints
+  a WARNING line to stderr for every >2x regression. The JSON contract
+  on stdout is unchanged. ``compare_bench`` is pure and unit-tested in
+  tests/test_plan_shapes.py. The gate self-re-arms: a corrupt newest
+  record (the BENCH_r09 ``parsed: null`` truncation) is skipped and the
+  comparison falls back to the newest record that actually parses, so
+  one bad artifact can never disarm it.
 
 * **Uniform stability samples (round-11).** EVERY query takes the same
   ``N_PASSES`` interleaved samples and records the lower MEDIAN:
@@ -59,10 +59,13 @@ Policies (rounds 3-10):
 * **Artifact split (round-10).** The stdout line carries headline
   totals + per-query medians ONLY and is kept under the driver's
   2,000-char tail-capture window (pinned by a unit test); the per-rep
-  ``samples`` go to a separate committed ``BENCH_SAMPLES_r{N}.json``
-  side file. Round 9 put samples on the stdout line, overflowing the
-  window — the driver recorded ``parsed: null`` and the regression
-  gate silently disarmed, the exact failure its test exists to catch.
+  ``samples`` go to a separate committed
+  ``BENCH_SAMPLES_r{N}_c{cpus}.json`` side file, which the line names
+  as ``samples_file``. The side file is never overwritten: if the name
+  is taken, the samples go to the temp directory instead. Round 9 put
+  samples on the stdout line, overflowing the window — the driver
+  recorded ``parsed: null`` and the regression gate silently disarmed,
+  the exact failure its test exists to catch.
 """
 
 from __future__ import annotations
@@ -103,61 +106,6 @@ HEADLINE = [
     "q69_promo_window_shipments",
     "q72_heavy_hitter_terms",
 ]
-
-#: Deliberate regressions the gate must not warn about, SCOPED to the
-#: specific committed baseline round whose discontinuity each entry
-#: documents: {query: (baseline_round, reason)}. An entry suppresses
-#: the comparison ONLY when the gate's baseline record is exactly that
-#: round — once a newer record is committed the entry expires
-#: automatically, so a FRESH regression on the same query warns loudly
-#: (round-10 judge item 2: the previous name-scoped q34 entry,
-#: documenting the r2->r3 md5->xxhash64 record discontinuity, silently
-#: blessed an unrelated r9->r10 2.2x movement).
-REGRESSION_ALLOWLIST: dict[str, tuple[int, str]] = {
-    # r2 regression was the deliberate md5 portable-hash swap; r3 benches
-    # the xxhash64 deployable path via BENCH_OVERRIDES, so the allowlist
-    # entry only papers over the r2->r3 record discontinuity — and only
-    # when the baseline IS the r2 record.
-    "q34_simhash_near_dups": (
-        2,
-        "r3 times the xxhash64 deployable path (r2 timed the md5 oracle path)",
-    ),
-}
-
-#: Round whose bench record is the first measured under the CURRENT
-#: sampling policy. Records from earlier rounds are apples-to-oranges
-#: for warm-sensitive queries — r10's >=2s tier recorded a lower
-#: median of only 3 uniformly-cold interleaved samples where r9's
-#: rep-block medians were warm (attributed same-session in
-#: POLICY_AB_r11.json: a sample taken right after OTHER queries ran is
-#: ~2x a back-to-back one for the shingle/streaming family; q32's
-#: plan never changed). Round 11 equalizes every query to N_PASSES
-#: interleaved samples, which shifts those medians once more, so the
-#: gate annotates (not silences silently) regressions measured against
-#: a pre-policy-change baseline as the known discontinuity; the marker
-#: self-expires as soon as a record from this round or later is
-#: committed and becomes the baseline.
-POLICY_CHANGED_AT_ROUND = 11
-
-#: Queries the r10->r11 sampling-policy change is KNOWN to move,
-#: attributed same-session in POLICY_AB_r11.json: the warm-sensitive
-#: shingle family (an interleaved sample taken right after other
-#: queries ran is ~2x a back-to-back warm one) and the streaming pair
-#: (state-store provider accumulation). Round-12 advisor (medium): the
-#: unscoped form routed EVERY >=2x regression on ANY query into
-#: 'allowed' while the baseline predated round 11 — re-introducing the
-#: blanket suppression the round-scoped allowlist was built to
-#: eliminate. Only these queries get the discontinuity annotation; all
-#: others warn normally even against a pre-r11 baseline.
-POLICY_DISCONTINUITY_QUERIES = frozenset(
-    {
-        "q32_ngram_jaccard_pairs",
-        "q34_simhash_near_dups",
-        "q33_minhash_lsh_near_dups",  # same shingle/signature family
-        "stream_tumbling_availablenow",
-        "stream_session_availablenow",
-    }
-)
 
 #: Load sentinel (round-12 judge item 4): a sample block captured at
 #: 1-minute loadavg above ``cores * LOAD_CONTAMINATION_FACTOR`` is
@@ -320,31 +268,12 @@ def compare_bench(
     prev: dict[str, float],
     cur: dict[str, float],
     threshold: float = 2.0,
-    allowlist: dict[str, tuple[int, str]] | None = None,
-    baseline_round: int | None = None,
-    policy_changed_at: int | None = None,
-    policy_queries: frozenset[str] | None = None,
     load_notes: dict[str, str] | None = None,
 ) -> tuple[list[str], list[str]]:
     """Return ``(warnings, allowed)`` message lists for queries that
     regressed more than ``threshold``x vs ``prev``; ``allowed`` holds
-    regressions covered by an ``allowlist`` entry, by the sampling-
-    policy discontinuity, or by a load-contamination note. Pure — the
+    regressions covered by a load-contamination note. Pure — the
     caller prints.
-
-    An allowlist entry ``{name: (round, reason)}`` applies ONLY when
-    ``baseline_round`` equals that round — entries expire the moment a
-    newer record becomes the baseline, so a fresh regression on a
-    previously-allowlisted query warns loudly (round-10 judge item 2).
-
-    When ``baseline_round`` predates ``policy_changed_at``, a
-    regression on a query in ``policy_queries`` — the set POLICY_AB
-    actually ATTRIBUTED to the sampling-policy change — is annotated
-    and returned in ``allowed``; every other query warns normally even
-    against a pre-change baseline (round-12 advisor: the unscoped form
-    suppressed genuine regressions for the whole round). Self-expires
-    once a current-policy record becomes the baseline. ``policy_queries
-    = None`` means NO query gets the annotation (explicit opt-in).
 
     A ``load_notes`` entry (from load_contamination_notes, current or
     baseline side) routes the regression to ``allowed`` with the note —
@@ -354,13 +283,7 @@ def compare_bench(
     Noise floor is two-sided: a pair is skipped only when BOTH times
     are small (prev < 0.5s AND cur < 1.0s). A query crossing from
     noise into seconds (0.4s -> 40s) still warns."""
-    allow = allowlist or {}
     loads = load_notes or {}
-    policy_gap = (
-        baseline_round is not None
-        and policy_changed_at is not None
-        and baseline_round < policy_changed_at
-    )
     warnings: list[str] = []
     allowed: list[str] = []
     for name, t_cur in sorted(cur.items()):
@@ -368,18 +291,7 @@ def compare_bench(
         if t_prev is None or (t_prev < 0.5 and t_cur < 1.0):
             continue
         if t_cur > threshold * t_prev:
-            entry = allow.get(name)
-            if entry is not None and entry[0] == baseline_round:
-                note, bucket = f" (allowlisted vs r{entry[0]}: {entry[1]})", allowed
-            elif policy_gap and policy_queries and name in policy_queries:
-                note, bucket = (
-                    f" (policy discontinuity: baseline r{baseline_round} "
-                    f"predates the r{policy_changed_at} sampling-policy "
-                    "change, and POLICY_AB attributes this query — see "
-                    "POLICY_AB artifact / COVERAGE.md)",
-                    allowed,
-                )
-            elif name in loads:
+            if name in loads:
                 note, bucket = f" (load-contaminated: {loads[name]})", allowed
             else:
                 note, bucket = "", warnings
@@ -409,72 +321,85 @@ def _committed_bench_paths(repo_root: str) -> list[str]:
     return sorted(glob.glob(os.path.join(repo_root, "BENCH_r*.json")), key=lambda p: (_bench_round(p), p))
 
 
-def _parse_bench_record(path: str) -> dict[str, float] | None:
-    """Per-query times from one committed record, or None if the record
-    doesn't parse to a queries dict. The driver wraps this script's
-    JSON line under a 'parsed' key ({n, rc, ..., parsed: {queries:
-    ...}}); 'parsed' is null when the line overflowed the driver's
-    tail window (BENCH_r09.json) — that record must be SKIPPED, not
-    treated as an empty baseline."""
+def _read_json(path: str):
+    """Parsed JSON at ``path``, or None if it is missing or malformed."""
     try:
         with open(path) as fh:
-            record = json.load(fh)
+            return json.load(fh)
     except (OSError, ValueError):
         return None
+
+
+def _bench_payload(record) -> dict | None:
+    """This script's stdout payload inside a committed record. The
+    driver wraps the JSON line under a 'parsed' key ({n, rc, cpus, ...,
+    parsed: {queries: ...}}); 'parsed' is null when the line overflowed
+    the driver's tail window (BENCH_r09.json) — that record has no
+    payload and must be SKIPPED, not treated as an empty baseline."""
     if not isinstance(record, dict):
         return None
     parsed = record.get("parsed")
     if isinstance(parsed, dict) and "queries" in parsed:
         record = parsed
-    queries = record.get("queries")
-    if not isinstance(queries, dict):
+    return record if isinstance(record.get("queries"), dict) else None
+
+
+def _bench_times(record) -> dict[str, float] | None:
+    """Per-query times from one committed record, or None if it carries
+    no queries dict. Streaming medians ride a separate key so the
+    headline total stays comparable across rounds, but the regression
+    gate covers them too (round-10: the streaming section moved 1.8x
+    with no gate line)."""
+    payload = _bench_payload(record)
+    if payload is None:
         return None
-    # streaming medians ride a separate key so the headline total stays
-    # comparable across rounds, but the regression gate covers them too
-    # (round-10: the streaming section moved 1.8x with no gate line)
-    streaming = record.get("streaming")
-    return dict(queries) | (dict(streaming) if isinstance(streaming, dict) else {})
+    streaming = payload.get("streaming")
+    return dict(payload["queries"]) | (dict(streaming) if isinstance(streaming, dict) else {})
 
 
-def _latest_committed_bench(repo_root: str) -> tuple[int | None, dict[str, float]]:
-    """``(round, per-query times)`` from the newest PARSEABLE committed
-    BENCH_r*.json. Walks newest-first and skips corrupt records
-    (parsed: null / malformed JSON) so the 2x regression gate re-arms
-    itself from the last good round instead of silently comparing
-    against {} — the BENCH_r09 failure mode. The round number feeds the
-    allowlist's (query, baseline-round) scoping and the sampling-policy
-    discontinuity annotation."""
+def _parse_bench_record(path: str) -> dict[str, float] | None:
+    """``_bench_times`` of the committed record at ``path``."""
+    return _bench_times(_read_json(path))
+
+
+def _latest_committed_bench(repo_root: str, cpus: int) -> tuple[str | None, dict[str, float]]:
+    """``(path, per-query times)`` of the newest PARSEABLE committed
+    BENCH_r*.json whose top-level ``cpus`` equals ``cpus``. Walks
+    newest-first and skips corrupt records (parsed: null / malformed
+    JSON) so the 2x regression gate re-arms itself from the last good
+    round instead of silently comparing against {} — the BENCH_r09
+    failure mode. Records from other core counts are skipped: an 8-core
+    run gated against a 32-core record (or the reverse) compares unlike
+    runs."""
     for path in reversed(_committed_bench_paths(repo_root)):
-        queries = _parse_bench_record(path)
-        if queries:
-            return _bench_round(path), queries
+        record = _read_json(path)
+        if isinstance(record, dict) and record.get("cpus") == cpus:
+            times = _bench_times(record)
+            if times:
+                return path, times
     return None, {}
 
 
-def _baseline_load_notes(
-    repo_root: str, baseline_round: int | None, cores: int
-) -> dict[str, str]:
+def _baseline_load_notes(baseline_path: str | None, cores: int) -> dict[str, str]:
     """Load-contamination notes for the BASELINE side of the regression
-    gate, read from the baseline round's committed BENCH_SAMPLES
-    artifact. Rounds before r12 carry no loadavg_per_pass — they return
-    no notes (unknown is not contaminated)."""
-    if baseline_round is None:
+    gate, read from the side file the baseline record names as its
+    ``samples_file``. A side file measured at another core count is
+    not that record's samples (BENCH_r12_c8.json names the 32-core
+    BENCH_SAMPLES_r13.json, which overwrote its own). Records without
+    a samples file, or side files without loadavg_per_pass (before
+    r12), return no notes (unknown is not contaminated)."""
+    payload = _bench_payload(_read_json(baseline_path)) if baseline_path else None
+    samples_file = payload.get("samples_file") if payload else None
+    if not samples_file:
         return {}
-    path = os.path.join(repo_root, f"BENCH_SAMPLES_r{baseline_round:02d}.json")
-    if not os.path.exists(path):
-        path = os.path.join(repo_root, f"BENCH_SAMPLES_r{baseline_round}.json")
-    try:
-        with open(path) as fh:
-            art = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    if not isinstance(art, dict):
+    art = _read_json(os.path.join(os.path.dirname(baseline_path), samples_file))
+    if not isinstance(art, dict) or art.get("cpus") != cores:
         return {}
     return load_contamination_notes(
         art.get("samples"),
         art.get("loadavg_per_pass"),
         cores,
-        f"baseline r{baseline_round}",
+        f"baseline {os.path.basename(baseline_path)}",
     )
 
 
@@ -484,6 +409,31 @@ def _next_round_guess(repo_root: str) -> int:
     the current round is (newest committed round) + 1."""
     paths = _committed_bench_paths(repo_root)
     return (_bench_round(paths[-1]) if paths else 0) + 1
+
+
+def _write_samples(repo_root: str, cores: int, artifact: dict) -> str | None:
+    """Write the per-rep samples side file as
+    ``BENCH_SAMPLES_r{N}_c{cores}.json`` in ``repo_root`` and return
+    that name for the stdout line. The name is claimed exclusively: an
+    existing file is committed evidence from another run (a local run
+    and a driver run share round numbers), so it is never overwritten —
+    the samples go to a fresh file in the temp directory instead, its
+    path printed to stderr, and None is returned so the line names no
+    repo file."""
+    name = f"BENCH_SAMPLES_r{_next_round_guess(repo_root)}_c{cores}.json"
+    try:
+        with open(os.path.join(repo_root, name), "x") as fh:
+            json.dump(artifact, fh, indent=1)
+        return name
+    except FileExistsError:
+        fd, path = tempfile.mkstemp(prefix=name[:-5] + "_", suffix=".json")
+        with os.fdopen(fd, "w") as fh:
+            json.dump(artifact, fh, indent=1)
+        print(
+            f"WARNING: {name} already exists; samples written to {path}",
+            file=sys.stderr,
+        )
+        return None
 
 
 def _driver_json_line(
@@ -751,20 +701,14 @@ def main() -> int:
     }
 
     repo_root = os.path.dirname(os.path.abspath(__file__))
-    baseline_round, baseline = _latest_committed_bench(repo_root)
     cores = int(cpus) if str(cpus).isdigit() else os.cpu_count() or 1
+    baseline_path, baseline = _latest_committed_bench(repo_root, cores)
     load_notes = {
-        **_baseline_load_notes(repo_root, baseline_round, cores),
+        **_baseline_load_notes(baseline_path, cores),
         **load_contamination_notes(all_samples, loads, cores, "current"),
     }
     warnings, allowed = compare_bench(
-        baseline,
-        {**times, **stream_times},
-        allowlist=REGRESSION_ALLOWLIST,
-        baseline_round=baseline_round,
-        policy_changed_at=POLICY_CHANGED_AT_ROUND,
-        policy_queries=POLICY_DISCONTINUITY_QUERIES,
-        load_notes=load_notes,
+        baseline, {**times, **stream_times}, load_notes=load_notes
     )
     for msg in warnings + allowed:
         print(msg, file=sys.stderr)
@@ -782,41 +726,38 @@ def main() -> int:
     # must fit the driver's tail window (round-10 judge item 1)
     samples_file = None
     try:
-        samples_name = f"BENCH_SAMPLES_r{_next_round_guess(repo_root)}.json"
-        with open(os.path.join(repo_root, samples_name), "w") as fh:
-            json.dump(
-                {
-                    "sf": sf,
-                    "cpus": int(cpus) if str(cpus).isdigit() else cpus,
-                    "policy": "interleaved passes, per-query lower median",
-                    "medians": {**times, **stream_times},
-                    "samples": all_samples,
-                    # load sentinel (round-12): 1-min /proc/loadavg read
-                    # at the start of each pass; sample k of every query
-                    # ran in pass k. Lets a reader (and compare_bench)
-                    # tell 'noisy box' from 'real regression' inside one
-                    # artifact.
-                    "loadavg_per_pass": loads,
-                    "load_contamination_threshold": cores
-                    * LOAD_CONTAMINATION_FACTOR,
-                    # CPU-signal column (round-12 judge item 3): total
-                    # executor task time per sample, diffed from the
-                    # AppStatusStore around each run. Wall clock at
-                    # sf0.1 is scheduling-bound (8-core ≈ 32-core on
-                    # 20/21 queries); task time is the cross-round
-                    # comparator that actually moves with plan work.
-                    # None = status store unavailable that sample.
-                    "task_time_ms": task_times,
-                    "task_time_medians_ms": {
-                        n: _lower_median([v for v in s if v is not None])
-                        for n, s in task_times.items()
-                        if any(v is not None for v in s)
-                    },
+        samples_file = _write_samples(
+            repo_root,
+            cores,
+            {
+                "sf": sf,
+                "cpus": int(cpus) if str(cpus).isdigit() else cpus,
+                "policy": "interleaved passes, per-query lower median",
+                "medians": {**times, **stream_times},
+                "samples": all_samples,
+                # load sentinel (round-12): 1-min /proc/loadavg read
+                # at the start of each pass; sample k of every query
+                # ran in pass k. Lets a reader (and compare_bench)
+                # tell 'noisy box' from 'real regression' inside one
+                # artifact.
+                "loadavg_per_pass": loads,
+                "load_contamination_threshold": cores
+                * LOAD_CONTAMINATION_FACTOR,
+                # CPU-signal column (round-12 judge item 3): total
+                # executor task time per sample, diffed from the
+                # AppStatusStore around each run. Wall clock at
+                # sf0.1 is scheduling-bound (8-core ≈ 32-core on
+                # 20/21 queries); task time is the cross-round
+                # comparator that actually moves with plan work.
+                # None = status store unavailable that sample.
+                "task_time_ms": task_times,
+                "task_time_medians_ms": {
+                    n: _lower_median([v for v in s if v is not None])
+                    for n, s in task_times.items()
+                    if any(v is not None for v in s)
                 },
-                fh,
-                indent=1,
-            )
-        samples_file = samples_name
+            },
+        )
     except OSError as exc:
         print(f"WARNING: could not write samples side file: {exc}", file=sys.stderr)
 

@@ -88,15 +88,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def clear_operator_caches(spark: SparkSession) -> None:
-    """Release every persisted relation. The near-dup/similarity
-    operators persist shared self-join intermediates for the lifetime of
-    the session (they cannot unpersist before the caller's action runs);
-    a long-lived service should call this between corpus runs to stop
-    storage-memory growth. (Spark also LRU-evicts under pressure.)"""
-    spark.catalog.clearCache()
-
-
 def release_caches(spark: SparkSession) -> int:
     """Unpersist every cached RDD/DataFrame block in the session.
     Returns the number of RDD-level persists swept AFTER the catalog

@@ -4,7 +4,9 @@ pruning on partitioned writes) asserted against .explain output, so a
 refactor that silently de-optimizes a plan fails CI — not a profiler
 session six months later."""
 
+import os
 import re
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -213,68 +215,18 @@ def test_join_strategy_hints_are_honored(spark):
 
 def test_bench_compare_flags_regressions():
     """compare_bench is the gate that would have caught q34's r2 3.3x:
-    >2x on a non-allowlisted query warns; allowlisted regressions come
-    back in a separate list (pure — main() prints both). The noise
-    floor is two-sided: skipped only when BOTH times are small, so a
-    query crossing from noise into seconds (qc: 0.1s -> 4.0s) STILL
-    warns (round-3 advisor finding)."""
+    >2x warns; load-noted regressions come back in a separate list
+    (pure — main() prints both). The noise floor is two-sided: skipped
+    only when BOTH times are small, so a query crossing from noise into
+    seconds (qc: 0.1s -> 4.0s) STILL warns (round-3 advisor finding)."""
     from bench import compare_bench
 
     prev = {"qa": 2.0, "qb": 2.0, "qc": 0.1, "qd": 3.0, "qf": 0.2}
     cur = {"qa": 5.0, "qb": 6.6, "qc": 4.0, "qd": 3.1, "qe": 9.9, "qf": 0.9}
-    warnings, allowed = compare_bench(
-        prev, cur, allowlist={"qb": (9, "deliberate swap")}, baseline_round=9
-    )
+    warnings, allowed = compare_bench(prev, cur, load_notes={"qb": "loaded"})
     assert sorted(w.split(" ")[2] for w in warnings) == ["qa", "qc"]
-    # qb allowed, qd within 2x, qe has no baseline, qf both-small noise
+    # qb load-noted, qd within 2x, qe has no baseline, qf both-small noise
     assert len(allowed) == 1 and "qb" in allowed[0]
-
-
-def test_bench_allowlist_entries_expire_with_their_baseline_round():
-    """Round-10 judge item 2: an allowlist entry documents ONE record
-    discontinuity — it must suppress the comparison only against that
-    round's record. A fresh q34-style regression measured against any
-    NEWER baseline warns loudly; the policy-discontinuity annotation
-    likewise applies only while the baseline predates the policy
-    change, then expires."""
-    from bench import REGRESSION_ALLOWLIST, compare_bench
-
-    allow = {"qb": (2, "r2->r3 hash swap")}
-    prev, cur = {"qb": 1.0}, {"qb": 2.5}
-    # baseline IS the documented round -> allowed
-    _, allowed = compare_bench(prev, cur, allowlist=allow, baseline_round=2)
-    assert len(allowed) == 1 and "allowlisted vs r2" in allowed[0]
-    # newer baseline -> the entry has expired, fresh regression WARNS
-    warnings, allowed = compare_bench(prev, cur, allowlist=allow, baseline_round=10)
-    assert len(warnings) == 1 and not allowed
-    # policy discontinuity: baseline predates the sampling-policy change
-    # AND the query is in the POLICY_AB-attributed set -> annotated +
-    # allowed, not an unexplained warning ...
-    warnings, allowed = compare_bench(
-        prev, cur, baseline_round=10, policy_changed_at=11,
-        policy_queries=frozenset({"qb"}),
-    )
-    assert not warnings and len(allowed) == 1
-    assert "policy discontinuity" in allowed[0]
-    # ... but a query POLICY_AB did NOT attribute warns normally even
-    # against a pre-change baseline (round-12 advisor: the unscoped
-    # form blanket-suppressed every regression for the whole round)
-    warnings, allowed = compare_bench(
-        prev, cur, baseline_round=10, policy_changed_at=11,
-        policy_queries=frozenset({"other_query"}),
-    )
-    assert len(warnings) == 1 and not allowed
-    # ... and self-expires once a current-policy record is the baseline
-    warnings, allowed = compare_bench(
-        prev, cur, baseline_round=11, policy_changed_at=11,
-        policy_queries=frozenset({"qb"}),
-    )
-    assert len(warnings) == 1 and not allowed
-    # the shipped allowlist is (round, reason)-scoped
-    assert all(
-        isinstance(v, tuple) and isinstance(v[0], int)
-        for v in REGRESSION_ALLOWLIST.values()
-    )
 
 
 def test_bench_overrides_stay_in_sync():
@@ -474,9 +426,12 @@ def test_latest_committed_bench_reads_driver_format():
     either: the scan skips back to the newest record that parses. On
     failure this test reports WHICH committed records were skipped,
     instead of the round-9 AttributeError."""
+    import json
+
     import bench
 
-    committed = bench._committed_bench_paths("/root/repo")
+    repo = os.path.dirname(os.path.abspath(bench.__file__))
+    committed = bench._committed_bench_paths(repo)
     if not committed:
         return
     parseable = [p for p in committed if bench._parse_bench_record(p)]
@@ -485,17 +440,16 @@ def test_latest_committed_bench_reads_driver_format():
         "bench regression gate DISARMED: no committed BENCH_r*.json "
         f"parses to a queries dict; all skipped as corrupt: {skipped}"
     )
-    prev_round, prev = bench._latest_committed_bench("/root/repo")
+    cpus = json.load(open(parseable[-1]))["cpus"]
+    prev_path, prev = bench._latest_committed_bench(repo, cpus)
     expect = bench._parse_bench_record(parseable[-1])
     assert prev == expect and prev, (
         "bench regression gate DISARMED: expected per-query times from "
         f"{parseable[-1]} (corrupt records skipped: {skipped}), got {prev!r}"
     )
-    assert prev_round == bench._bench_round(parseable[-1])
+    assert prev_path == parseable[-1]
     # streaming medians are part of the gated dict (round-10: the
     # streaming section moved 1.8x with no gate line)
-    import json
-
     rec = json.load(open(parseable[-1]))
     parsed = rec.get("parsed", rec)
     if isinstance(parsed, dict) and isinstance(parsed.get("streaming"), dict):
@@ -512,20 +466,88 @@ def test_bench_gate_rearms_past_corrupt_newest_record(tmp_path):
     import bench
 
     (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 1.0}}})
+        json.dumps({"cpus": 32, "parsed": {"queries": {"q": 1.0}}})
     )
     (tmp_path / "BENCH_r09.json").write_text(
-        json.dumps({"parsed": None, "tail": '{"truncated mid-json'})
+        json.dumps({"cpus": 32, "parsed": None, "tail": '{"truncated mid-json'})
     )
-    assert bench._latest_committed_bench(str(tmp_path)) == (8, {"q": 1.0})
+    r08 = (str(tmp_path / "BENCH_r08.json"), {"q": 1.0})
+    assert bench._latest_committed_bench(str(tmp_path), 32) == r08
     # malformed JSON (not just parsed-null) is skipped the same way
     (tmp_path / "BENCH_r10.json").write_text('{"not even json')
-    assert bench._latest_committed_bench(str(tmp_path)) == (8, {"q": 1.0})
+    assert bench._latest_committed_bench(str(tmp_path), 32) == r08
     # and a later parseable record wins again
     (tmp_path / "BENCH_r11.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 2.0}}})
+        json.dumps({"cpus": 32, "parsed": {"queries": {"q": 2.0}}})
     )
-    assert bench._latest_committed_bench(str(tmp_path)) == (11, {"q": 2.0})
+    assert bench._latest_committed_bench(str(tmp_path), 32) == (
+        str(tmp_path / "BENCH_r11.json"), {"q": 2.0}
+    )
+
+
+def test_bench_gate_compares_same_core_count_runs(tmp_path):
+    """Same-round records from different core counts (BENCH_r13.json at
+    32 cores beside BENCH_r13_c8.json at 8) are unlike runs: each run
+    is gated against the newest record at its own core count, and the
+    baseline load notes come from the samples file THAT record names,
+    never from another run's side file."""
+    import json
+
+    import bench
+
+    def record(name, cpus, t, samples_file):
+        (tmp_path / name).write_text(json.dumps({"cpus": cpus, "parsed": {
+            "queries": {"q": t}, "samples_file": samples_file,
+        }}))
+
+    def samples(name, cpus, loads):
+        (tmp_path / name).write_text(json.dumps({
+            "cpus": cpus, "samples": {"q": [1.0] * 3}, "loadavg_per_pass": loads,
+        }))
+
+    record("BENCH_r12.json", 32, 1.5, "BENCH_SAMPLES_r12.json")
+    record("BENCH_r13.json", 32, 1.0, "BENCH_SAMPLES_r13.json")
+    record("BENCH_r13_c8.json", 8, 2.0, "BENCH_SAMPLES_r14.json")
+    samples("BENCH_SAMPLES_r13.json", 32, [1.0] * 3)
+    samples("BENCH_SAMPLES_r14.json", 8, [9.0] * 3)  # loaded at 8 cores
+
+    path8, times8 = bench._latest_committed_bench(str(tmp_path), 8)
+    assert (os.path.basename(path8), times8) == ("BENCH_r13_c8.json", {"q": 2.0})
+    assert set(bench._baseline_load_notes(path8, 8)) == {"q"}
+    path32, times32 = bench._latest_committed_bench(str(tmp_path), 32)
+    assert (os.path.basename(path32), times32) == ("BENCH_r13.json", {"q": 1.0})
+    assert bench._baseline_load_notes(path32, 32) == {}
+    # no record at this core count: no baseline, nothing to compare
+    assert bench._latest_committed_bench(str(tmp_path), 4) == (None, {})
+    # a record naming another core count's side file gets no notes
+    record("BENCH_r13_c8.json", 8, 2.0, "BENCH_SAMPLES_r13.json")
+    assert bench._baseline_load_notes(path8, 8) == {}
+
+
+def test_bench_samples_never_overwrite_a_committed_file(tmp_path, capsys):
+    """A bench run names its side file BENCH_SAMPLES_r{N}_c{cpus}.json
+    and claims it exclusively: when that name already holds another
+    run's committed samples, the bytes stay unchanged and the new
+    samples go to the temp directory, named on stderr."""
+    import json
+
+    import bench
+
+    (tmp_path / "BENCH_r13.json").write_text("{}")
+    assert bench._write_samples(str(tmp_path), 8, {"run": 1}) == "BENCH_SAMPLES_r14_c8.json"
+    committed = (tmp_path / "BENCH_SAMPLES_r14_c8.json").read_bytes()
+    assert json.loads(committed) == {"run": 1}
+
+    assert bench._write_samples(str(tmp_path), 8, {"run": 2}) is None
+    assert (tmp_path / "BENCH_SAMPLES_r14_c8.json").read_bytes() == committed
+    fallback = capsys.readouterr().err.strip().rsplit(" ", 1)[-1]
+    try:
+        assert os.path.dirname(fallback) == tempfile.gettempdir()
+        assert json.load(open(fallback)) == {"run": 2}
+    finally:
+        os.remove(fallback)
+    # another core count in the same round gets its own file
+    assert bench._write_samples(str(tmp_path), 32, {"run": 3}) == "BENCH_SAMPLES_r14_c32.json"
 
 
 def test_bench_driver_line_fits_tail_window():
@@ -564,20 +586,21 @@ def test_bench_r09_reconstruction_matches_committed_tail():
 
     import bench
 
-    rec = json.load(open("/root/repo/BENCH_r09.json"))
+    repo = os.path.dirname(os.path.abspath(bench.__file__))
+    rec = json.load(open(os.path.join(repo, "BENCH_r09.json")))
     if rec.get("parsed") is not None:  # driver re-wrote the record
         return
     tail = rec["tail"]
     start = tail.index('"samples": {') + len('"samples": ')
     end = tail.rindex(', "sf"')
     samples = json.loads(tail[start:end])
-    recon = json.load(open("/root/repo/BENCH_r09_RECONSTRUCTED.json"))["parsed"]
+    recon = json.load(open(os.path.join(repo, "BENCH_r09_RECONSTRUCTED.json")))["parsed"]
     assert recon["samples"] == samples
     medians = {**recon["queries"], **recon["streaming"]}
     assert medians == {k: bench._lower_median(v) for k, v in samples.items()}
     assert recon["value"] == round(sum(recon["queries"].values()), 3)
-    newest_round, newest = bench._latest_committed_bench("/root/repo")
-    assert newest and newest_round is not None, "gate disarmed"
+    newest_path, newest = bench._latest_committed_bench(repo, rec["cpus"])
+    assert newest and newest_path is not None, "gate disarmed"
 
 
 def test_bench_uniform_sample_counts():
@@ -653,9 +676,11 @@ def test_bench_sort_key_survives_digitless_round_file(tmp_path):
 
     (tmp_path / "BENCH_rtest.json").write_text("{}")
     (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 1.0}}})
+        json.dumps({"cpus": 32, "parsed": {"queries": {"q": 1.0}}})
     )
-    assert bench._latest_committed_bench(str(tmp_path)) == (2, {"q": 1.0})
+    assert bench._latest_committed_bench(str(tmp_path), 32) == (
+        str(tmp_path / "BENCH_r02.json"), {"q": 1.0}
+    )
 
 
 def test_bench_samples_are_collected_in_interleaved_passes():
