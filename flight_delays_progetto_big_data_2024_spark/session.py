@@ -8,8 +8,17 @@ partitioning, no Arrow. This factory turns those on by default:
   re-optimize from real shuffle statistics — the single most important
   knob for the 100 TB target, where static partition counts are wrong;
 - Arrow for the pandas-UDF / toPandas edges;
-- a shuffle-partition default sized for the local harness but meant to be
-  overridden (on a real cluster AQE coalesces from a high initial count).
+- a shuffle width that equals the session's task slots
+  (``sparkContext.defaultParallelism``, the width
+  ``sources.readers.ensure_scan_width`` restores) unless the caller,
+  ``$SPARK_GRAFT_SHUFFLE_PARTITIONS`` or an ``extra_conf`` entry names
+  one — see :func:`shuffle_width`. Batch plans only start there (AQE
+  coalesces from it), but stateful streaming never coalesces: every
+  micro-batch opens, writes and commits one state store per shuffle
+  partition, so a width above the core count is pure per-batch
+  overhead (measured on a 4-core box: 32 state partitions cost the
+  two-drop stream benchmark ~2.5x its wall clock at 4). A checkpoint
+  records its state width at first start and keeps it on restart.
 """
 
 from __future__ import annotations
@@ -17,6 +26,24 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def shuffle_width(
+    task_slots: int,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> int:
+    """The session's ``spark.sql.shuffle.partitions``: an ``extra_conf``
+    entry wins, then the ``shuffle_partitions`` argument, then
+    ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``; otherwise the session's task
+    slots, so a ``local[32]`` session runs 32 and a 4-core one 4."""
+    if SHUFFLE_PARTITIONS in (extra_conf or {}):
+        return int(extra_conf[SHUFFLE_PARTITIONS])
+    if shuffle_partitions is not None:
+        return shuffle_partitions
+    return int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or task_slots)
 
 
 def get_spark(
@@ -28,12 +55,17 @@ def get_spark(
     """Build (or reuse) a SparkSession tuned for this engine.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver harness contract)
-    falling back to ``*``. All settings are conf-level so a cluster
-    deployment can override them via spark-submit.
+    falling back to ``*``. The shuffle width is sized for the local
+    harness by :func:`shuffle_width`: one partition per task slot
+    unless ``shuffle_partitions``, ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``
+    or ``extra_conf`` names one. Stateful streaming is why it follows
+    the slots: a streaming aggregation keeps one state store per
+    shuffle partition and AQE never coalesces it, so each micro-batch
+    pays for every store whether or not a core is free to run it.
+    All settings are conf-level so a cluster deployment can override
+    them via spark-submit.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -71,7 +103,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # dims here are tiny; on a cluster raise/lower per executor memory
         .config("spark.sql.autoBroadcastJoinThreshold", "32m")
@@ -85,7 +116,13 @@ def get_spark(
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # task slots are only known once the context runs (local[*])
+    width = shuffle_width(
+        spark.sparkContext.defaultParallelism, shuffle_partitions, extra_conf
+    )
+    spark.conf.set(SHUFFLE_PARTITIONS, str(width))
+    return spark
 
 
 def release_caches(spark: SparkSession) -> int:

@@ -695,10 +695,16 @@ def run_sf1_headline() -> int:
 
         _shutil.rmtree(sf1_dir, ignore_errors=True)
 
-    return _write_sf1_headline(results, corpus_digest)
+    box = {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
+    return _write_sf1_headline(results, corpus_digest, box)
 
 
-def _write_sf1_headline(results: dict[str, dict], corpus_digest: str) -> int:
+def _write_sf1_headline(
+    results: dict[str, dict], corpus_digest: str, box: dict[str, int]
+) -> int:
     repo = os.path.dirname(os.path.abspath(__file__))
     path = os.path.join(repo, "SCALING.json")
     with open(path) as fh:
@@ -706,6 +712,7 @@ def _write_sf1_headline(results: dict[str, dict], corpus_digest: str) -> int:
     record["sf1_headline"] = {
         "generator": SF1_TABLES_GENERATOR_VERSION,
         "corpus_digest": corpus_digest,
+        **box,
         "queries": results,
     }
     with open(path, "w") as fh:
@@ -714,13 +721,14 @@ def _write_sf1_headline(results: dict[str, dict], corpus_digest: str) -> int:
     over = [n for n, r in results.items() if not r["within_bound"]]
     md_lines = [
         "",
-        "## sf1 headline (round 10): ALL 21 headline queries on a REAL 10× decade",
+        "## sf1 headline: ALL 21 headline queries on a REAL 10× decade",
         "",
         "Corpus: the full sf1 table set — documents by the round-8",
         "empirical resampler, dimensions fixed, every fact/entity table",
         "as 10 key-shifted replicas with referential integrity",
         "(`scaling.py::build_sf1_tables`, deterministic, no RNG; digest",
         f"`{corpus_digest}`). Both scale points in one warmed session",
+        f"on local[{box['cpus']}] at {box['shuffle_partitions']} shuffle partitions,",
         "under the bench timing policy. Doc-pair queries run in the",
         "resample's documented degenerate-vocabulary regime (bounds",
         "annotated); their sub-quadratic claims are gated on the",

@@ -322,6 +322,70 @@ def test_streaming_restart_recovers_state_from_checkpoint(spark, tmp_path):
     assert finalized == [("2024-01-01 10:00:00", 2)]  # exactly once, full count
 
 
+def test_checkpoint_pins_its_state_width(spark, sf_dir, tmp_path):
+    """A stateful stream keeps the state width its checkpoint recorded at
+    first start: restarted under a different spark.sql.shuffle.partitions
+    it still runs N1 state partitions, and its rows still equal the
+    DuckDB hourly analog. This is what lets the session's default width
+    change without breaking existing checkpoints."""
+    import duckdb
+    import pandas as pd
+
+    from tests.oracle_utils import assert_pandas_parity
+
+    src, ckpt = tmp_path / "width-in", str(tmp_path / "width-ckpt")
+    src.mkdir()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT event_id, ts, user_id, value "
+        f"FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+    split = con.execute("SELECT quantile_disc(ts, 0.5) FROM events").fetchone()[0]
+    drops = {1: f"ts < TIMESTAMP '{split}'", 2: f"ts >= TIMESTAMP '{split}'"}
+
+    emitted = []
+    n1, n2 = 3, 5
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(drop, width):
+        con.execute(
+            f"COPY (SELECT * FROM events WHERE {drops[drop]}) "
+            f"TO '{src}/drop-{drop}.parquet' (FORMAT parquet)"
+        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        schema = spark.read.parquet(f"{src}/drop-1.parquet").schema
+        agg = stream_tumbling_counts(
+            read_event_stream(spark, str(src), schema), window="1 hour"
+        )
+        q = (
+            agg.writeStream.outputMode("update")
+            .foreachBatch(lambda df, _id: emitted.extend(df.collect()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "stream did not finish in 120s"
+        return {op.numShufflePartitions for p in q.recentProgress for op in p.stateOperators}
+
+    want = con.execute(
+        "SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start, "
+        "count(*) AS num_events, round(avg(value), 6) AS avg_value "
+        "FROM events GROUP BY date_trunc('hour', ts)"
+    ).fetchdf()
+    try:
+        assert run(1, n1) == {n1}
+        assert run(2, n2) == {n1}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        con.close()
+
+    got = pd.DataFrame([r.asDict() for r in emitted]).drop_duplicates(
+        "window_start", keep="last"
+    )
+    assert len(want) > 0
+    assert_pandas_parity(got, want)
+
+
 def test_extract_features_array_output_and_null_skip(spark):
     from flight_delays_progetto_big_data_2024_spark.operators.multimodal import (
         attach_binary_payload,

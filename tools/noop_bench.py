@@ -7,7 +7,9 @@ to ``format("noop")``, which materializes every column of every row
 executor-side and never moves results to the driver, so the number is
 the computation alone. Per-query medians over N interleaved passes,
 printed as JSON to stdout (not a committed artifact; numbers are quoted
-in OPTIMIZATION_r*.md).
+in OPTIMIZATION_r*.md). The line names its box: ``cpus`` is the
+session's task slots (``defaultParallelism``) and ``shuffle_partitions``
+the width the session resolved.
 
 Usage::
 
@@ -73,6 +75,10 @@ def main() -> int:
             {
                 "sink": "noop",
                 "sf_dir": sf_dir,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(
+                    spark.conf.get("spark.sql.shuffle.partitions")
+                ),
                 "total": round(sum(medians.values()), 3),
                 "medians": medians,
                 "samples": samples,
