@@ -13,7 +13,9 @@ Design stance (see SURVEY.md §7):
   the driver — global scalars are window aggregates, decode dicts are
   broadcast dimension joins, reshaping is Spark-side ``unpivot``;
 - logical plans are declared with the DataFrame API and optimization is
-  delegated to Catalyst/Tungsten + AQE; no hand-scheduling;
+  delegated to Catalyst/Tungsten + AQE; no hand-scheduling: building a
+  query launches no job, except iterative operators (graph loops),
+  which truncate the lineage their loop would otherwise grow;
 - Python stays out of the hot path: built-in ``pyspark.sql.functions``
   everywhere; Arrow-batched pandas UDFs only where semantics genuinely
   require them (multimodal decode stubs).

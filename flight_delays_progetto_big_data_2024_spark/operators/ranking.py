@@ -12,16 +12,18 @@ Scale shape (100 TB corpus, 1000 executors):
   term frequencies are a hash aggregate on that pair with map-side
   partial combine, so the shuffle carries one row per DISTINCT
   (doc, term), not one per token occurrence.
-- Document frequencies reuse the TF relation (no second scan of the
-  corpus text): ``groupBy(term).count()`` over an already-deduped
-  pair set.
+- Document frequencies ride on the TF relation as a window
+  (``count(1) OVER (PARTITION BY term)`` over the already-deduped pair
+  set), so every query reads its explode exactly once in one plan:
+  no second corpus tokenization, no lineage cut, no job at build time.
 - Corpus-wide scalars (N docs, average doc length) travel as a
   broadcast 1-row cross join — the same no-collect pattern as
   ``relational.popular_groups`` — so each query stays one lazy plan.
-- BM25 filters the TF relation to the query's terms BEFORE any join
-  (a handful of terms → the scored relation is tiny and every join
-  after the filter broadcasts); scoring a query never touches the
-  full posting list of non-query terms.
+- BM25 filters the TF relation to the query's terms BEFORE the df
+  window and every join (a handful of terms → the scored relation is
+  tiny and every join after the filter broadcasts), and carries each
+  document's length through the explode, so scoring a query never
+  touches the full posting list of non-query terms.
 - All arithmetic is built-in column expressions (JVM codegen); no
   Python in any hot path.
 
@@ -39,6 +41,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from flight_delays_progetto_big_data_2024_spark.functions.text import (
     token_count,
@@ -67,36 +70,24 @@ def term_frequencies(
     )
 
 
-def doc_frequencies(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """``(term, df)`` from a term-frequency relation — one row per term,
-    counting documents (the TF relation is already distinct on
-    (doc, term), so a plain count is a distinct-doc count).
-
-    count(*), NOT count(id_col): a document with a NULL id is still a
-    document — count(id_col) skipped its rows, giving df = 0 for any
-    term occurring only in null-id docs, and ln(N/df) then dies with
-    DIVIDE_BY_ZERO under ANSI mode (one dirty row kills the query)."""
-    return tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-
 def tfidf(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """``(id_col, term, tf, tfidf)`` with the classic weighting
     ``tf · ln(N / df)``: terms appearing in every document weigh 0,
     corpus-rare terms weigh high. N counts ALL input documents
-    (including token-less ones), as a broadcast 1-row aggregate."""
-    # the tf relation feeds BOTH the join and the df aggregate; without
-    # lineage truncation Catalyst plans the explode+shuffle subtree
-    # twice (the df branch prunes the count into a distinct, so
-    # ReuseExchange can't unify them) — two full corpus tokenizations
-    tf_rel = term_frequencies(df, id_col, text_col).localCheckpoint(
-        eager=False
-    )
-    df_rel = doc_frequencies(tf_rel, id_col)
+    (including token-less ones), as a broadcast 1-row aggregate.
+
+    ``df`` is a window count over the TF relation, which is already
+    distinct on (doc, term), so it counts documents with one explode
+    and one extra shuffle (by term). count(1), not count(id_col): a
+    document with a NULL id is still a document — skipping it gave
+    df = 0 for a term occurring only in null-id docs, and ln(N/df)
+    then dies with DIVIDE_BY_ZERO under ANSI mode."""
     n_docs = df.agg(F.count("*").alias("n_docs"))
     return (
-        tf_rel.join(df_rel, "term")
+        term_frequencies(df, id_col, text_col)
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
         .crossJoin(F.broadcast(n_docs))
         .select(
             id_col,
@@ -142,26 +133,21 @@ def pmi_pairs(
 
     Scale shape: the quadratic step is the per-document pair expansion
     (self-join of the distinct-token relation on the doc id). Its cost
-    is Σ_d k_d², NOT corpus², and the ``min_df`` prefilter lands on the
-    token relation BEFORE the self-join, so hapax/rare terms (the long
-    tail of any real vocabulary) never enter the expansion. Both join
-    inputs are the same checkpointed relation shuffled by doc id — one
-    exchange, reused for both sides. For web-scale corpora tighten
+    is Σ_d k_d², NOT corpus², and the ``min_df`` prefilter (a window
+    count by term over the same relation) lands BEFORE the self-join,
+    so hapax/rare terms (the long tail of any real vocabulary) never
+    enter the expansion. Both join inputs are the same filtered
+    relation shuffled by doc id — one exchange, reused for both sides,
+    so the corpus is exploded once. For web-scale corpora tighten
     ``min_df`` (or cap per-doc distinct terms upstream) to bound k_d.
     """
-    tok = (
-        df.select(
-            F.col(id_col).alias("_doc"),
-            F.explode(F.array_distinct(tokens(text_col))).alias("term"),
-        )
-        .localCheckpoint(eager=False)
+    tok = df.select(
+        F.col(id_col).alias("_doc"),
+        F.explode(F.array_distinct(tokens(text_col))).alias("term"),
     )
-    tc = (
-        tok.groupBy("term")
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= min_df)
-    )
-    tok_f = tok.join(tc, "term").localCheckpoint(eager=False)
+    tok_f = tok.withColumn(
+        "c", F.count(F.lit(1)).over(Window.partitionBy("term"))
+    ).filter(F.col("c") >= min_df)
     a = tok_f.select("_doc", F.col("term").alias("t1"), F.col("c").alias("c1"))
     b = tok_f.select("_doc", F.col("term").alias("t2"), F.col("c").alias("c2"))
     n_docs = df.agg(F.count("*").alias("n_docs"))
@@ -205,18 +191,23 @@ def bm25_search(
     mean. Bag semantics: a term appearing q times in the query
     contributes q·(its per-occurrence score), matching the textbook
     sum over query positions. Only documents containing at least one
-    query term are candidates. The term filter lands on the TF relation
-    before the df/dl joins, so the scored relation is O(matching docs),
-    not O(corpus); df still counts over the whole corpus (computed
-    before the filter would be wrong the other way — df per QUERY term
-    only needs the filtered relation, which is what we aggregate).
+    query term are candidates, and ``id_col`` is the document key.
+
+    Plan: one tokenization carries ``dl = size(tokens)`` through the
+    explode into the TF aggregate, and the term filter lands right
+    after the explode, so the scored relation is O(matching docs), not
+    O(corpus). df per QUERY term is a window count over that filtered
+    relation — still an exact corpus-wide df, since only query-term
+    rows can count toward a query term. N and avgdl come from a second,
+    shuffle-free pass over the documents (token-less docs are size 0
+    and still count), broadcast as one row. Documents with a NULL id
+    count toward df but are never scored.
     """
     qtf = Counter(str(t) for t in query_terms)
     terms = list(qtf)
-    # ensure_scan_width (round-12): the corpus is tokenized twice (tf
-    # pass + dl pass) and both tokenizations sit before their first
-    # exchange — single-task on a narrow scan (q60 1.43s -> 1.09s at
-    # sf0.1); no-op at scale
+    # ensure_scan_width (round-12): both tokenizations (tf pass + corpus
+    # scalars) sit before their first exchange — single-task on a
+    # narrow scan (q60 1.43s -> 1.09s at sf0.1); no-op at scale
     df = ensure_scan_width(df, id_col)
     # explicit schema: an EMPTY query must mean zero candidates (an
     # empty result), not a schema-inference crash on the empty local
@@ -226,23 +217,23 @@ def bm25_search(
             [(t, float(c)) for t, c in qtf.items()], "term string, qtf double"
         )
     )
-    # dl feeds both the scoring join and the corpus scalars; tf feeds
-    # both the join and the per-term df aggregate — checkpoint each so
-    # the corpus is tokenized exactly twice (tf pass + dl pass), not
-    # four times (see tfidf() for the diamond rationale). Token-less
-    # docs are size 0 in dl and still count toward N/avgdl.
-    dl = df.select(
-        id_col, token_count(text_col).cast("double").alias("dl")
-    ).localCheckpoint(eager=False)
-    stats = dl.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
+    stats = df.agg(
+        F.count("*").alias("n_docs"),
+        F.avg(token_count(text_col)).alias("avgdl"),
     )
     tf_rel = (
-        term_frequencies(df, id_col, text_col)
+        df.select(id_col, tokens(text_col).alias("_toks"))
+        .select(
+            id_col,
+            F.size("_toks").cast("double").alias("dl"),
+            F.explode("_toks").alias("term"),
+        )
         .filter(F.col("term").isin(terms))
-        .localCheckpoint(eager=False)
+        .groupBy(id_col, "term")
+        .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+        .filter(F.col(id_col).isNotNull())
     )
-    df_rel = doc_frequencies(tf_rel, id_col)
     idf = F.log(
         1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
@@ -250,9 +241,7 @@ def bm25_search(
         F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
     )
     return (
-        tf_rel.join(F.broadcast(df_rel), "term")
-        .join(qtf_rel, "term")
-        .join(dl, id_col)
+        tf_rel.join(qtf_rel, "term")
         .crossJoin(F.broadcast(stats))
         .groupBy(id_col)
         .agg(F.round(F.sum(F.col("qtf") * idf * tf_norm), 6).alias("bm25"))

@@ -2969,31 +2969,29 @@ def q124_unigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     ~90th percentile of this corpus's per-doc surprisal — in production
     it comes from exactly that quantile read.
 
-    Plan: ONE tokenization pass into (doc, term) counts; the unigram
-    model is a rollup of those counts (never a second corpus scan), the
-    corpus total a 1-row broadcast, and the scoring join runs over the
-    count table — both orders of magnitude smaller than the token
-    stream. Surprisal is the count-weighted sum, identical in value to
-    the per-token mean; rounding at 1e-6 before the source average
-    keeps both engines aggregating identical multisets. At 100 TB the
-    vocab table is Zipf-bounded (≪ corpus) and broadcasts."""
+    Plan: ONE explode into (doc, term) counts; the unigram model is a
+    window sum of those counts by term (never a second explode), the
+    corpus total a 1-row broadcast of a shuffle-free token-count pass,
+    and the scoring runs over the count table — both orders of
+    magnitude smaller than the token stream. Surprisal is the
+    count-weighted sum, identical in value to the per-token mean;
+    rounding at 1e-6 before the source average keeps both engines
+    aggregating identical multisets."""
+    from pyspark.sql.window import Window
+
     # ensure_scan_width (round-12): the tokenize+explode partial-agg
     # pass was single-task on the narrow scan (2.15s -> 1.33s at sf0.1)
     docs = ensure_scan_width(Catalog(spark, sf_dir).documents, "doc_id")
-    # the doc-term count relation feeds BOTH the vocab rollup and the
-    # scoring join; lineage truncation (the tfidf() pattern) stops
-    # Catalyst from planning the explode+groupBy subtree twice
     dtf = (
         docs.select("doc_id", "source", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.any_value("source").alias("source"), F.count(F.lit(1)).alias("c_dt"))
-        .localCheckpoint(eager=False)
+        .withColumn("c", F.sum("c_dt").over(Window.partitionBy("term")))
     )
-    tf = dtf.groupBy("term").agg(F.sum("c_dt").alias("c"))
-    total = tf.agg(F.sum("c").alias("total"))
+    # Σ c_dt over every (doc, term) = every token in the corpus
+    total = docs.agg(F.sum(token_count("text")).alias("total"))
     doc_s = (
-        dtf.join(tf, "term")
-        .crossJoin(F.broadcast(total))
+        dtf.crossJoin(F.broadcast(total))
         .groupBy("doc_id")
         .agg(
             F.any_value("source").alias("source"),
@@ -4998,8 +4996,9 @@ def q186_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (round-13 rewrite): the former single groupBy carried two
     grouped count(DISTINCT)s, which plan as an Expand that triples
     every row ahead of the shuffle, plus a survivor decorate-back join.
-    Rewritten as four independent branches over one checkpointed crawl
-    relation (canonicalize runs once): per-source row counts; distinct
+    Rewritten as four independent branches over one persisted crawl
+    relation (canonicalize runs once; the caller owns the cache, see
+    ``session.release_caches``): per-source row counts; distinct
     (source, url) pairs then a count; distinct (source, canonical_url)
     pairs then a count; and the kept count via a min-over-family window
     + filter (exactly the oracle's ``doc_id = keep_doc_id`` row
@@ -5039,7 +5038,7 @@ def q186_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.documents.select("doc_id", "source", url.alias("url"))
         .withColumn("canonical_url", canonicalize_url("url"))
         .filter(F.col("canonical_url").isNotNull())
-        .localCheckpoint(eager=False)
+        .persist()
     )
     raw = crawl.groupBy("source").agg(F.count("*").alias("raw_urls"))
     distinct_raw = (

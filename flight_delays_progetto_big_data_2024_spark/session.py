@@ -10,10 +10,10 @@ partitioning, no Arrow. This factory turns those on by default:
 - Arrow for the pandas-UDF / toPandas edges;
 - a shuffle width that equals the session's task slots
   (``sparkContext.defaultParallelism``, the width
-  ``sources.readers.ensure_scan_width`` restores) unless the caller,
-  ``$SPARK_GRAFT_SHUFFLE_PARTITIONS`` or an ``extra_conf`` entry names
-  one — see :func:`shuffle_width`. Batch plans only start there (AQE
-  coalesces from it), but stateful streaming never coalesces: every
+  ``sources.readers.ensure_scan_width`` restores) unless an
+  ``extra_conf`` entry or the deployment's SparkConf names one — see
+  :func:`shuffle_width`. Batch plans only start there (AQE coalesces
+  from it), but stateful streaming never coalesces: every
   micro-batch opens, writes and commits one state store per shuffle
   partition, so a width above the core count is pure per-batch
   overhead (measured on a 4-core box: 32 state partitions cost the
@@ -30,26 +30,17 @@ from pyspark.sql import SparkSession
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
-def shuffle_width(
-    task_slots: int,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> int:
-    """The session's ``spark.sql.shuffle.partitions``: an ``extra_conf``
-    entry wins, then the ``shuffle_partitions`` argument, then
-    ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``; otherwise the session's task
-    slots, so a ``local[32]`` session runs 32 and a 4-core one 4."""
-    if SHUFFLE_PARTITIONS in (extra_conf or {}):
-        return int(extra_conf[SHUFFLE_PARTITIONS])
-    if shuffle_partitions is not None:
-        return shuffle_partitions
-    return int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or task_slots)
+def shuffle_width(task_slots: int, conf: dict[str, str] | None = None) -> int:
+    """The session's ``spark.sql.shuffle.partitions``: the width ``conf``
+    (``extra_conf`` over the context's SparkConf) names, otherwise the
+    session's task slots, so a ``local[32]`` session runs 32 and a
+    4-core one 4."""
+    return int((conf or {}).get(SHUFFLE_PARTITIONS) or task_slots)
 
 
 def get_spark(
     app_name: str = "flight-delays-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
@@ -57,9 +48,9 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver harness contract)
     falling back to ``*``. The shuffle width is sized for the local
     harness by :func:`shuffle_width`: one partition per task slot
-    unless ``shuffle_partitions``, ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``
-    or ``extra_conf`` names one. Stateful streaming is why it follows
-    the slots: a streaming aggregation keeps one state store per
+    unless ``extra_conf`` or the SparkConf (spark-submit ``--conf``,
+    ``spark-defaults.conf``) names one. Stateful streaming is why it
+    follows the slots: a streaming aggregation keeps one state store per
     shuffle partition and AQE never coalesces it, so each micro-batch
     pays for every store whether or not a core is free to run it.
     All settings are conf-level so a cluster deployment can override
@@ -78,30 +69,12 @@ def get_spark(
         # silently swap sizeOfNull/cast/divide behavior underneath them.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE partition coalescing keeps parallelismFirst semantics but
-        # clamps the per-partition target at minPartitionSize (default
-        # 1m). In the CPU-bound/small-bytes regime — dedup signatures,
-        # shingle joins, regex scoring, anything where a partition's
-        # ROWS are expensive but its BYTES are few — that 1 MB floor
-        # coalesces the shuffle to one or two reducers and serializes
-        # every downstream stage (measured r12 at sf0.1: q32 -45%,
-        # q34 -40% from lifting it to "1b"). Round-13 re-measurement
-        # REVERSED that verdict: the r12 A/B predates the
-        # ensure_scan_width guards, which moved the expensive per-row
-        # work ahead of the first exchange — with the guards in place a
-        # JIT-warmed interleaved A/B over all 21 headline queries shows
-        # "1b" WORST on every one (totals: 1b 15.31s, 64k 11.82s,
-        # 256k 12.12s at sf0.1) because sub-64KB reducers are pure
-        # task-scheduling overhead. 64k keeps the CPU-bound wins (the
-        # guards, not the floor, now carry them), restores a sane
-        # tiny-task floor, and at scale binds even less often than the
-        # stock 1m (the floor is irrelevant whenever per-core shuffle
-        # bytes reach the 64 MB advisory — any real 100 TB shuffle).
-        # Env-overridable either direction.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # AQE's coalescing floor: the stock 1m serialized CPU-bound,
+        # small-byte shuffles onto one or two reducers, and 1b made
+        # sub-64KB reducers pure scheduling overhead (the slowest
+        # setting on every headline query, r13 A/B). 64k sits between;
+        # at scale it binds less often than the stock 1m.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # dims here are tiny; on a cluster raise/lower per executor memory
@@ -118,9 +91,9 @@ def get_spark(
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     # task slots are only known once the context runs (local[*])
-    width = shuffle_width(
-        spark.sparkContext.defaultParallelism, shuffle_partitions, extra_conf
-    )
+    sc = spark.sparkContext
+    conf = {SHUFFLE_PARTITIONS: sc.getConf().get(SHUFFLE_PARTITIONS)}
+    width = shuffle_width(sc.defaultParallelism, {**conf, **(extra_conf or {})})
     spark.conf.set(SHUFFLE_PARTITIONS, str(width))
     return spark
 
@@ -153,3 +126,15 @@ def release_caches(spark: SparkSession) -> int:
     for rdd in rdds:
         rdd.unpersist(False)
     return len(rdds)
+
+
+def last_sql_execution_id(spark: SparkSession) -> int:
+    """Id of the newest SQL execution (-1 before the first), read from
+    the SQL status store once the listener bus has drained. Ids count up
+    by one per execution, and retention evicts only the oldest, so the
+    difference of two readings is the number of executions started in
+    between — the check that a query build launched no hidden action."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    recent = store.executionsList(max(store.executionsCount() - 3, 0), 3)
+    return recent.last().executionId() if recent.size() else -1

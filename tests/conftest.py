@@ -22,7 +22,7 @@ def spark():
     session = get_spark(
         app_name="flight-delays-spark-tests",
         cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),
-        shuffle_partitions=8,
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield session
 

@@ -275,8 +275,8 @@ def test_ann_stack_survives_degenerate_vectors(spark):
 
 
 def test_tfidf_survives_null_doc_ids(spark):
-    """A NULL doc id is still a document: doc_frequencies must count its
-    rows (count(*)), else a term occurring only in null-id docs gets
+    """A NULL doc id is still a document: tfidf's df window must count
+    its rows (count(1)), else a term occurring only in null-id docs gets
     df=0 and ln(N/df) dies with DIVIDE_BY_ZERO under ANSI mode — one
     dirty row killing the whole corpus query."""
     from flight_delays_progetto_big_data_2024_spark.operators.ranking import (

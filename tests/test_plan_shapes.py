@@ -417,6 +417,56 @@ def test_headline_exchange_counts_pinned(spark):
     assert not over, f"exchange count grew (got, ceiling): {over}"
 
 
+#: Explodes each query's final plan runs: its corpus is tokenized into
+#: rows once, however many consumers read the shared term relation.
+LAZY_BUILD_EXPLODES = {
+    "q59_tfidf_top_terms": 1,
+    "q60_bm25_keyword_search": 1,
+    "q63_pmi_term_pairs": 1,
+    "q124_unigram_surprisal_filter": 1,
+    "q186_url_canonical_dedup": 0,
+}
+
+
+def _final_plan_node_names(spark, execution_id: int) -> list[str]:
+    """Operator names of one SQL execution's final AQE plan graph, as
+    the status store keeps it: query stages are unwrapped and a reused
+    exchange links to its first copy instead of repeating its subtree."""
+    nodes = spark._jsparkSession.sharedState().statusStore().planGraph(
+        execution_id
+    ).allNodes()
+    return [nodes.apply(i).name() for i in range(nodes.size())]
+
+
+def test_query_builders_stay_lazy(spark):
+    """Building a non-iterative query launches no Spark job: the builder
+    adds no SQL execution, one noop write adds exactly one, and that
+    execution's final plan explodes the corpus as often as
+    LAZY_BUILD_EXPLODES says — the shared term relation is read by one
+    plan, not recomputed per consumer and not cut by a checkpoint."""
+    from flight_delays_progetto_big_data_2024_spark.session import (
+        last_sql_execution_id,
+        release_caches,
+    )
+
+    # warm-up: the documents listing and footer reads
+    Catalog(spark, SF).documents.write.format("noop").mode("overwrite").save()
+    got = {}
+    try:
+        for name in LAZY_BUILD_EXPLODES:
+            before = last_sql_execution_id(spark)
+            df = registry.QUERIES[name](spark, SF)
+            built = last_sql_execution_id(spark)
+            df.write.format("noop").mode("overwrite").save()
+            written = last_sql_execution_id(spark)
+            explodes = _final_plan_node_names(spark, written).count("Generate")
+            got[name] = (built - before, written - built, explodes)
+    finally:
+        release_caches(spark)
+    want = {name: (0, 1, n) for name, n in LAZY_BUILD_EXPLODES.items()}
+    assert got == want, f"(build executions, write executions, explodes): {got}"
+
+
 def test_latest_committed_bench_reads_driver_format():
     """The driver wraps bench stdout under a 'parsed' key; the gate must
     read that shape (BENCH_r02.json regression: a bare .get('queries')

@@ -126,6 +126,22 @@ def test_bm25_duplicate_query_terms_bag_semantics(spark, docs):
         assert twice[doc_id] == pytest.approx(2 * once[doc_id], abs=2e-6)
 
 
+def test_bm25_null_id_doc_counts_toward_df_but_is_not_scored(spark):
+    """A NULL-id document is still part of the corpus (N, avgdl and the
+    df of its terms) but has no key to be returned under."""
+    corpus = CORPUS + [(None, "cherry fig")]
+    docs = spark.createDataFrame(corpus, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["bm25"]
+        for r in bm25_search(docs, ["cherry", "fig"]).collect()
+    }
+    want = _bm25_expected(corpus, ["cherry", "fig"])
+    del want[None]
+    assert set(got) == set(want) == {2, 3}
+    for doc_id, score in want.items():
+        assert got[doc_id] == pytest.approx(score, abs=1e-6)
+
+
 def test_pmi_golden_values(spark):
     from flight_delays_progetto_big_data_2024_spark.operators.ranking import (
         pmi_pairs,

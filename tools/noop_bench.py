@@ -9,7 +9,9 @@ the computation alone. Per-query medians over N interleaved passes,
 printed as JSON to stdout (not a committed artifact; numbers are quoted
 in OPTIMIZATION_r*.md). The line names its box: ``cpus`` is the
 session's task slots (``defaultParallelism``) and ``shuffle_partitions``
-the width the session resolved.
+the width the session resolved. ``sql_executions`` counts, per query,
+the SQL executions one build plus one write adds (the most any pass
+saw): 1 means the builder launched no hidden action.
 
 Usage::
 
@@ -37,6 +39,7 @@ def main() -> int:
     from flight_delays_progetto_big_data_2024_spark.plans import registry
     from flight_delays_progetto_big_data_2024_spark.session import (
         get_spark,
+        last_sql_execution_id,
         release_caches,
     )
     from flight_delays_progetto_big_data_2024_spark.sources.readers import (
@@ -59,13 +62,18 @@ def main() -> int:
     spark.range(2).mapInPandas(lambda it: it, "id long").collect()
 
     samples: dict[str, list[float]] = {n: [] for n in names}
+    executions: dict[str, int] = dict.fromkeys(names, 0)
     for _ in range(args.passes):
         for name in names:
             fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
             spark.sparkContext.setJobDescription(f"noop: {name}")
+            before = last_sql_execution_id(spark)
             start = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - start, 3))
+            executions[name] = max(
+                executions[name], last_sql_execution_id(spark) - before
+            )
             release_caches(spark)
             spark.sparkContext.setJobDescription(None)
 
@@ -82,6 +90,7 @@ def main() -> int:
                 "total": round(sum(medians.values()), 3),
                 "medians": medians,
                 "samples": samples,
+                "sql_executions": executions,
             }
         )
     )
