@@ -52,8 +52,8 @@ Policies (rounds 3-10):
   queries instead of most samples of ONE query, so the per-query
   median absorbs it — the r9 driver artifact claimed +23% on plans
   that had not changed because back-to-back reps of q41/q43/q44 all
-  sat inside one load window (the same-box interleaved A/B,
-  tools/ansi_ab.py, measured those queries at 0.67-0.91x of r1).
+  sat inside one load window (the same-box interleaved A/B recorded
+  in ANSI_AB_r9.json measured those queries at 0.67-0.91x of r1).
   Streaming runs are woven into the same passes.
 
 * **Artifact split (round-10).** The stdout line carries headline

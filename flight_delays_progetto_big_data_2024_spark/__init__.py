@@ -14,8 +14,12 @@ Design stance (see SURVEY.md §7):
   broadcast dimension joins, reshaping is Spark-side ``unpivot``;
 - logical plans are declared with the DataFrame API and optimization is
   delegated to Catalyst/Tungsten + AQE; no hand-scheduling: building a
-  query launches no job, except iterative operators (graph loops),
-  which truncate the lineage their loop would otherwise grow;
+  query launches no job, except
+  - the graph loops, which truncate the lineage their loop would
+    otherwise grow;
+  - pagerank's and triangle_count's bounded small-graph collect;
+  - ``pca_variance_profile``'s collect of its d² moment aggregate;
+  - the width guard's partition-count probe (``ensure_scan_width``);
 - Python stays out of the hot path: built-in ``pyspark.sql.functions``
   everywhere; Arrow-batched pandas UDFs only where semantics genuinely
   require them (multimodal decode stubs).

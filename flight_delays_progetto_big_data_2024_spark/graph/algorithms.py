@@ -15,18 +15,25 @@ golden graphs:
   each triangle once via a double self-join with ``u < v < w``, then
   credit all three corners.
 
-Scale posture: the per-iteration state of PageRank is one row per
-vertex; each iteration is one shuffle (groupBy dst) plus a broadcast-
-able join against the out-degree table. ``localCheckpoint`` truncates
-the 10-iteration lineage so plan size stays constant. Triangle
-enumeration shuffles on edge endpoints; worst-case cost is bounded by
-sum-of-squared-degrees — salting/AQE handles hub skew.
+Scale posture: pagerank and triangle_count first run one bounded
+collect of the projected edge relation (at most 32 ×
+``LOCAL_ITER_MAX_VERTICES`` edges + 1). A graph under that cap is
+dimension-sized — the reference's ~322-airport route graph, the
+25-nation graph here — and runs its loop on the driver. Above it the
+distributed loop runs: the per-iteration state of PageRank is one row
+per vertex; each iteration is one shuffle (groupBy dst) plus a join
+against the out-degree table that AQE broadcasts when it is small.
+``localCheckpoint`` truncates the 10-iteration lineage so plan size
+stays constant. Triangle enumeration shuffles on edge endpoints;
+worst-case cost is bounded by sum-of-squared-degrees — salting/AQE
+handles hub skew.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def _vertices_from_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -62,14 +69,53 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     )
 
 
-#: Vertex-count ceiling for the driver-local iteration fast-path: a
-#: graph the caller has already declared broadcast-sized (so its whole
-#: edge aggregate ships to every executor anyway) additionally runs its
-#: iteration loop on the driver when the vertex set is at most this
-#: size. Beyond it, the distributed loop runs even under
-#: ``broadcast_graph=True`` — the fast-path must never become the scale
-#: path by accident.
+#: Size ceiling for the driver-local path. A graph whose edge relation
+#: has at most 32 × this many rows (and, for pagerank, at most this
+#: many vertices) is dimension-sized: its loop runs on the driver, where
+#: 10 distributed supersteps would be pure stage-scheduling floor.
+#: Anything larger runs the distributed loop — the fast path must never
+#: become the scale path by accident. Read at call time, so the edge cap
+#: follows a patched value.
 LOCAL_ITER_MAX_VERTICES = 65_536
+
+
+def _small_graph_rows(projected: DataFrame) -> list | None:
+    """The size probe both operators share: ONE bounded collect of the
+    projected edge relation. Returns its rows when the graph is under
+    the edge cap, else None (the caller runs its distributed loop, which
+    re-evaluates the edge derivation — persisting before the probe was
+    measured slower on the small path)."""
+    max_edges = 32 * LOCAL_ITER_MAX_VERTICES
+    rows = projected.limit(max_edges + 1).collect()
+    return rows if len(rows) <= max_edges else None
+
+
+def _sorted_ids(vset: set) -> list:
+    # NULL endpoints are vertices too (matching the distributed
+    # _vertices_from_edges); sort the real ids for determinism, NULL
+    # can't be compared and goes last
+    vids = sorted(v for v in vset if v is not None)
+    if None in vset:
+        vids.append(None)
+    return vids
+
+
+def _local_relation(
+    spark, vids: list, values: list, id_type, name: str, value_type
+) -> DataFrame:
+    """A driver-computed (id, ``name``) result as a 1-partition relation.
+    pandas + Arrow, NOT a list of tuples: the tuple path parallelizes
+    through pickled Python RDD slices and its coalesce(1) costs seconds
+    per collect; the Arrow path is a JVM-side local table (~0.2s).
+    coalesce(1) keeps the dimension-sized result in one partition
+    instead of defaultParallelism slivers."""
+    import pandas as pd
+
+    schema = StructType(
+        [StructField("id", id_type), StructField(name, value_type)]
+    )
+    pdf = pd.DataFrame({"id": vids, name: values})
+    return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
 def _local_pagerank(
@@ -115,121 +161,74 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     vertices: DataFrame | None = None,
-    checkpoint: bool = True,
-    checkpoint_interval: int = 3,
-    num_partitions: int | None = None,
     weight_col: str | None = None,
-    broadcast_graph: bool = False,
 ) -> DataFrame:
     """Static PageRank with GraphX/GraphFrames semantics (reference
     graphframes_flights.py:44-46: resetProbability=0.15, maxIter=10).
 
     Returns (id, pagerank). ``vertices`` (an ``id`` column) defaults to
-    src ∪ dst. Distinct parallel edges are kept as distinct contribution
-    channels only if present in ``edges`` — pass a deduped edge set for
-    simple-graph semantics.
+    src ∪ dst — GraphFrames' ``GraphFrame(v, e)``: a vertex with no
+    in-edges holds the reset probability, and an edge whose src is not
+    a vertex contributes nothing. Distinct parallel edges are kept as
+    distinct contribution channels only if present in ``edges`` — pass
+    a deduped edge set for simple-graph semantics.
 
-    ``num_partitions`` pins the loop's exchanges to an explicit width.
-    Iterative jobs pay the per-task scheduling cost ``iterations``
-    times, so partition count should track GRAPH size, not the session
-    default: a 25-vertex graph wants 1-8 partitions, a billion-edge
-    graph wants thousands. Leave ``None`` to inherit the session
-    shuffle setting (AQE coalesces after stats, but the first exchange
-    of every stage still schedules the full width).
+    A graph under the size ceiling (``LOCAL_ITER_MAX_VERTICES``) runs
+    the recurrence on the driver after one bounded collect; a larger one
+    runs the distributed loop. Both give the same ranks.
     """
-    # Persist the edge list FIRST: vertices, out-degrees and the contrib
-    # base all derive from it, and the caller's edge derivation may be an
+    w = F.col(weight_col) if weight_col else F.lit(1.0)
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
+
+    erows = _small_graph_rows(e)
+    if erows is not None:
+        if vertices is not None:
+            vrows = (
+                vertices.select("id").limit(LOCAL_ITER_MAX_VERTICES + 1).collect()
+            )
+            vids = [r["id"] for r in vrows]
+            id_type = vertices.schema["id"].dataType
+        else:
+            vids = _sorted_ids({r["src"] for r in erows} | {r["dst"] for r in erows})
+            id_type = e.schema["src"].dataType
+        if len(vids) <= LOCAL_ITER_MAX_VERTICES:
+            # NULL weights match the distributed loop: F.sum skips them
+            # in out_deg, and a NULL contrib drops out of the
+            # contribution sum — so here a None-weight edge neither
+            # accumulates out-weight nor joins the quads. A vertex whose
+            # out-edges are ALL None-weight has no out_w entry →
+            # dangling, same as the distributed out_w-NULL filter.
+            out_w: dict = {}
+            for r in erows:
+                if r["w"] is None:
+                    continue
+                out_w[r["src"]] = out_w.get(r["src"], 0.0) + r["w"]
+            # zero out-weight == dangling (same rule as contrib_base
+            # below): those edges carry no contribution
+            quads = [
+                (r["src"], r["dst"], r["w"], out_w[r["src"]])
+                for r in erows
+                if r["w"] is not None and out_w.get(r["src"], 0.0) != 0
+            ]
+            ranks_map = _local_pagerank(quads, vids, reset_prob, max_iter)
+            return _local_relation(
+                edges.sparkSession,
+                vids,
+                [ranks_map[v] for v in vids],
+                id_type,
+                "pagerank",
+                DoubleType(),
+            )
+
+    # Persist the edge list: vertices, out-degrees and the contrib base
+    # all derive from it, and the caller's edge derivation may be an
     # arbitrarily expensive join pipeline — without persist it would
     # re-execute in every iteration (10× the scan + shuffle cost at
     # 100 TB).
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-
-    if broadcast_graph:
-        # Driver-local iteration fast-path. ``broadcast_graph=True`` is
-        # already the caller's declaration that the aggregated graph is
-        # dimension-sized (it ships whole to every executor); when the
-        # edge/vertex counts confirm it, the 10-superstep scheduling
-        # floor (the entire cost on a 25-vertex graph) collapses to a
-        # driver loop. ONE distributed job — a single limited collect of
-        # the aggregated edge relation, on its own wide lineage, before
-        # any ``num_partitions`` narrowing (the pin exists for the
-        # distributed loop's exchanges; funneling the fact-scale edge
-        # derivation through it would serialize the one pass that
-        # dominates the fast-path). Out-degrees and the vertex set are
-        # O(edges) driver arithmetic. Guards, not trust: an oversized
-        # graph falls through to the distributed loop below, which
-        # remains the default and the 100 TB path.
-        e0 = edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
-        )
-        max_edges = 32 * LOCAL_ITER_MAX_VERTICES
-        erows = e0.limit(max_edges + 1).collect()
-        if len(erows) <= max_edges:
-            if vertices is not None:
-                vrows = (
-                    vertices.select("id")
-                    .limit(LOCAL_ITER_MAX_VERTICES + 1)
-                    .collect()
-                )
-                vids = [r["id"] for r in vrows]
-                id_type = vertices.schema["id"].dataType
-            else:
-                vset = {r["src"] for r in erows} | {r["dst"] for r in erows}
-                # NULL endpoints are vertices too (matching the
-                # distributed _vertices_from_edges); sort the real ids
-                # for determinism, NULL can't be compared
-                vids = sorted(v for v in vset if v is not None)
-                if None in vset:
-                    vids.append(None)
-                id_type = e0.schema["src"].dataType
-            if len(vids) <= LOCAL_ITER_MAX_VERTICES:
-                # NULL weights match the distributed loop: F.sum skips
-                # them in out_deg, and a NULL contrib drops out of the
-                # contribution sum — so here a None-weight edge neither
-                # accumulates out-weight nor joins the quads. A vertex
-                # whose out-edges are ALL None-weight has no out_w entry
-                # → dangling, same as the distributed out_w-NULL filter.
-                out_w: dict = {}
-                for r in erows:
-                    if r["w"] is None:
-                        continue
-                    out_w[r["src"]] = out_w.get(r["src"], 0.0) + r["w"]
-                # zero out-weight == dangling (same rule as contrib_base
-                # below): those edges carry no contribution
-                quads = [
-                    (r["src"], r["dst"], r["w"], out_w[r["src"]])
-                    for r in erows
-                    if r["w"] is not None and out_w.get(r["src"], 0.0) != 0
-                ]
-                ranks_map = _local_pagerank(quads, vids, reset_prob, max_iter)
-                import pandas as pd
-
-                from pyspark.sql.types import DoubleType, StructField, StructType
-
-                schema = StructType(
-                    [
-                        StructField("id", id_type),
-                        StructField("pagerank", DoubleType()),
-                    ]
-                )
-                # pandas + Arrow, NOT a list of tuples: the tuple path
-                # parallelizes through pickled Python RDD slices and its
-                # coalesce(1) costs seconds per collect; the Arrow path
-                # is a JVM-side local table (~0.2s). coalesce(1) keeps
-                # the dimension-sized result in one partition instead of
-                # defaultParallelism slivers.
-                pdf = pd.DataFrame(
-                    {"id": vids, "pagerank": [ranks_map[v] for v in vids]}
-                )
-                return edges.sparkSession.createDataFrame(
-                    pdf, schema=schema
-                ).coalesce(1)
-
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
-    if num_partitions:
-        e = e.repartition(num_partitions, "src")
     e = e.persist()
-    verts = (vertices or _vertices_from_edges(e, "src", "dst")).select("id")
+    verts = (
+        vertices if vertices is not None else _vertices_from_edges(e, "src", "dst")
+    ).select("id")
 
     # No broadcast hints: out-degree and rank tables are O(|V|) — forcing
     # a broadcast is a scale bug at billions of vertices. AQE converts
@@ -248,41 +247,36 @@ def pagerank(
     verts = verts.persist()
     contrib_base = contrib_base.persist()
 
-    cb_join = F.broadcast(contrib_base) if broadcast_graph else contrib_base
-    verts_join = F.broadcast(verts) if broadcast_graph else verts
     ranks = verts.withColumn("rank", F.lit(1.0))
     for i in range(max_iter):
-        contribs = cb_join.join(
-            ranks, cb_join["src"] == ranks["id"]
-        ).select(
-            "dst", (F.col("rank") * F.col("w") / F.col("out_w")).alias("contrib")
+        contribs = (
+            contrib_base.join(ranks, contrib_base["src"] == ranks["id"])
+            .select(
+                "dst",
+                (F.col("rank") * F.col("w") / F.col("out_w")).alias("contrib"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("contrib").alias("mass"))
         )
-        if num_partitions:
-            # pre-partitioning on the agg key at the pinned width means
-            # the groupBy needs no further exchange
-            contribs = contribs.repartition(num_partitions, "dst")
-        contribs = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
-        ranks = verts_join.join(
-            contribs, verts_join["id"] == contribs["dst"], "left"
-        ).select(
+        ranks = verts.join(contribs, verts["id"] == contribs["dst"], "left").select(
             "id",
             (
                 F.lit(reset_prob)
                 + F.lit(1.0 - reset_prob) * F.coalesce(F.col("mass"), F.lit(0.0))
             ).alias("rank"),
         )
-        if checkpoint and (i + 1) % checkpoint_interval == 0:
+        if (i + 1) % 3 == 0:
             # truncate lineage so the plan doesn't grow unboundedly; every
             # few iterations balances plan depth vs checkpoint cost
             ranks = ranks.localCheckpoint(eager=False)
-    result = ranks.select("id", F.col("rank").alias("pagerank"))
-    if checkpoint:
-        # materialize the final ranks so the loop inputs can be released
-        # without ever recomputing the iteration chain
-        result = result.localCheckpoint(eager=True)
-        verts.unpersist()
-        contrib_base.unpersist()
-        e.unpersist()
+    # materialize the final ranks so the loop inputs can be released
+    # without ever recomputing the iteration chain
+    result = ranks.select("id", F.col("rank").alias("pagerank")).localCheckpoint(
+        eager=True
+    )
+    verts.unpersist()
+    contrib_base.unpersist()
+    e.unpersist()
     return result
 
 
@@ -427,7 +421,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_graph: bool = False,
 ) -> DataFrame:
     """Per-vertex triangle membership count, GraphFrames semantics
     (reference graphframes_flights.py:48-49): each triangle of the
@@ -436,82 +429,51 @@ def triangle_count(
     Enumeration: edges (u<v) joined (v,w) then closed by (u,w); the
     ``u < v < w`` ordering guarantees each triangle appears exactly once.
 
-    ``broadcast_graph``: opt-in for DIMENSION-sized graphs (same policy
-    as :func:`pagerank` — never forced in the library, a forced
-    broadcast is the scale bug at billions of edges). When set, the
-    undirected edge set is persisted (its derivation may be a fact-scale
-    aggregation that would otherwise run once per self-join) and the two
-    closing joins plus the corner decoration run as broadcast hash
-    joins — no shuffle beyond the edge derivation itself. The caller
-    owns the persisted edge set's lifetime (see session.release_caches).
+    A graph under the edge cap (same probe as :func:`pagerank`) runs the
+    canonicalization and the enumeration on the driver as O(Σ min(deg))
+    set intersections; a larger one runs the distributed self-joins.
     """
-    if broadcast_graph:
-        # Driver-local fast-path, same policy and guards as pagerank's:
-        # broadcast_graph is the caller's dimension-sized declaration;
-        # one limited collect of the (derived) edge relation, then the
-        # canonicalization + u<v<w enumeration are O(Σ min(deg)) driver
-        # set-intersections. An oversized graph falls through to the
-        # distributed enumeration below.
-        max_edges = 32 * LOCAL_ITER_MAX_VERTICES
-        rows = (
-            edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-            .limit(max_edges + 1)
-            .collect()
+    rows = _small_graph_rows(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    )
+    if rows is not None:
+        vert_set = {r["src"] for r in rows} | {r["dst"] for r in rows}
+        # NULL endpoints: least/greatest(NULL, x) = x in the distributed
+        # canonicalization, so the edge collapses to a dropped self-pair
+        # — but NULL stays a vertex (count 0)
+        und_set = set()
+        for r in rows:
+            a, b = r["src"], r["dst"]
+            if a is None or b is None or a == b:
+                continue
+            und_set.add((a, b) if a < b else (b, a))
+        adj: dict = {}
+        for a, b in und_set:
+            adj.setdefault(a, set()).add(b)  # greater endpoint only
+        counts = {v: 0 for v in vert_set}
+        empty: set = set()
+        for a, b in und_set:
+            for c in adj.get(a, empty) & adj.get(b, empty):
+                counts[a] += 1
+                counts[b] += 1
+                counts[c] += 1
+        vids = _sorted_ids(vert_set)
+        return _local_relation(
+            edges.sparkSession,
+            vids,
+            [counts[v] for v in vids],
+            edges.schema[src].dataType,
+            "triangle_count",
+            LongType(),
         )
-        if len(rows) <= max_edges:
-            vert_set = {r["s"] for r in rows} | {r["d"] for r in rows}
-            # NULL endpoints: least/greatest(NULL, x) = x in the
-            # distributed canonicalization, so the edge collapses to a
-            # dropped self-pair — but NULL stays a vertex (count 0)
-            und_set = set()
-            for r in rows:
-                a, b_ = r["s"], r["d"]
-                if a is None or b_ is None or a == b_:
-                    continue
-                und_set.add((a, b_) if a < b_ else (b_, a))
-            adj: dict = {}
-            for a, b_ in und_set:
-                adj.setdefault(a, set()).add(b_)  # greater endpoint only
-            counts = {v: 0 for v in vert_set}
-            empty: set = set()
-            for a, b_ in und_set:
-                for c in adj.get(a, empty) & adj.get(b_, empty):
-                    counts[a] += 1
-                    counts[b_] += 1
-                    counts[c] += 1
-            vids = sorted(v for v in vert_set if v is not None)
-            if None in vert_set:
-                vids.append(None)
-            import pandas as pd
-
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            schema = StructType(
-                [
-                    StructField("id", edges.schema[src].dataType),
-                    StructField("triangle_count", LongType()),
-                ]
-            )
-            pdf = pd.DataFrame(
-                {"id": vids, "triangle_count": [counts[v] for v in vids]}
-            )
-            return edges.sparkSession.createDataFrame(
-                pdf, schema=schema
-            ).coalesce(1)
 
     und = undirected_edges(edges, src, dst)
-    if broadcast_graph:
-        # oversized-graph fallback: still broadcast-join shaped; persist
-        # the derived edge set feeding the three self-join branches
-        # (caller-owned lifetime, see session.release_caches)
-        und = und.persist()
-    b = F.broadcast if broadcast_graph else (lambda df: df)
     e1 = und.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = und.select(F.col("u").alias("b2"), F.col("v").alias("c"))
     e3 = und.select(F.col("u").alias("a3"), F.col("v").alias("c3"))
     triangles = (
-        e1.join(b(e2), F.col("b") == F.col("b2"))
-        .join(b(e3), (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
+        e1.join(e2, F.col("b") == F.col("b2"))
+        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
         .select("a", "b", "c")
     )
     corner_counts = (
@@ -520,9 +482,7 @@ def triangle_count(
         .agg(F.count("*").alias("triangle_count"))
     )
     verts = _vertices_from_edges(edges, src, dst)
-    return (
-        verts.join(b(corner_counts), "id", "left").na.fill(0, ["triangle_count"])
-    )
+    return verts.join(corner_counts, "id", "left").na.fill(0, ["triangle_count"])
 
 
 def shortest_hops(

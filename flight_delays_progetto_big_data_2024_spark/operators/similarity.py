@@ -139,15 +139,14 @@ def lsh_topk(
     vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 8,
-    multiprobe: bool = True,
     seed: int = 42,
     scale: int = 6,
 ) -> DataFrame:
     """Approximate top-k: candidates from hyperplane-bucket equality
-    (plus all 1-bit-flip probes when ``multiprobe``), re-ranked by exact
-    cosine. Returns the same schema as :func:`cosine_topk`; per-query
-    result may have < k rows when buckets are sparse — at real scale
-    buckets hold thousands of vectors and this is the scan-saving path."""
+    plus all 1-bit-flip probes, re-ranked by exact cosine. Returns the
+    same schema as :func:`cosine_topk`; per-query result may have < k
+    rows when buckets are sparse — at real scale buckets hold thousands
+    of vectors and this is the scan-saving path."""
     planes = _hyperplanes(dim, n_planes, seed)
 
     def guarded_bucket(vec_col):
@@ -180,17 +179,14 @@ def lsh_topk(
             guarded_bucket(F.col("v")).alias("qbucket"),
         )
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("qbucket"),
-            *[
-                F.col("qbucket").bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
-                for i in range(n_planes)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    else:
-        q = q.withColumn("bucket", F.col("qbucket"))
+    probes = F.array(
+        F.col("qbucket"),
+        *[
+            F.col("qbucket").bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
+            for i in range(n_planes)
+        ],
+    )
+    q = q.withColumn("bucket", F.explode(probes))
     scored = (
         c.join(F.broadcast(q.drop("qbucket")), on="bucket")
         .filter(F.col("id") != F.col("query_id"))

@@ -66,23 +66,11 @@ def _pagerank_unrolled_sql(iters: int = MAX_ITER, reset: float = RESET_PROB) -> 
 def q20_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (reset=0.15, 10 iters — reference
     graphframes_flights.py:44,131); GraphX/GraphFrames static semantics.
-    broadcast_graph=True routes the 25-vertex graph through the
-    driver-local iteration fast-path (one distributed job for the
-    fact-scale edge derivation, microsecond loop — the 10 distributed
-    supersteps were pure stage-scheduling floor at this size)."""
+    The 25-vertex graph is under pagerank's size ceiling, so the loop
+    runs on the driver after one bounded collect of the fact-scale edge
+    derivation."""
     cat = Catalog(spark, sf_dir)
-    # num_partitions/checkpoint_interval only matter on the distributed
-    # FALLBACK (oversized graph): pin loop exchanges to ONE partition
-    # (iterative jobs pay scheduling cost per iteration; width should
-    # track graph size) and checkpoint at the measured sweet spot
-    ranks = pagerank(
-        _nation_edges(cat),
-        RESET_PROB,
-        MAX_ITER,
-        broadcast_graph=True,  # 25-nation graph = a broadcast dimension
-        num_partitions=1,
-        checkpoint_interval=5,
-    )
+    ranks = pagerank(_nation_edges(cat), RESET_PROB, MAX_ITER)
     return (
         ranks.select(
             F.col("id").alias("nation"), F.round("pagerank", 6).alias("pagerank")
@@ -121,15 +109,11 @@ def q20_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q21_nation_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex triangle counts on the canonicalized undirected graph
     (reference graphframes_flights.py:48-49; GraphFrames semantics).
-    25-nation graph = a broadcast dimension: same opt-in as q20. The
-    fact-scale edge derivation runs distributed ONCE (a single limited
-    collect); the u<v<w enumeration itself runs on the driver
-    (graph/algorithms.py triangle_count fast-path — guards fall through
-    to the distributed broadcast-join enumeration for oversized graphs,
-    which then persists the derived edge set with caller-owned lifetime,
-    see ``session.release_caches``)."""
+    Same size rule as q20: the fact-scale edge derivation runs
+    distributed once (a single bounded collect); the u<v<w enumeration
+    runs on the driver."""
     cat = Catalog(spark, sf_dir)
-    counts = triangle_count(_nation_edges(cat), broadcast_graph=True)
+    counts = triangle_count(_nation_edges(cat))
     return counts.select(F.col("id").alias("nation"), "triangle_count").orderBy(
         "nation"
     )
@@ -293,15 +277,7 @@ def q105_weighted_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .agg(F.sum("l_quantity").alias("w"))
     )
-    ranks = pagerank(
-        edges,
-        RESET_PROB,
-        MAX_ITER,
-        num_partitions=1,
-        checkpoint_interval=5,
-        weight_col="w",
-        broadcast_graph=True,  # same dimension-sized graph as q20
-    )
+    ranks = pagerank(edges, RESET_PROB, MAX_ITER, weight_col="w")
     return (
         ranks.select(
             F.col("id").alias("nation"), F.round("pagerank", 6).alias("pagerank")

@@ -321,16 +321,20 @@ def test_weighted_pagerank_zero_out_weight_is_dangling(spark):
         pagerank,
     )
 
+    from tests.graph_paths import PATHS, graph_path
+
     edges = spark.createDataFrame(
         [(1, 2, 0.0), (1, 3, 0.0), (2, 3, 1.0), (3, 1, 2.0)],
         "src long, dst long, w double",
     )
-    ranks = {r["id"]: r["pagerank"] for r in
-             pagerank(edges, weight_col="w", max_iter=3).collect()}
-    assert set(ranks) == {1, 2, 3}
-    # vertex 2 receives only from the dangling vertex -> pure reset mass
-    assert abs(ranks[2] - 0.15) < 1e-9
-    assert all(v > 0 for v in ranks.values())
+    for path in PATHS:
+        with graph_path(path):
+            ranks = {r["id"]: r["pagerank"] for r in
+                     pagerank(edges, weight_col="w", max_iter=3).collect()}
+        assert set(ranks) == {1, 2, 3}, path
+        # vertex 2 receives only from the dangling vertex -> pure reset mass
+        assert abs(ranks[2] - 0.15) < 1e-9, path
+        assert all(v > 0 for v in ranks.values()), path
 
 
 def test_cohesion_zero_centroid_yields_null_not_abort(spark):
@@ -527,8 +531,8 @@ def test_scd2_drops_undated_changes(spark):
 
 
 def test_graph_fastpath_survives_null_endpoints(spark):
-    """NULL edge endpoints through the broadcast_graph driver-local
-    paths must match the distributed semantics: NULL is a vertex, but
+    """NULL edge endpoints through the driver-local paths must match
+    the distributed semantics: NULL is a vertex, but
     NULL src never contributes rank mass and NULL dst mass is never
     credited (null-unsafe joins), and the NULL-endpoint edge collapses
     out of the triangle canonicalization while NULL stays a 0-count
@@ -537,23 +541,24 @@ def test_graph_fastpath_survives_null_endpoints(spark):
         pagerank,
         triangle_count,
     )
+    from tests.graph_paths import graph_path
 
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "A"), (None, "A"), ("B", None)],
         "src string, dst string",
     )
-    local = {r["id"]: r["pagerank"]
-             for r in pagerank(edges, broadcast_graph=True).collect()}
-    dist = {r["id"]: r["pagerank"] for r in pagerank(edges).collect()}
+    with graph_path("local"):
+        local = {r["id"]: r["pagerank"] for r in pagerank(edges).collect()}
+        tri_local = {r["id"]: r["triangle_count"]
+                     for r in triangle_count(edges).collect()}
+    with graph_path("distributed"):
+        dist = {r["id"]: r["pagerank"] for r in pagerank(edges).collect()}
+        tri_dist = {r["id"]: r["triangle_count"]
+                    for r in triangle_count(edges).collect()}
     assert set(local) == set(dist) == {"A", "B", "C", None}
     for v in dist:
         assert abs(local[v] - dist[v]) < 1e-9, v
     assert local[None] == 0.15  # reset probability only
-
-    tri_local = {r["id"]: r["triangle_count"]
-                 for r in triangle_count(edges, broadcast_graph=True).collect()}
-    tri_dist = {r["id"]: r["triangle_count"]
-                for r in triangle_count(edges).collect()}
     assert tri_local == tri_dist == {"A": 1, "B": 1, "C": 1, None: 0}
 
 
@@ -589,15 +594,16 @@ def test_asof_join_null_ts_right_rows_never_forward_fill(spark):
 
 
 def test_graph_fastpath_survives_null_weights(spark):
-    """NULL edge weights through the broadcast_graph driver-local
-    pagerank must match the distributed loop: F.sum skips NULLs in the
-    out-degree and a NULL contribution drops out of the mass sum, so a
-    None-weight edge carries nothing — and a vertex whose out-edges are
-    ALL None-weight is dangling. Before the fix the fast-path raised
-    TypeError (None + float) instead of degrading gracefully."""
+    """NULL edge weights through the driver-local pagerank must match
+    the distributed loop: F.sum skips NULLs in the out-degree and a
+    NULL contribution drops out of the mass sum, so a None-weight edge
+    carries nothing — and a vertex whose out-edges are ALL None-weight
+    is dangling. Before the fix the fast-path raised TypeError
+    (None + float) instead of degrading gracefully."""
     from flight_delays_progetto_big_data_2024_spark.graph.algorithms import (
         pagerank,
     )
+    from tests.graph_paths import graph_path
 
     edges = spark.createDataFrame(
         [
@@ -609,11 +615,12 @@ def test_graph_fastpath_survives_null_weights(spark):
         ],
         "src string, dst string, w double",
     )
-    local = {r["id"]: r["pagerank"]
-             for r in pagerank(edges, weight_col="w",
-                               broadcast_graph=True).collect()}
-    dist = {r["id"]: r["pagerank"]
-            for r in pagerank(edges, weight_col="w").collect()}
+    with graph_path("local"):
+        local = {r["id"]: r["pagerank"]
+                 for r in pagerank(edges, weight_col="w").collect()}
+    with graph_path("distributed"):
+        dist = {r["id"]: r["pagerank"]
+                for r in pagerank(edges, weight_col="w").collect()}
     assert set(local) == set(dist) == {"A", "B", "C", "D"}
     for v in dist:
         assert abs(local[v] - dist[v]) < 1e-9, v

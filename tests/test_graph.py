@@ -14,6 +14,7 @@ from flight_delays_progetto_big_data_2024_spark.graph.algorithms import (
     triangle_count,
     undirected_edges,
 )
+from tests.graph_paths import PATHS, graph_path, is_local_relation
 
 # directed multigraph: A→B duplicated, D self-loop, F dangling
 EDGES = [
@@ -62,70 +63,102 @@ def test_degrees_count_parallel_edges(edge_df):
     assert got["F"] == (1, 0)  # dangling: no out-edges
 
 
+def _ranks(path, edges, **kw):
+    """pagerank on ``path`` as {id: rank}, after checking the path
+    really ran."""
+    with graph_path(path):
+        ranks = pagerank(edges, **kw)
+        assert is_local_relation(ranks) == (path == "local"), path
+        return {r["id"]: r["pagerank"] for r in ranks.collect()}
+
+
 def test_pagerank_matches_independent_evaluator(edge_df):
     distinct = edge_df.distinct()
-    got = {r["id"]: r["pagerank"] for r in pagerank(distinct).collect()}
     want = py_pagerank(EDGES)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == pytest.approx(want[v], abs=1e-9), v
+    for path in PATHS:
+        got = _ranks(path, distinct)
+        assert set(got) == set(want), path
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-9), (path, v)
 
 
 def test_pagerank_parallel_edges_are_contribution_channels(edge_df):
     # the fixture's duplicate A->B edge fed AS-IS: out-degree counts it
     # and B receives A's mass twice over (documented multigraph rule)
-    got = {r["id"]: r["pagerank"] for r in pagerank(edge_df).collect()}
     want = py_pagerank(EDGES, dedup=False)
-    for v in want:
-        assert got[v] == pytest.approx(want[v], abs=1e-9), v
+    for path in PATHS:
+        got = _ranks(path, edge_df)
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-9), (path, v)
     assert want["B"] > py_pagerank(EDGES)["B"]  # the duplicate matters
 
 
 def test_pagerank_local_fastpath_matches_distributed(edge_df):
-    """broadcast_graph=True routes a dimension-sized graph through the
-    driver-local iteration loop; its ranks must agree with both the
-    distributed loop and the independent evaluator. Also pins that the
-    fast-path really engaged (a 1-partition local relation, not the
-    10-superstep plan) and that the weighted recurrence survives the
-    local path."""
+    """The driver-local loop and the distributed loop agree with each
+    other and with the independent evaluator, unweighted and weighted
+    (both paths split rank by weight share identically)."""
     distinct = edge_df.distinct()
-    local = pagerank(distinct, broadcast_graph=True)
-    assert local.rdd.getNumPartitions() == 1
-    got = {r["id"]: r["pagerank"] for r in local.collect()}
-    dist = {r["id"]: r["pagerank"] for r in pagerank(distinct).collect()}
+    got = _ranks("local", distinct)
+    dist = _ranks("distributed", distinct)
     want = py_pagerank(EDGES)
     assert set(got) == set(dist) == set(want)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-9), v
         assert got[v] == pytest.approx(dist[v], abs=1e-9), v
-    # weighted graph: both paths split rank by weight share identically
     spark = edge_df.sparkSession
     wdf = spark.createDataFrame(
         [("A", "B", 3.0), ("A", "C", 1.0), ("B", "C", 2.0), ("C", "A", 1.0)],
         ["src", "dst", "w"],
     )
-    wl = {r["id"]: r["pagerank"]
-          for r in pagerank(wdf, weight_col="w", broadcast_graph=True).collect()}
-    wd = {r["id"]: r["pagerank"]
-          for r in pagerank(wdf, weight_col="w").collect()}
+    wl = _ranks("local", wdf, weight_col="w")
+    wd = _ranks("distributed", wdf, weight_col="w")
     assert set(wl) == set(wd)
     for v in wd:
         assert wl[v] == pytest.approx(wd[v], abs=1e-9), v
 
 
+def test_small_graph_takes_local_path_without_flag(edge_df):
+    """No caller flag: the golden graph is under the size ceiling, so
+    both operators return the 1-partition local relation the driver
+    computed, not the distributed plan."""
+    for result in (pagerank(edge_df.distinct()), triangle_count(edge_df)):
+        assert result.rdd.getNumPartitions() == 1
+        assert is_local_relation(result), result.columns
+
+
 def test_pagerank_local_fastpath_guard_falls_back(edge_df, monkeypatch):
-    """A graph over the vertex ceiling must run the distributed loop
-    even under broadcast_graph=True — the fast-path may never become
-    the scale path. Simulated by shrinking the ceiling below the golden
-    graph's vertex count."""
+    """A graph over the vertex ceiling (but under the edge cap) must run
+    the distributed loop — the fast-path may never become the scale
+    path. Simulated by shrinking the ceiling below the golden graph's
+    vertex count."""
     from flight_delays_progetto_big_data_2024_spark.graph import algorithms
 
     monkeypatch.setattr(algorithms, "LOCAL_ITER_MAX_VERTICES", 2)
-    got = {r["id"]: r["pagerank"]
-           for r in algorithms.pagerank(edge_df.distinct(), broadcast_graph=True).collect()}
+    ranks = algorithms.pagerank(edge_df.distinct())
+    assert not is_local_relation(ranks)
+    got = {r["id"]: r["pagerank"] for r in ranks.collect()}
     want = py_pagerank(EDGES)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-9), v
+
+
+def test_pagerank_vertices_argument(spark):
+    """``vertices`` is GraphFrames' GraphFrame(v, e): the isolated
+    vertex Z holds the reset probability, and X→C contributes nothing
+    because X is not a vertex (nor does X appear in the output). Ranks
+    hand-computed for 2 iterations, out-degree A=2, B=1:
+    it1 A=0.15+0.85·1=1.0, B=C=0.15+0.85·0.5=0.575;
+    it2 A=0.15+0.85·0.575=0.63875, B=C=0.15+0.85·(1.0/2)=0.575."""
+    edges = spark.createDataFrame(
+        [("A", "B"), ("A", "C"), ("B", "A"), ("X", "C")], "src string, dst string"
+    )
+    verts = spark.createDataFrame([("A",), ("B",), ("C",), ("Z",)], "id string")
+    want = {"A": 0.63875, "B": 0.575, "C": 0.575, "Z": 0.15}
+    for path in PATHS:
+        got = _ranks(path, edges, vertices=verts, max_iter=2)
+        assert set(got) == set(want), path
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-12), (path, v)
 
 
 def test_undirected_canonicalization(edge_df):
@@ -135,16 +168,20 @@ def test_undirected_canonicalization(edge_df):
 
 
 def test_triangle_count_golden(edge_df):
-    got = {r["id"]: r["triangle_count"] for r in triangle_count(edge_df).collect()}
-    # triangles: {A,B,C} and {B,D,E}
-    assert got == {"A": 1, "B": 2, "C": 1, "D": 1, "E": 1, "F": 0}
+    for path in PATHS:
+        with graph_path(path):
+            counts = triangle_count(edge_df)
+            assert is_local_relation(counts) == (path == "local"), path
+            got = {r["id"]: r["triangle_count"] for r in counts.collect()}
+        # triangles: {A,B,C} and {B,D,E}
+        assert got == {"A": 1, "B": 2, "C": 1, "D": 1, "E": 1, "F": 0}, path
 
 
 def test_pagerank_no_edges_vertex_gets_reset_only(spark):
     # a vertex that is never a destination converges to the reset prob
     df = spark.createDataFrame([("X", "Y")], ["src", "dst"])
-    got = {r["id"]: r["pagerank"] for r in pagerank(df).collect()}
-    assert got["X"] == pytest.approx(0.15, abs=1e-12)
+    for path in PATHS:
+        assert _ranks(path, df)["X"] == pytest.approx(0.15, abs=1e-12), path
 
 
 def test_connected_components_golden(spark):

@@ -140,9 +140,10 @@ def test_sampled_histogram_pushes_sample_filter_to_scan(spark):
 
 
 def test_pagerank_loop_width_is_pinned(spark):
-    """q20 pins the iterative exchanges narrow (25-vertex graph);
-    inheriting the session's 8-32 shuffle partitions multiplies
-    empty-task scheduling cost by iterations."""
+    """q20's 25-vertex graph stays narrow: it is under pagerank's size
+    ceiling, so the ranks come back as a driver-computed 1-partition
+    relation instead of a loop that pays the session's 8-32 shuffle
+    partitions per iteration."""
     df = registry.QUERIES["q20_nation_pagerank"](spark, SF)
     assert df.rdd.getNumPartitions() <= 8
 
@@ -465,6 +466,31 @@ def test_query_builders_stay_lazy(spark):
         release_caches(spark)
     want = {name: (0, 1, n) for name, n in LAZY_BUILD_EXPLODES.items()}
     assert got == want, f"(build executions, write executions, explodes): {got}"
+
+
+def test_small_graph_builds_run_one_probe(spark):
+    """The nation-graph queries pay exactly one build-time SQL
+    execution: pagerank's / triangle_count's bounded collect of the edge
+    relation, after which the 25-vertex loop runs on the driver."""
+    from flight_delays_progetto_big_data_2024_spark.session import (
+        last_sql_execution_id,
+        release_caches,
+    )
+
+    names = (
+        "q20_nation_pagerank",
+        "q21_nation_triangle_count",
+        "q105_weighted_nation_pagerank",
+    )
+    got = {}
+    try:
+        for name in names:
+            before = last_sql_execution_id(spark)
+            registry.QUERIES[name](spark, SF)
+            got[name] = last_sql_execution_id(spark) - before
+    finally:
+        release_caches(spark)
+    assert got == dict.fromkeys(names, 1), got
 
 
 def test_latest_committed_bench_reads_driver_format():

@@ -16,6 +16,7 @@ from flight_delays_progetto_big_data_2024_spark.operators.temporal import (
     asof_join,
     session_windows,
 )
+from tests.graph_paths import PATHS, graph_path
 
 _SETTINGS = dict(
     max_examples=8,
@@ -171,7 +172,6 @@ def test_triangle_count_matches_bruteforce(spark, edges):
 
     rows = edges or [(0, 1)]
     df = spark.createDataFrame(rows, "src long, dst long")
-    got = {r["id"]: r["triangle_count"] for r in triangle_count(df).collect()}
 
     und = {tuple(sorted(e)) for e in rows if e[0] != e[1]}
     verts = {v for e in rows for v in e}
@@ -180,7 +180,10 @@ def test_triangle_count_matches_bruteforce(spark, edges):
         if {(a, b), (b, c), (a, c)} <= und:
             for v in (a, b, c):
                 expected[v] += 1
-    assert got == expected
+    for path in PATHS:
+        with graph_path(path):
+            got = {r["id"]: r["triangle_count"] for r in triangle_count(df).collect()}
+        assert got == expected, path
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -417,22 +420,18 @@ def test_cheapest_paths_matches_bellman_ford_reference(spark, edges):
 )
 @settings(**_SETTINGS)
 def test_pagerank_local_fastpath_matches_distributed_property(spark, edges):
-    """broadcast_graph=True (driver-local loop) and the distributed loop
-    must agree on arbitrary small multigraph-free graphs — the golden
-    test pins two fixed graphs, this pins the recurrence itself."""
+    """The driver-local loop and the distributed loop must agree on
+    arbitrary small multigraph-free graphs — the golden test pins two
+    fixed graphs, this pins the recurrence itself."""
     from flight_delays_progetto_big_data_2024_spark.graph.algorithms import (
         pagerank,
     )
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    local = {
-        r["id"]: r["pagerank"]
-        for r in pagerank(df, max_iter=3, broadcast_graph=True).collect()
-    }
-    dist = {
-        r["id"]: r["pagerank"]
-        for r in pagerank(df, max_iter=3).collect()
-    }
+    with graph_path("local"):
+        local = {r["id"]: r["pagerank"] for r in pagerank(df, max_iter=3).collect()}
+    with graph_path("distributed"):
+        dist = {r["id"]: r["pagerank"] for r in pagerank(df, max_iter=3).collect()}
     assert set(local) == set(dist)
     for v in dist:
         assert abs(local[v] - dist[v]) < 1e-9, v
@@ -448,9 +447,9 @@ def test_pagerank_local_fastpath_matches_distributed_property(spark, edges):
 )
 @settings(**_SETTINGS)
 def test_triangle_local_fastpath_matches_bruteforce(spark, edges):
-    """The broadcast_graph=True driver-local enumeration agrees with the
-    itertools bruteforce on arbitrary graphs (duplicate/reverse edges,
-    self-loops), exactly like the distributed path's property test."""
+    """The driver-local enumeration agrees with the itertools bruteforce
+    on arbitrary graphs (duplicate/reverse edges, self-loops), like
+    test_triangle_count_matches_bruteforce on both paths."""
     from itertools import combinations
 
     from flight_delays_progetto_big_data_2024_spark.graph.algorithms import (
@@ -459,10 +458,6 @@ def test_triangle_local_fastpath_matches_bruteforce(spark, edges):
 
     rows = [(a, b) for a, b, _ in edges] or [(0, 1)]
     df = spark.createDataFrame(rows, "src long, dst long")
-    got = {
-        r["id"]: r["triangle_count"]
-        for r in triangle_count(df, broadcast_graph=True).collect()
-    }
     und = {tuple(sorted(e)) for e in rows if e[0] != e[1]}
     verts = {v for e in rows for v in e}
     expected = dict.fromkeys(verts, 0)
@@ -470,6 +465,8 @@ def test_triangle_local_fastpath_matches_bruteforce(spark, edges):
         if {(a, b), (b, c), (a, c)} <= und:
             for v in (a, b, c):
                 expected[v] += 1
+    with graph_path("local"):
+        got = {r["id"]: r["triangle_count"] for r in triangle_count(df).collect()}
     assert got == expected
 
 

@@ -11,7 +11,11 @@ in OPTIMIZATION_r*.md). The line names its box: ``cpus`` is the
 session's task slots (``defaultParallelism``) and ``shuffle_partitions``
 the width the session resolved. ``sql_executions`` counts, per query,
 the SQL executions one build plus one write adds (the most any pass
-saw): 1 means the builder launched no hidden action.
+saw): 1 means the builder launched no hidden action. ``build_jobs``
+counts, per query, the Spark jobs launched while the query is built
+(the most any pass saw), through a per-build job group: it also sees
+jobs that run outside any SQL execution, such as an RDD partition
+count that has to run its input's stages.
 
 Usage::
 
@@ -61,21 +65,32 @@ def main() -> int:
     release_caches(spark)
     spark.range(2).mapInPandas(lambda it: it, "id long").collect()
 
+    sc = spark.sparkContext
     samples: dict[str, list[float]] = {n: [] for n in names}
     executions: dict[str, int] = dict.fromkeys(names, 0)
-    for _ in range(args.passes):
+    build_jobs: dict[str, int] = dict.fromkeys(names, 0)
+    for p in range(args.passes):
         for name in names:
             fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
-            spark.sparkContext.setJobDescription(f"noop: {name}")
+            group = f"noop-build-{p}-{name}"
+            sc.setJobGroup(group, f"noop: {name}")
             before = last_sql_execution_id(spark)
             start = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            df = fn(spark, sf_dir)
+            # the write's jobs stay out of the build's group
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            df.write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - start, 3))
+            # last_sql_execution_id drains the listener bus, so the
+            # status tracker has seen every job the build started
             executions[name] = max(
                 executions[name], last_sql_execution_id(spark) - before
             )
+            build_jobs[name] = max(
+                build_jobs[name], len(sc.statusTracker().getJobIdsForGroup(group))
+            )
             release_caches(spark)
-            spark.sparkContext.setJobDescription(None)
+            sc.setJobDescription(None)
 
     medians = {n: _lower_median(s) for n, s in samples.items()}
     print(
@@ -91,6 +106,7 @@ def main() -> int:
                 "medians": medians,
                 "samples": samples,
                 "sql_executions": executions,
+                "build_jobs": build_jobs,
             }
         )
     )
