@@ -19,7 +19,6 @@ Design stance (see SURVEY.md §7):
     otherwise grow;
   - pagerank's and triangle_count's bounded small-graph collect;
   - ``pca_variance_profile``'s collect of its d² moment aggregate;
-  - the width guard's partition-count probe (``ensure_scan_width``);
 - Python stays out of the hot path: built-in ``pyspark.sql.functions``
   everywhere; Arrow-batched pandas UDFs only where semantics genuinely
   require them (multimodal decode stubs).

@@ -478,9 +478,9 @@ def kmeans_lloyd(
     assignment is a broadcast join of the k x dim centroid relation and
     a (id, cid) hash aggregate (sum of squares), never a crossJoin of
     vectors; the update step is a (cid, pos) aggregate. Each iteration
-    is 2 shuffles, both keyed and parallel. At petabyte scale persist
-    the exploded relation once and localCheckpoint per iteration to
-    truncate lineage (the graph.pagerank pattern).
+    is 2 shuffles, both keyed and parallel. The exploded relation is
+    persisted once; at petabyte scale also localCheckpoint per
+    iteration to truncate lineage (the graph.pagerank pattern).
     """
     # drop null/NaN/Inf vectors BEFORE the explode: one NaN value would
     # flow through the centroid mean and poison its whole cluster (and,
@@ -510,7 +510,8 @@ def kmeans_lloyd(
     # input partitioning — from a narrow scan the cache is one block
     # and EVERY iteration's assignment/update partial aggregates run
     # single-task for the whole training. Widen before the persist;
-    # no-op on a wide input.
+    # no-op on a wide input, and on a cache or shuffle output (such as
+    # pq_encode's slices), whose width is already chosen.
     e = ensure_scan_width(clean, id_col).select(
         F.col(id_col), F.posexplode("__v").alias("pos", "val")
     ).persist()
@@ -1123,8 +1124,9 @@ def pq_encode(
     # pipeline, m times over)
     # ensure_scan_width (round-12): the persisted relation inherits the
     # input partitioning, and all m subspace trainings read it — from a
-    # narrow scan every slice's whole pipeline was single-task (and
-    # kmeans_lloyd's own guard would otherwise repartition m times).
+    # narrow scan every slice's whole pipeline was single-task. This is
+    # the one place to widen: kmeans_lloyd's guard sees a cache read
+    # and leaves each slice at the width chosen here.
     df = ensure_scan_width(
         df.filter(
             l2_norm(full).isNotNull()

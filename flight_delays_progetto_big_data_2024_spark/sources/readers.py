@@ -145,6 +145,26 @@ class Catalog:
             self.table(name).createOrReplaceTempView(name)
 
 
+def _reads_a_scan(df: DataFrame) -> bool:
+    """True when ``df``'s physical plan has no exchange, no subquery and
+    no cache read, so its partitions are its source's splits (a file
+    scan's, or a local relation's). Planning launches no job; an
+    adaptive plan means an exchange or a subquery."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if (
+            name in ("AdaptiveSparkPlan", "InMemoryTableScan")
+            or "Exchange" in name
+            or not node.subqueries().isEmpty()
+        ):
+            return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
 def ensure_scan_width(df: DataFrame, *keys: str) -> DataFrame:
     """Width guard for expression-heavy prep over narrow scans.
 
@@ -160,15 +180,21 @@ def ensure_scan_width(df: DataFrame, *keys: str) -> DataFrame:
     all regress 40-90% under a blanket width guard, while the
     regex/shingle/signature preps gain 25-45%).
 
-    Extracted from the identical inline guards in operators.dedup
-    (_shingle_docs, winnowing_fingerprints). ``keys`` should be the
-    row identity column(s): hash repartitioning by a real key avoids
-    the local sort a keyless round-robin repartition pays
-    (spark.sql.execution.sortBeforeRepartition) and keeps the
-    assignment deterministic under task retries."""
+    The guard widens scans only, decided from the plan. An input whose
+    physical plan holds an exchange, a subquery or a cache read comes
+    back unchanged: a shuffle output's width is AQE's (it may have
+    coalesced it on purpose) and a cache's is its builder's. Counting
+    such an input's partitions would also run its stages while the
+    query is still being built; a scan's count only plans its splits
+    on the driver, so the guard never launches a job.
+
+    ``keys`` should be the row identity column(s): hash repartitioning
+    by a real key avoids the local sort a keyless round-robin
+    repartition pays (spark.sql.execution.sortBeforeRepartition) and
+    keeps the assignment deterministic under task retries."""
     sess_width = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < sess_width:
-        return df.repartition(sess_width, *keys) if keys else df.repartition(sess_width)
+    if _reads_a_scan(df) and df.rdd.getNumPartitions() < sess_width:
+        return df.repartition(sess_width, *keys)
     return df
 
 

@@ -2,6 +2,8 @@
 §4 call out: strict popularity cutoff, outer-join key merge + 0-fill,
 null-skipping counts, decode defaults, time-slot boundaries, unpivot."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -534,3 +536,49 @@ def test_operators_tolerate_empty_and_tiny_inputs(spark):
     out = kmeans_lloyd(tiny, k=8, iterations=2).collect()
     assert {r.vec_id for r in out} == {0, 1}
     assert all(r.dist2 == 0.0 for r in out)
+
+
+def test_scan_width_guard_widens_scans_only(spark, tmp_path):
+    """``ensure_scan_width`` widens a narrow scan to the session's task
+    slots, hash-partitioned on the key, and hands back a shuffle output
+    or a cache untouched (their widths belong to AQE and to the cache's
+    builder). Deciding launches no job for any input."""
+    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
+        ensure_scan_width,
+    )
+    from tests.job_groups import job_group, jobs_in_group
+
+    slots = spark.sparkContext.defaultParallelism
+    narrow_path = str(tmp_path / "narrow")
+    spark.range(64).coalesce(1).write.parquet(narrow_path)
+    wide_path = str(tmp_path / "wide")
+    spark.range(64).repartition(slots).write.parquet(wide_path)
+
+    def guarded(df, *keys):
+        group = f"width-guard-{id(df)}"
+        with job_group(spark, group):
+            out = ensure_scan_width(df, *keys)
+        assert jobs_in_group(spark, group) == 0
+        return out
+
+    scan = spark.read.parquet(narrow_path)
+    assert scan.rdd.getNumPartitions() == 1
+    widened = guarded(scan, "id")
+    plan = widened._jdf.queryExecution().executedPlan().toString()
+    assert re.search(rf"Exchange hashpartitioning\(id#\d+L, {slots}\)", plan), plan
+    assert widened.rdd.getNumPartitions() == slots
+
+    shuffled = scan.groupBy((F.col("id") % 3).alias("k")).count()
+    cached = scan.select("id").persist()
+    try:
+        assert guarded(shuffled, "k") is shuffled
+        assert guarded(cached, "id") is cached
+        # both really are narrow: the guard left them alone on purpose
+        assert shuffled.rdd.getNumPartitions() == 1
+        assert cached.rdd.getNumPartitions() == 1
+    finally:
+        cached.unpersist()
+
+    wide = spark.read.parquet(wide_path)
+    assert wide.rdd.getNumPartitions() >= slots
+    assert guarded(wide, "id") is wide

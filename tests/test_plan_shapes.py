@@ -10,6 +10,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from flight_delays_progetto_big_data_2024_spark.graph import algorithms
+from flight_delays_progetto_big_data_2024_spark.operators import similarity
 from flight_delays_progetto_big_data_2024_spark.plans import registry
 from flight_delays_progetto_big_data_2024_spark.sources.readers import Catalog
 from flight_delays_progetto_big_data_2024_spark.sources.writers import write_parquet
@@ -303,29 +305,87 @@ def test_bench_overrides_match_registered_plan_shape(spark):
         release_caches(spark)
 
 
-def test_no_query_plans_cartesian_or_rowwise_python(spark):
-    """Repo-wide physical-plan invariants over EVERY registered query:
+#: Operators allowed to launch Spark jobs while a query is built
+#: (ARCHITECTURE §7): the iterative graph loops, pagerank's and
+#: triangle_count's bounded small-graph collect, and
+#: ``pca_variance_profile``'s d² collect.
+BUILD_JOB_OPERATORS = (
+    algorithms.pagerank,
+    algorithms.triangle_count,
+    algorithms.connected_components,
+    algorithms.shortest_hops,
+    algorithms.cheapest_paths,
+    similarity.pca_variance_profile,
+)
+
+
+def _run_build_job_operators_apart(spark, monkeypatch, group: str) -> None:
+    """Rebind every BUILD_JOB_OPERATORS function, wherever a package
+    module bound it, to a wrapper that runs it under ``group``: its jobs
+    then stay out of the calling query's build group."""
+    import sys
+
+    from tests.job_groups import job_group
+
+    def apart(fn):
+        def run(*args, **kwargs):
+            with job_group(spark, group):
+                return fn(*args, **kwargs)
+
+        return run
+
+    wrapped = {id(fn): apart(fn) for fn in BUILD_JOB_OPERATORS}
+    package = algorithms.__name__.split(".")[0]
+    for mod in [m for n, m in sys.modules.items() if n.startswith(package)]:
+        for attr, value in list(vars(mod).items()):
+            if id(value) in wrapped:
+                monkeypatch.setattr(mod, attr, wrapped[id(value)])
+
+
+def test_no_query_plans_cartesian_or_rowwise_python(spark, monkeypatch):
+    """Repo-wide invariants over EVERY registered query:
 
     - no CartesianProduct anywhere (all all-pairs semantics are either
       blocked/banded equi-joins or explicit 1-row broadcast scalars,
       which plan as BroadcastNestedLoopJoin over one row);
     - no BatchEvalPython (row-at-a-time Python UDF) — Python only ever
       enters plans through Arrow (ArrowEvalPython / MapInPandas /
-      FlatMapGroupsInPandas).
+      FlatMapGroupsInPandas);
+    - building the query launches no Spark job outside the
+      BUILD_JOB_OPERATORS, which run under a job group of their own. A
+      query's build is counted through a job group per build, after
+      every table is loaded (a first ``spark.read.parquet`` runs a
+      schema job that is not the builder's).
 
     Audited clean in round 3 (181/181); this pins it for every future
     operator.
 
-    Cleanup matters: building 181 plans executes each query function's
-    persist() marks without materializing them, and those CacheManager
-    entries would swap scans for InMemoryRelation in every LATER test
-    on the shared session — release them before leaving."""
+    Cleanup matters: building a query executes its persist() marks
+    without materializing them, and those CacheManager entries would
+    swap scans for InMemoryRelation in every LATER build and test on
+    the shared session — release them after each query, so no build
+    reads (or is spared materializing) another query's cache."""
     from flight_delays_progetto_big_data_2024_spark.session import release_caches
+    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
+        TESTDATA_TABLES,
+    )
+    from tests.job_groups import job_group, jobs_in_group
 
+    catalog = Catalog(spark, SF)
+    for table in TESTDATA_TABLES:
+        catalog.table(table)
+    _run_build_job_operators_apart(spark, monkeypatch, "build-job-operators")
     offenders = {}
+    build_jobs = {}
     try:
         for name, fn in registry.QUERIES.items():
-            plan = _plan(fn(spark, SF))
+            group = f"build-{name}"
+            with job_group(spark, group):
+                df = fn(spark, SF)
+            jobs = jobs_in_group(spark, group)
+            if jobs:
+                build_jobs[name] = jobs
+            plan = _plan(df)
             bad = [
                 marker
                 for marker in ("CartesianProduct", "BatchEvalPython")
@@ -333,10 +393,11 @@ def test_no_query_plans_cartesian_or_rowwise_python(spark):
             ]
             if bad:
                 offenders[name] = bad
+            release_caches(spark)
     finally:
-        spark.catalog.clearCache()
         release_caches(spark)
     assert not offenders, offenders
+    assert not build_jobs, f"jobs launched while building: {build_jobs}"
 
 
 #: Exchange-node counts (shuffle + broadcast exchanges in the initial

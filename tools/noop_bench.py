@@ -14,8 +14,7 @@ the SQL executions one build plus one write adds (the most any pass
 saw): 1 means the builder launched no hidden action. ``build_jobs``
 counts, per query, the Spark jobs launched while the query is built
 (the most any pass saw), through a per-build job group: it also sees
-jobs that run outside any SQL execution, such as an RDD partition
-count that has to run its input's stages.
+jobs that run outside any SQL execution.
 
 Usage::
 
