@@ -77,6 +77,73 @@ def _shingle_docs(
     )
 
 
+def _postings(docs: DataFrame) -> DataFrame:
+    """Inverted-index rows ``(id, n, s)`` of an ``(id, shingles)``
+    relation: one row per shingle of each document, ``n`` its set size,
+    ``s`` the shingle's xxhash64. Shingle sets are distinct per doc
+    (array_distinct), so ``n`` riding on every posting lets a pair
+    aggregate recover both set sizes with its group keys.
+
+    The index joins on the 64-bit hash, not the string: ~10× less
+    shuffle volume and cheaper key compares; xxhash64 collisions are
+    ~n²/2⁶⁴ — immaterial below ~10⁸ distinct shingles per join scope.
+
+    NULL is not a document, so a NULL id is never a side of a reported
+    pair: its postings are dropped here. (Not in _shingle_docs: other
+    readers of that relation group NULL ids.)"""
+    return (
+        docs.filter(F.col("id").isNotNull())
+        .select("id", F.size("shingles").alias("n"), F.explode("shingles").alias("s"))
+        .select("id", "n", F.xxhash64("s").alias("s"))
+    )
+
+
+def pair_sides(
+    pairs: DataFrame, per_doc: DataFrame, keys: Sequence[str] = ("id_a", "id_b")
+) -> DataFrame:
+    """Decorate each pair with both documents' per-document columns.
+    ``per_doc``'s first column is the document id, matched against
+    ``keys[0]`` and then ``keys[1]`` of ``pairs``; every other column
+    of ``per_doc`` comes back twice, suffixed ``_a`` and ``_b``.
+
+    Both joins are shuffle_hash, never broadcast. ``per_doc`` is one
+    row per corpus document carrying an array or a text (shingle sets,
+    fingerprint arrays, normalized text). Its static size estimate is
+    the scan bytes scaled by per-type DEFAULT widths — blind to the
+    ~10-100x text→k-gram-array expansion — so the planner broadcasts a
+    "small" table whose real build is GBs (the Heaps-decade 50k-doc
+    corpus OOMed the 8g driver exactly here), and at 100 TB a
+    corpus-sized build side must hash-partition regardless of what the
+    estimate says. SHJ builds per-partition tables bounded by
+    corpus_bytes / shuffle_partitions."""
+    doc_id, *cols = per_doc.columns
+    out = pairs
+    for key, sfx in zip(keys, ("_a", "_b")):
+        side = per_doc.select(
+            F.col(doc_id).alias(key), *[F.col(c).alias(c + sfx) for c in cols]
+        )
+        out = out.join(side.hint("shuffle_hash"), key)
+    return out
+
+
+def _verified_jaccard(
+    cands: DataFrame, sets: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs whose EXACT Jaccard
+    reaches ``threshold``, from ``sets``: one ``(id, sh)`` row per
+    document, ``sh`` its distinct-element set array."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return (
+        pair_sides(cands, sets)
+        # try_divide: an undefined J (0/0 on empty shingle sets) must
+        # not ANSI-abort the whole query on one dirty candidate
+        .withColumn("jaccard", F.round(F.try_divide(inter, union), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def dedup_exact(
     df: DataFrame,
     text_col: str = "text",
@@ -131,7 +198,6 @@ def jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    scale: int = 6,
     shingle_fn=word_shingles,
 ) -> DataFrame:
     """ALL pairs with word-k-gram Jaccard ≥ threshold, computed exactly
@@ -149,13 +215,11 @@ def jaccard_pairs(
     docs = _shingle_docs(
         df, id_col, text_col, k, shingle_fn
     ).persist()  # feeds the index twice + the size table: shingle once
+    # the sizes join back rather than ride the postings: carried through
+    # the persisted self-join they measured ~2x slower end to end on all
+    # five jaccard_pairs queries timed (q32 ~4 s -> ~8 s at sf0.1)
     sizes = docs.select("id", F.size("shingles").alias("n_sh"))
-    # join on the 64-bit shingle hash, not the string: ~10× less shuffle
-    # volume and cheaper key compares; xxhash64 collisions are ~n²/2⁶⁴ —
-    # immaterial below ~10⁸ distinct shingles per join scope
-    inv = docs.select("id", F.explode("shingles").alias("s")).select(
-        "id", F.xxhash64("s").alias("s")
-    )
+    inv = _postings(docs).select("id", "s")
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
@@ -173,7 +237,7 @@ def jaccard_pairs(
             F.round(
                 F.col("n_common")
                 / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                scale,
+                6,
             ),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -187,7 +251,6 @@ def jaccard_pairs_prefix(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    scale: int = 6,
     shingle_fn=word_shingles,
 ) -> DataFrame:
     """Same result as :func:`jaccard_pairs` (ALL pairs with Jaccard ≥
@@ -217,12 +280,8 @@ def jaccard_pairs_prefix(
     corpora prefer token-level jaccard_pairs, whose inverted index the
     small vocabulary hurts less.
     """
-    from pyspark.sql.window import Window
-
     docs = _shingle_docs(df, id_col, text_col, k, shingle_fn).persist()
-    inv = docs.select(
-        "id", F.size("shingles").alias("n"), F.explode("shingles").alias("s0")
-    ).select("id", "n", F.xxhash64("s0").alias("s"))
+    inv = _postings(docs)
     dfreq = inv.groupBy("s").agg(F.count("*").alias("df"))
     # prefix length uses a hair-lower threshold so pairs whose TRUE J is
     # a rounding epsilon below t (which the final rounded filter, like
@@ -270,40 +329,14 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
     )
     # verify on hashed shingle arrays: long compares instead of string,
-    # ~4× less data through the verify joins; sizes come from the string
-    # arrays so a (vanishingly unlikely) in-doc hash collision can only
-    # perturb the intersection, same exposure as jaccard_pairs' hash join
-    docs_h = docs.select(
-        "id",
-        F.size("shingles").alias("n"),
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs"),
+    # ~4× less data through the verify joins; the hashed array keeps one
+    # element per shingle, so its size is the set size and a (vanishingly
+    # unlikely) in-doc hash collision can only perturb the intersection,
+    # same exposure as jaccard_pairs' hash join
+    hashed = docs.select(
+        "id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("sh")
     )
-    da = docs_h.select(
-        F.col("id").alias("id_a"), F.col("n").alias("n_a"), F.col("hs").alias("hs_a")
-    )
-    db = docs_h.select(
-        F.col("id").alias("id_b"), F.col("n").alias("n_b"), F.col("hs").alias("hs_b")
-    )
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.col("n_a") + F.col("n_b") - inter
-    # shuffle_hash, never broadcast: this side is ONE ROW PER CORPUS
-    # DOCUMENT carrying its full shingle-hash array. The static size
-    # estimate for it is the parquet scan bytes scaled by per-type
-    # DEFAULT widths — blind to the ~10-100x text→char-k-gram-array
-    # expansion — so the planner broadcasts a "small" table whose real
-    # build is GBs (the Heaps-decade 50k-doc corpus OOMed the 8g driver
-    # exactly here), and at 100 TB a corpus-sized build side must hash-
-    # partition regardless of what the estimate says. SHJ builds per-
-    # partition tables bounded by corpus_bytes / shuffle_partitions.
-    return (
-        cands.join(da.hint("shuffle_hash"), "id_a")
-        .join(db.hint("shuffle_hash"), "id_b")
-        # try_divide: an undefined J (0/0 on empty shingle sets) must
-        # not ANSI-abort the whole query on one dirty candidate
-        .withColumn("jaccard", F.round(F.try_divide(inter, union), scale))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified_jaccard(cands, hashed, threshold)
 
 
 def cross_corpus_containment(
@@ -313,7 +346,6 @@ def cross_corpus_containment(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    scale: int = 6,
     shingle_fn=word_shingles,
 ) -> DataFrame:
     """Decontamination check: (bench_id, corpus_id, containment) for
@@ -328,24 +360,25 @@ def cross_corpus_containment(
     hash — cost tracks shared-shingle frequency, never |corpus|×|bench|.
     The benchmark side is typically thousands of docs against billions:
     Spark/AQE broadcasts the small exploded bench index and the whole
-    check becomes one map-side pass over the corpus."""
-    cd = _shingle_docs(corpus, id_col, text_col, k, shingle_fn)
-    bd = _shingle_docs(bench, id_col, text_col, k, shingle_fn).persist()
-    c_inv = cd.select(F.col("id").alias("corpus_id"), F.explode("shingles").alias("s"))
-    b_inv = bd.select(F.col("id").alias("bench_id"), F.explode("shingles").alias("s"))
+    check becomes one map-side pass over the corpus. The bench set size
+    rides on its postings (as in :func:`jaccard_pairs_cross`), so
+    nothing is persisted or joined back."""
+    c_inv = _postings(_shingle_docs(corpus, id_col, text_col, k, shingle_fn))
+    b_inv = _postings(_shingle_docs(bench, id_col, text_col, k, shingle_fn))
     common = (
-        c_inv.withColumn("s", F.xxhash64("s"))
-        .join(b_inv.withColumn("s", F.xxhash64("s")), "s")
-        .groupBy("bench_id", "corpus_id")
+        c_inv.select(F.col("id").alias("corpus_id"), "s")
+        .join(
+            b_inv.select(
+                F.col("id").alias("bench_id"), F.col("n").alias("n_bench"), "s"
+            ),
+            "s",
+        )
+        .groupBy("bench_id", "corpus_id", "n_bench")
         .agg(F.count("*").alias("n_common"))
     )
-    b_sizes = bd.select(
-        F.col("id").alias("bench_id"), F.size("shingles").alias("n_bench")
-    )
     return (
-        common.join(b_sizes, "bench_id")
-        .withColumn(
-            "containment", F.round(F.col("n_common") / F.col("n_bench"), scale)
+        common.withColumn(
+            "containment", F.round(F.col("n_common") / F.col("n_bench"), 6)
         )
         .filter(F.col("containment") >= threshold)
         .select("bench_id", "corpus_id", "containment")
@@ -358,47 +391,6 @@ def _minhash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
         (rng.randrange(1, _MINHASH_PRIME), rng.randrange(0, _MINHASH_PRIME))
         for _ in range(num_hashes)
     ]
-
-
-def hashed_shingles(shingles_col):
-    """xxhash64 of each shingle, mod the MinHash prime (array<bigint>).
-    Materialize this as its OWN column before building signatures: the 64
-    permutation mins each reference the whole array, and Catalyst's
-    CollapseProject keeps a non-cheap multiply-referenced column as a
-    separate projection — so the string hashing runs once per row, not
-    64 times."""
-    return F.transform(
-        shingles_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_PRIME))
-    )
-
-
-def _signature_from_hashed(hashed_col, num_hashes: int, seed: int):
-    def _perm(a: int, b: int):
-        # factory closure: PySpark derives lambda arity from the Python
-        # signature, so default-arg capture (lambda x, a=a: ...) breaks
-        return lambda x: F.pmod(a * x + b, F.lit(_MINHASH_PRIME))
-
-    mins = [
-        F.array_min(F.transform(hashed_col, _perm(a, b)))
-        for a, b in _minhash_params(num_hashes, seed)
-    ]
-    return F.array(*mins)
-
-
-def minhash_signature(
-    shingles_col,
-    num_hashes: int = 64,
-    seed: int = 42,
-):
-    """MinHash signature column (array<bigint>, length num_hashes) over a
-    distinct-shingle array column: ``min((a_i·h(s)+b_i) mod p)`` with
-    ``h = xxhash64 mod p``. Pure higher-order expressions — JVM-side.
-
-    Prefer the two-step ``hashed_shingles`` + ``_signature_from_hashed``
-    (as ``minhash_lsh_candidates`` does) in hot paths: inlined here, the
-    hashing subexpression is duplicated across all ``num_hashes`` mins.
-    """
-    return _signature_from_hashed(hashed_shingles(shingles_col), num_hashes, seed)
 
 
 def minhash_lsh_candidates(
@@ -490,7 +482,6 @@ def minhash_near_dups(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    scale: int = 6,
 ) -> DataFrame:
     """LSH candidates verified by EXACT Jaccard on the shingle sets —
     precision 1.0 by construction; recall governed by the banding curve
@@ -501,24 +492,8 @@ def minhash_near_dups(
     shingling (the dominant per-row cost) runs once over the corpus."""
     docs = _shingle_docs(df, id_col, text_col, k).persist()
     cands = _lsh_candidates_from_docs(docs, num_hashes, bands, seed)
-    da = docs.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    db = docs.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    # shuffle_hash, never broadcast: one row per corpus document with
-    # its full shingle STRING array — the static estimate uses default
-    # complex-type widths and misses the text→shingle-array expansion,
-    # so the planner would broadcast a corpus-sized build (see
-    # jaccard_pairs_prefix's verify join for the measured OOM).
-    return (
-        cands.join(da.hint("shuffle_hash"), "id_a")
-        .join(db.hint("shuffle_hash"), "id_b")
-        # try_divide: an undefined J (0/0 on empty shingle sets) must
-        # not ANSI-abort the whole query on one dirty candidate
-        .withColumn("jaccard", F.round(F.try_divide(inter, union), scale))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sets = docs.withColumnRenamed("shingles", "sh")
+    return _verified_jaccard(cands, sets, threshold)
 
 
 def _simhash_from_hashes(hashes):
@@ -555,11 +530,6 @@ def simhash_signature(tokens_col):
     explode + codegen-agg relation form) for corpus-scale signing; keep
     this form for per-row checks and as the semantics oracle."""
     return _simhash_from_hashes(F.transform(tokens_col, lambda t: F.xxhash64(t)))
-
-
-def _bit_masks() -> list[int]:
-    # bit 63 of a signed long is the sign bit: its mask is min-long
-    return [(1 << j) if j < 63 else -(1 << 63) for j in range(64)]
 
 
 #: Engine-portable 60-bit token hash (Spark SQL form): md5 is defined
@@ -806,7 +776,6 @@ def jaccard_pairs_cross(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    scale: int = 6,
     shingle_fn=word_shingles,
 ) -> DataFrame:
     """Exact Jaccard pairs ACROSS two relations — the incremental-ingest
@@ -826,25 +795,16 @@ def jaccard_pairs_cross(
 
     Returns (id_left, id_right, jaccard).
     """
-    # shingle sets are distinct per doc (array_distinct), so the set
-    # SIZE rides along on every exploded posting row and the pair
-    # aggregation recovers it with the group keys — no side relation to
-    # join back, and (advisor finding, round 2) no persist whose cached
-    # blocks would leak across a long-lived session
-    dl = _shingle_docs(left, id_col, text_col, k, shingle_fn)
-    dr = _shingle_docs(right, id_col, text_col, k, shingle_fn)
-    il = dl.select(
-        F.col("id").alias("id_left"),
-        F.size("shingles").alias("n_l"),
-        F.explode("shingles").alias("s"),
-    ).select("id_left", "n_l", F.xxhash64("s").alias("s"))
-    ir = dr.select(
-        F.col("id").alias("id_right"),
-        F.size("shingles").alias("n_r"),
-        F.explode("shingles").alias("s"),
-    ).select("id_right", "n_r", F.xxhash64("s").alias("s"))
+    # the set sizes ride on the postings: no size table to join back and
+    # no persist whose cached blocks would leak across a long-lived session
+    il = _postings(_shingle_docs(left, id_col, text_col, k, shingle_fn))
+    ir = _postings(_shingle_docs(right, id_col, text_col, k, shingle_fn))
     common = (
-        il.join(ir, "s")
+        il.select(F.col("id").alias("id_left"), F.col("n").alias("n_l"), "s")
+        .join(
+            ir.select(F.col("id").alias("id_right"), F.col("n").alias("n_r"), "s"),
+            "s",
+        )
         .groupBy("id_left", "id_right", "n_l", "n_r")
         .agg(F.count("*").alias("n_common"))
     )
@@ -853,7 +813,7 @@ def jaccard_pairs_cross(
             "jaccard",
             F.round(
                 F.col("n_common") / (F.col("n_l") + F.col("n_r") - F.col("n_common")),
-                scale,
+                6,
             ),
         )
         .filter(F.col("jaccard") >= threshold)

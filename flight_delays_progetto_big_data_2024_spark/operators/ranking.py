@@ -269,7 +269,6 @@ def heavy_hitter_terms(
     docs: DataFrame,
     text_col: str = "text",
     phi: float = 0.005,
-    scale: int = 6,
 ) -> DataFrame:
     """EXACT heavy hitters: every term with frequency > ``phi`` of all
     token occurrences, with its exact count — in two passes over the
@@ -340,7 +339,7 @@ def heavy_hitter_terms(
         .select(
             "term",
             "occurrences",
-            F.round(F.col("occurrences") / F.col("__n"), scale).alias("freq"),
+            F.round(F.col("occurrences") / F.col("__n"), 6).alias("freq"),
         )
         .orderBy(F.desc("occurrences"), "term")
     )

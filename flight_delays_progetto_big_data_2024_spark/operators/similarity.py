@@ -72,7 +72,6 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 6,
 ) -> DataFrame:
     """Exact top-k by cosine: for each query vector, the k nearest corpus
     vectors (self-matches excluded). Ranking uses the ROUNDED cosine with
@@ -93,7 +92,7 @@ def cosine_topk(
         .select(
             "query_id",
             F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm", scale=scale).alias("cosine"),
+            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
         )
         # pair-level dimension domain (round-10 probe): a query/corpus
         # pair of DIFFERENT dimensions has an undefined cosine —
@@ -140,7 +139,6 @@ def lsh_topk(
     dim: int = 64,
     n_planes: int = 8,
     seed: int = 42,
-    scale: int = 6,
 ) -> DataFrame:
     """Approximate top-k: candidates from hyperplane-bucket equality
     plus all 1-bit-flip probes, re-ranked by exact cosine. Returns the
@@ -193,7 +191,7 @@ def lsh_topk(
         .select(
             "query_id",
             F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm", scale=scale).alias("cosine"),
+            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
         )
         .dropDuplicates(["query_id", "candidate_id"])
     )
@@ -214,7 +212,6 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 6,
 ) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbor — the other
     classic scale path besides LSH:
@@ -282,7 +279,7 @@ def ivf_topk(
                 F.col("cents"),
                 lambda z: F.struct(
                     F.round(
-                        dot("v", z["cv"]) / (F.col("nrm") * z["cn"]), scale
+                        dot("v", z["cv"]) / (F.col("nrm") * z["cn"]), 6
                     ).alias("s"),
                     F.bitwise_not(z["cid"]).alias("c"),
                 ),
@@ -330,7 +327,7 @@ def ivf_topk(
         .select(
             "query_id",
             F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm", scale=scale).alias("cosine"),
+            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
         )
     )
     return top_k_per_group(
@@ -347,7 +344,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 6,
     n_blocks: int = 10,
     brute: bool = False,
 ) -> DataFrame:
@@ -371,7 +367,6 @@ def embedding_near_dup_pairs(
             id_col=id_col,
             vec_col=vec_col,
             n_blocks=n_blocks,
-            scale=scale,
         )
     a = _prep(df, id_col, vec_col)
     b = a.select(
@@ -382,7 +377,7 @@ def embedding_near_dup_pairs(
         .select(
             F.col("id").alias("id_a"),
             "id_b",
-            cosine_prenormed("v", "vb", "nrm", "nb", scale=scale).alias("cosine"),
+            cosine_prenormed("v", "vb", "nrm", "nb", scale=6).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -393,7 +388,6 @@ def label_centroid_cohesion(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    scale: int = 6,
 ) -> DataFrame:
     """Per-label centroid cohesion: the mean and minimum cosine of each
     member to its label's centroid (the standard cluster-quality /
@@ -433,8 +427,8 @@ def label_centroid_cohesion(
         .groupBy(label_col)
         .agg(
             F.count(F.lit(1)).alias("n_members"),
-            F.round(F.avg(cos), scale).alias("avg_cosine"),
-            F.round(F.min(cos), scale).alias("min_cosine"),
+            F.round(F.avg(cos), 6).alias("avg_cosine"),
+            F.round(F.min(cos), 6).alias("min_cosine"),
         )
         .orderBy(label_col)
     )
@@ -629,7 +623,6 @@ def blocked_cosine_histogram(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int = 10,
-    scale: int = 6,
 ) -> DataFrame:
     """All-pairs cosine histogram via BLOCKED matrix products — the
     scale-correct form of the n² diagnostic. The naive self-join
@@ -691,7 +684,6 @@ def cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int = 10,
-    scale: int = 6,
 ) -> DataFrame:
     """Exact embedding-cosine near-dup PAIRS: every unordered (id_a <
     id_b) pair whose rounded cosine >= ``threshold``, via the same
@@ -725,7 +717,7 @@ def cosine_pairs(
                 vb = np.vstack(row.vs_b)
                 cos = (va @ vb.T) / np.outer(np.asarray(row.ns_a), np.asarray(row.ns_b))
                 # round half away from zero (Spark/DuckDB double semantics)
-                rounded = np.sign(cos) * np.floor(np.abs(cos) * 10**scale + 0.5) / 10**scale
+                rounded = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
                 keep = rounded >= threshold
                 if row.ba == row.bb:
                     keep &= ids_a[:, None] < ids_b[None, :]
@@ -750,7 +742,6 @@ def sampled_cosine_histogram(
     vec_col: str = "embedding",
     sample_hex_lt: str = "4",
     n_blocks: int = 10,
-    scale: int = 6,
 ) -> DataFrame:
     """Estimated all-pairs cosine histogram from a DETERMINISTIC row
     sample — the 100 TB form of the pair-distribution diagnostic.
@@ -781,7 +772,7 @@ def sampled_cosine_histogram(
     sample = df.filter(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 1) < sample_hex_lt
     )
-    hist = blocked_cosine_histogram(sample, id_col, vec_col, n_blocks, scale)
+    hist = blocked_cosine_histogram(sample, id_col, vec_col, n_blocks)
     if inv_p2 is not None:
         est = (F.col("n_pairs") * F.lit(inv_p2)).cast("long")
     else:

@@ -46,6 +46,7 @@ from flight_delays_progetto_big_data_2024_spark.operators.dedup import (
     jaccard_pairs_prefix,
     keep_first,
     minhash_near_dups,
+    pair_sides,
     simhash_near_dups,
 )
 from flight_delays_progetto_big_data_2024_spark.operators.ranking import (
@@ -1937,18 +1938,12 @@ def q85_winnowing_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     # exact verification on per-doc fingerprint arrays (distinct within
-    # a doc by construction, so array_intersect == the shared count).
-    # shuffle_hash, never broadcast: one row per corpus document with
-    # its full fingerprint array — the jaccard_pairs_prefix verify-join
-    # OOM class (default-width estimates hide the array volume).
+    # a doc by construction, so array_intersect == the shared count)
     arrs = fp.groupBy("doc_id").agg(F.collect_list("fingerprint").alias("arr"))
-    aa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a"))
-    ab = arrs.select(F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b"))
     shared = F.size(F.array_intersect("arr_a", "arr_b"))
     n_min = F.least(F.size("arr_a"), F.size("arr_b"))
     return (
-        cands.join(aa.hint("shuffle_hash"), "doc_a")
-        .join(ab.hint("shuffle_hash"), "doc_b")
+        pair_sides(cands, arrs, keys=("doc_a", "doc_b"))
         .withColumn("shared", shared.cast("long"))
         .filter(F.col("shared") / n_min >= 0.8)
         .withColumn("containment", F.round(F.col("shared") / n_min, 6))
@@ -3424,27 +3419,12 @@ def q156_exact_substring_containment(spark: SparkSession, sf_dir: str) -> DataFr
         .filter(F.col("got") == F.col("need"))
         .select("id_contained", "id_container")
     )
-    # shuffle_hash, never broadcast: the nm sides carry one row per
-    # corpus document with its FULL normalized text; the static size
-    # estimate uses the default string width and misses the real
-    # volume, so the planner would broadcast a corpus-sized relation
-    # (the jaccard_pairs_prefix verify-join OOM class; at 100 TB this
-    # side must hash-partition regardless of the estimate).
-    verified = cands.join(
-        nm.select(
-            F.col("doc_id").alias("id_contained"), F.col("nm").alias("nm_in")
-        ).hint("shuffle_hash"),
-        "id_contained",
-    ).join(
-        nm.select(
-            F.col("doc_id").alias("id_container"), F.col("nm").alias("nm_out")
-        ).hint("shuffle_hash"),
-        "id_container",
-    )
+    # nm_a is the contained doc's normalized text, nm_b the container's
+    verified = pair_sides(cands, nm, keys=("id_contained", "id_container"))
     return (
         verified.filter(
-            (F.length("nm_in") <= F.length("nm_out"))
-            & (F.instr("nm_out", F.col("nm_in")) > 0)
+            (F.length("nm_a") <= F.length("nm_b"))
+            & (F.instr("nm_b", F.col("nm_a")) > 0)
         )
         .select("id_contained", "id_container")
         .orderBy("id_contained", "id_container")
@@ -3975,17 +3955,7 @@ def q165_near_dup_edit_distances(
         (
             F.length(normalize_text("text"))
             == F.octet_length(normalize_text("text"))
-        ).alias("is_ascii"),
-    )
-    na = nm.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("nm").alias("nm_a"),
-        F.col("is_ascii").alias("ascii_a"),
-    )
-    nb = nm.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("nm").alias("nm_b"),
-        F.col("is_ascii").alias("ascii_b"),
+        ).alias("ascii"),
     )
     in_unit_domain = F.col("ascii_a") & F.col("ascii_b")
     ed = F.when(in_unit_domain, F.levenshtein("nm_a", "nm_b"))
@@ -4009,13 +3979,8 @@ def q165_near_dup_edit_distances(
                 "edit_distance_codepoints"
             )
         )
-    # shuffle_hash, never broadcast: na/nb are one row per corpus doc
-    # with the full normalized text; default-width size estimates would
-    # let the planner broadcast a corpus-sized side (the
-    # jaccard_pairs_prefix verify-join OOM class).
     return (
-        pairs.join(na.hint("shuffle_hash"), "id_a")
-        .join(nb.hint("shuffle_hash"), "id_b")
+        pair_sides(pairs, nm)
         .select(*cols)
         .orderBy("id_a", "id_b")
     )

@@ -105,8 +105,10 @@ def release_caches(spark: SparkSession) -> int:
     clearCache itself).
 
     Cache-lifetime policy: operators that RETURN a lazy DataFrame may
-    persist() intermediates the result reads more than once (banded
-    MinHash candidates, PQ code relations, shingle sets); they cannot
+    persist() intermediates the result reads more than once (the shingle
+    sets of jaccard_pairs, jaccard_pairs_prefix and minhash_near_dups,
+    banded MinHash and blocked SimHash signatures, PQ code relations);
+    the two-relation shingle operators persist nothing. They cannot
     unpersist before the caller materializes, so THE CALLER OWNS the
     cache lifetime. One-shot callers (bench sweeps, the driver's
     correctness loop, notebook sessions running many unrelated queries)

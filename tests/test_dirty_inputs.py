@@ -12,8 +12,11 @@ from flight_delays_progetto_big_data_2024_spark.functions.text import (
     tokens,
 )
 from flight_delays_progetto_big_data_2024_spark.operators.dedup import (
+    cross_corpus_containment,
     dedup_exact,
     jaccard_pairs,
+    jaccard_pairs_cross,
+    jaccard_pairs_prefix,
     minhash_near_dups,
     simhash_near_dups,
     winnowing_fingerprints,
@@ -93,7 +96,10 @@ def test_no_phantom_pairs_among_null_and_empty_docs(spark):
     phantom J=1.0 near-dup (the oracle's list_intersect skips NULLs and
     emits none). char_shingles additionally fabricated ``['']`` for
     empty text in BOTH engines — parity green, output wrong. No-content
-    docs must pair with NOTHING, in every family."""
+    docs must pair with NOTHING, in every family.
+
+    NULL is not a document either: the NULL-id copy of the real pair's
+    text is never a side of a reported pair, in all five pair operators."""
     from flight_delays_progetto_big_data_2024_spark.functions.text import (
         char_shingles,
         char_shingles_of,
@@ -109,6 +115,7 @@ def test_no_phantom_pairs_among_null_and_empty_docs(spark):
             (4, "  \t ", "s"),
             (5, "shared text payload alpha beta gamma", "s"),
             (6, "shared text payload alpha beta gamma", "s"),
+            (None, "shared text payload alpha beta gamma", "s"),
         ],
         "doc_id long, text string, source string",
     )
@@ -119,7 +126,7 @@ def test_no_phantom_pairs_among_null_and_empty_docs(spark):
         char_shingles_of(normalize_text("text")).alias("cs"),
     ).collect()
     for r in rows:
-        if r["doc_id"] <= 4:
+        if r["doc_id"] is not None and r["doc_id"] <= 4:
             assert r["ws"] == [] and r["cs"] == [], r
         else:
             assert r["ws"] and r["cs"], r
@@ -132,6 +139,16 @@ def test_no_phantom_pairs_among_null_and_empty_docs(spark):
         assert got == {(5, 6)}, (shingle_fn, got)
     mh = {(r["id_a"], r["id_b"]) for r in minhash_near_dups(docs).collect()}
     assert mh == {(5, 6)}, mh
+    prefix = {tuple(r[:2]) for r in jaccard_pairs_prefix(docs).collect()}
+    assert prefix == {(5, 6)}, prefix
+    # the two-relation operators see the same docs on both sides
+    both = {(a, b) for a in (5, 6) for b in (5, 6)}
+    cross = {tuple(r[:2]) for r in jaccard_pairs_cross(docs, docs).collect()}
+    assert cross == both, cross
+    contained = {
+        tuple(r[:2]) for r in cross_corpus_containment(docs, docs).collect()
+    }
+    assert contained == both, contained
 
 
 def test_operators_accept_empty_relations(spark):

@@ -529,6 +529,82 @@ def test_query_builders_stay_lazy(spark):
     assert got == want, f"(build executions, write executions, explodes): {got}"
 
 
+def _hash_join_build_sides(df) -> list[tuple[str, set[str]]]:
+    """(operator name, build-side output column names) of every hash
+    join in the initial physical plan."""
+    node = df._jdf.queryExecution().executedPlan()
+    stack, joins = [node.executedPlan()], []  # unwrap AdaptiveSparkPlan
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in ("ShuffledHashJoin", "BroadcastHashJoin"):
+            left = node.buildSide().toString() == "BuildLeft"
+            cols = (node.left() if left else node.right()).output()
+            joins.append(
+                (node.nodeName(), {cols.apply(i).name() for i in range(cols.size())})
+            )
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return joins
+
+
+#: Queries that decorate candidate pairs through dedup.pair_sides, with
+#: the per-document column it adds to each pair (suffixed _a and _b).
+PAIR_SIDES_COLUMN = {
+    "q33_minhash_lsh_near_dups": "sh",
+    "q54_char_shingle_jaccard": "sh",
+    "q85_winnowing_containment_pairs": "arr",
+    "q156_exact_substring_containment": "nm",
+    "q165_near_dup_edit_distances": "nm",
+}
+
+
+def test_pair_sides_never_broadcast_the_per_doc_side(spark):
+    """The per-document side of a decorate join is never broadcast, even
+    when the planner's size estimate says it fits: with the broadcast
+    threshold at 1 TiB, each query still builds exactly two hash tables
+    over a per-document side, both ShuffledHashJoin."""
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    release_caches(spark)
+    spark.conf.set(key, str(1 << 40))
+    got = {}
+    try:
+        for name, col in PAIR_SIDES_COLUMN.items():
+            sides = {f"{col}_a", f"{col}_b"}
+            df = registry.QUERIES[name](spark, SF)
+            got[name] = sorted(
+                op for op, cols in _hash_join_build_sides(df) if cols & sides
+            )
+    finally:
+        spark.conf.set(key, prev)
+        release_caches(spark)
+    want = dict.fromkeys(PAIR_SIDES_COLUMN, ["ShuffledHashJoin"] * 2)
+    assert got == want, f"joins building over the per-document side: {got}"
+
+
+def test_containment_persists_nothing(spark):
+    """q56's cross-corpus containment carries the bench set size on its
+    postings: building it and running one noop write leaves no cached
+    relation, and the executed plan reads no cache."""
+    from flight_delays_progetto_big_data_2024_spark.session import (
+        last_sql_execution_id,
+        release_caches,
+    )
+
+    release_caches(spark)
+    try:
+        df = registry.QUERIES["q56_benchmark_decontamination"](spark, SF)
+        df.write.format("noop").mode("overwrite").save()
+        written = last_sql_execution_id(spark)
+        cached = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        scans = _final_plan_node_names(spark, written).count("InMemoryTableScan")
+    finally:
+        release_caches(spark)
+    assert (cached, scans) == (False, 0), (cached, scans)
+
+
 def test_small_graph_builds_run_one_probe(spark):
     """The nation-graph queries pay exactly one build-time SQL
     execution: pagerank's / triangle_count's bounded collect of the edge
