@@ -1,14 +1,27 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as a 100 TB design requires:
+Four search paths, as a 100 TB design requires. The first three share
+one corpus-side prep, one query-side projection and one exact re-rank
+(:func:`_rerank`); they differ only in how they generate candidates:
 
-- ``cosine_topk`` — exact brute force: broadcast the (small) query set
-  against the distributed corpus, one scan, windowed top-k per query.
-  The honest baseline and the correctness oracle for everything else.
-- ``lsh_topk`` — random-hyperplane LSH: corpus and queries are hashed
-  to sign-bit buckets; candidates come from an equi-join on bucket
-  (with optional multi-probe over 1-bit flips), then exact cosine
-  re-ranks. Sub-linear per query at scale; recall < 1 by construction.
+- ``cosine_topk`` — exact brute force: every corpus vector is a
+  candidate for every query (broadcast queries, one corpus pass). The
+  honest baseline and the correctness oracle for everything else.
+- ``lsh_topk`` — random-hyperplane LSH: candidates share the query's
+  sign-bit bucket or one of its 1-bit flips (multi-probe). Sub-linear
+  per query at scale; recall < 1 by construction.
+- ``ivf_topk`` — inverted file: candidates live in the query's
+  ``n_probe`` nearest coarse cells; recall < 1 unless every cell is
+  probed.
+- ``pq_adc_topk`` — product quantization: the corpus is searched
+  through its PQ codes by asymmetric distance, never through its float
+  vectors.
+
+The blocked all-pairs operators (``blocked_cosine_histogram``,
+``cosine_pairs`` and the sampled histogram) share one GEMM block
+kernel; the two PCA operators share one per-partition moment
+accumulator and one positional-sum reduction. Every operator restricts
+its input with one predicate, :func:`vector_domain`.
 
 Hyperplanes are generated from a seeded RNG and embedded as literal
 arrays — deterministic across runs, no fit/transform state to manage.
@@ -17,6 +30,7 @@ arrays — deterministic across runs, no fit/transform state to manage.
 from __future__ import annotations
 
 import random
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,35 +48,121 @@ from flight_delays_progetto_big_data_2024_spark.sources.readers import (
     ensure_scan_width,
 )
 
+#: Euclidean training-domain norm ceiling for the k-means/PQ family
+#: (round-8 hazard class, found by the |x|=1e10 dirty probe): every
+#: engine-parity tie-break in this family stabilizes cross-engine float
+#: association noise by ROUNDING distances to 6 decimals — but
+#: ``round(x, 6)`` only collapses ulp noise while ``ulp(x) < 1e-6``,
+#: i.e. ``|x| < 2^52 · 1e-6 ≈ 4.5e9``. A finite huge-magnitude vector
+#: pushes squared distances past that envelope, the rounding grid
+#: becomes coarser than the ulp, engines rank-flip on surviving ulp
+#: differences, and the trained codebooks diverge (measured live:
+#: q180's err_ratio 1.01 vs 0.0 with one [1e10]*64 vector). Bounding
+#: the vector norm at 1e4 keeps every squared distance under ~4e8 —
+#: an order of magnitude inside the stabilizable envelope — and is
+#: mirrored verbatim in every family oracle. Real embedding norms are
+#: O(1-100); a 1e4-norm vector is outside any meaningful training
+#: corpus the same way a NaN is.
+EUCLID_NORM_BOUND = 1.0e4
 
-def _prep(
-    df: DataFrame, id_col: str, vec_col: str, keep_zero: bool = False
-) -> DataFrame:
-    """(id, v, nrm) restricted to the DEFINED-cosine subspace: null
-    vectors, zero vectors (nrm == 0 divides by zero — a hard ANSI-mode
-    error, so ONE zero embedding in a 100 TB corpus would kill the whole
-    query) and non-finite vectors (NaN/Inf norms poison every score they
-    touch) are dropped here, once, for every cosine-based operator.
-    Clean corpora are unaffected; dirty rows silently leave the
-    candidate/query space, which is the only sound semantics for an
-    undefined similarity.
 
-    ``keep_zero=True`` keeps zero-norm vectors: zero is only undefined
-    for COSINE (the divide); it is a perfectly defined input to moment
-    statistics — PCA mean/covariance shift with it, matching MLlib
-    RowMatrix semantics (round-9 advisor: the PCA operators must not
-    inherit the cosine domain's zero exclusion)."""
-    v = as_double_array(vec_col)
-    prepped = df.select(
-        F.col(id_col).alias("id"), v.alias("v"), l2_norm(v).alias("nrm")
-    )
+def vector_domain(
+    nrm: Column, keep_zero: bool = False, bound: float = float("inf")
+) -> Column:
+    """The vector domain, as a predicate over a norm column: the one
+    rule every operator here uses to drop the vectors it cannot use.
+
+    A NULL norm (NULL vector or NULL element) and a NaN or ±Inf norm
+    are always out: one such vector poisons every score, mean or
+    centroid it touches. A zero norm is out unless ``keep_zero``: zero
+    is undefined only for COSINE (the divide is a hard ANSI error, so
+    ONE zero embedding in a 100 TB corpus would kill the whole query),
+    while moment statistics and squared-Euclidean k-means take it as an
+    ordinary point (round-9: it shifts the mean and covariance exactly
+    as MLlib RowMatrix would). ``bound`` is the norm ceiling: ``inf``
+    for the cosine and moment domains, :data:`EUCLID_NORM_BOUND` for
+    the k-means/PQ training domain. Clean corpora are unaffected; dirty
+    rows silently leave the domain, which is the only sound semantics
+    for an undefined result."""
     # NB: Spark orders NaN ABOVE any double, so `nrm > 0` alone would
     # keep NaN norms — the isnan test is load-bearing.
-    return prepped.filter(
-        F.col("nrm").isNotNull()
-        & ~F.isnan(F.col("nrm"))
-        & (F.col("nrm") >= 0 if keep_zero else F.col("nrm") > 0)
-        & (F.col("nrm") < F.lit(float("inf")))
+    ok = nrm.isNotNull() & ~F.isnan(nrm) & (nrm < F.lit(bound))
+    return ok if keep_zero else ok & (nrm > 0)
+
+
+def _prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, nrm) restricted to the defined-cosine domain
+    (:func:`vector_domain`: no NULL, non-finite or zero vectors) — once,
+    for every cosine-based operator."""
+    v = as_double_array(vec_col)
+    return df.select(
+        F.col(id_col).alias("id"), v.alias("v"), l2_norm(v).alias("nrm")
+    ).filter(vector_domain(F.col("nrm")))
+
+
+def _corpus(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Corpus side of a search: :func:`_prep` behind the width guard.
+    Every search path scores each corpus row against several queries,
+    cells or hyperplanes — single-task on a narrow scan (round-12: q44
+    dropped ~27% with the guard, q172 3.5 s -> 1.2 s at sf0.1); a no-op
+    at scale."""
+    return _prep(ensure_scan_width(corpus, id_col), id_col, vec_col)
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Query side of a search: (query_id, qv, qn) in the cosine domain."""
+    return _prep(queries, id_col, vec_col).select(
+        F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    )
+
+
+def _rerank(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    on: str | Column | None = None,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """The exact re-rank every search path ends in: broadcast the query
+    side (``query_id, qv, qn`` plus ``carry``) against the corpus side
+    (``id, v, nrm``) on the candidate condition ``on`` (None: every
+    pair), score each candidate by cosine, and keep each query's top
+    ``k`` as ``(query_id, *carry, candidate_id, cosine, rank)``.
+
+    Self-matches are excluded. Ranking uses the ROUNDED cosine with id
+    tiebreak so ordering is reproducible across engines. NULL scores
+    are dropped before the window — the pair-level dimension domain
+    (round-10 probe): a query/corpus pair of DIFFERENT dimensions has an
+    undefined cosine (zip_with pads the short side with NULL), NULL
+    cannot be ranked (the wave-5 rule), and desc = NULLS LAST would
+    still rank such rows into top-k whenever a query has fewer than k
+    same-dim candidates. Both sides are in :func:`vector_domain` (no
+    NULL element, finite non-zero norms), so a score is NULL exactly
+    when the dimensions differ, and the rule is written as
+    ``size(v) = size(qv)``: Catalyst makes it a key of the broadcast
+    hash join, so a cross-dimension pair is never formed (the GEMM
+    block key does the same), where a NULL test on the score would be
+    pushed into the join condition and score every candidate twice.
+
+    Plan shape: the broadcast query side meets the corpus in one
+    distributed pass; the only shuffle is the per-query top-k window
+    over the candidate rows."""
+    scored = (
+        corpus.join(F.broadcast(queries), on)
+        .filter((F.col("id") != F.col("query_id")) & (F.size("v") == F.size("qv")))
+        .select(
+            "query_id",
+            *carry,
+            F.col("id").alias("candidate_id"),
+            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
+        )
+    )
+    return top_k_per_group(
+        scored,
+        partition_keys=["query_id"],
+        order=[F.desc("cosine"), F.col("candidate_id")],
+        k=k,
+        rank_alias="rank",
     )
 
 
@@ -74,41 +174,10 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine: for each query vector, the k nearest corpus
-    vectors (self-matches excluded). Ranking uses the ROUNDED cosine with
-    id tiebreak so ordering is reproducible across engines.
-
-    Plan shape: broadcast(queries) nested-loop against the corpus scan —
-    a single distributed pass over the corpus; the only shuffles are
-    the per-query top-k window over k·|queries| rows and the
-    ensure_scan_width guard (round-12: |queries| dot products per
-    corpus row ran single-task on a narrow scan; no-op at scale).
-    """
-    c = _prep(ensure_scan_width(corpus, id_col), id_col, vec_col)
-    q = _prep(queries, id_col, vec_col).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
-        )
-        # pair-level dimension domain (round-10 probe): a query/corpus
-        # pair of DIFFERENT dimensions has an undefined cosine —
-        # zip_with pads the short side with NULL and the score comes
-        # out NULL. NULL cannot be ranked (the wave-5 rule); without
-        # this filter the NULL-score rows sort after real candidates
-        # (desc = NULLS LAST) and still enter top-k whenever a query
-        # has fewer than k same-dim candidates.
-        .filter(F.col("cosine").isNotNull())
-    )
-    return top_k_per_group(
-        scored,
-        partition_keys=["query_id"],
-        order=[F.desc("cosine"), F.col("candidate_id")],
-        k=k,
-        rank_alias="rank",
+    vectors (self-matches excluded) — :func:`_rerank` with every
+    (query, corpus) pair as a candidate."""
+    return _rerank(
+        _corpus(corpus, id_col, vec_col), _queries(queries, id_col, vec_col), k
     )
 
 
@@ -119,12 +188,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 
 def hyperplane_bucket(vec_col, planes: list[list[float]]):
     """Sign-bit bucket id (long) from fixed hyperplanes: bit i is set when
-    vec · plane_i > 0. Literal plane arrays keep this JVM-side."""
+    vec · plane_i > 0. Each plane is ONE array literal, which keeps this
+    JVM-side without a per-element literal node for Catalyst to fold."""
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
         bit = F.when(
-            dot(vec_col, p) > 0, F.shiftleft(F.lit(1).cast("long"), i)
+            dot(vec_col, F.lit(plane)) > 0, F.shiftleft(F.lit(1).cast("long"), i)
         ).otherwise(F.lit(0).cast("long"))
         bucket = bucket.bitwiseOR(bit)
     return bucket
@@ -144,7 +213,11 @@ def lsh_topk(
     plus all 1-bit-flip probes, re-ranked by exact cosine. Returns the
     same schema as :func:`cosine_topk`; per-query result may have < k
     rows when buckets are sparse — at real scale buckets hold thousands
-    of vectors and this is the scan-saving path."""
+    of vectors and this is the scan-saving path.
+
+    A (query, candidate) pair meets at most once: a query's probes are
+    pairwise distinct (its bucket and its 1-bit flips) and each corpus
+    row has one bucket, so the re-rank needs no dedup."""
     planes = _hyperplanes(dim, n_planes, seed)
 
     def guarded_bucket(vec_col):
@@ -163,45 +236,23 @@ def lsh_topk(
             F.size(vec_col) == dim, hyperplane_bucket(vec_col, planes)
         )
 
-    # ensure_scan_width (round-12): the n_planes dot products per
-    # corpus row ran single-task on a narrow scan; no-op at scale
-    c = _prep(ensure_scan_width(corpus, id_col), id_col, vec_col).withColumn(
+    c = _corpus(corpus, id_col, vec_col).withColumn(
         "bucket", guarded_bucket(F.col("v"))
     )
-    q = (
-        _prep(queries, id_col, vec_col)
-        .select(
-            F.col("id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            guarded_bucket(F.col("v")).alias("qbucket"),
-        )
-    )
+    qbucket = F.col("qbucket")
     probes = F.array(
-        F.col("qbucket"),
+        qbucket,
         *[
-            F.col("qbucket").bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
+            qbucket.bitwiseXOR(F.shiftleft(F.lit(1).cast("long"), i))
             for i in range(n_planes)
         ],
     )
-    q = q.withColumn("bucket", F.explode(probes))
-    scored = (
-        c.join(F.broadcast(q.drop("qbucket")), on="bucket")
-        .filter(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "candidate_id"])
+    q = (
+        _queries(queries, id_col, vec_col)
+        .withColumn("qbucket", guarded_bucket(F.col("qv")))
+        .select("query_id", "qv", "qn", F.explode(probes).alias("bucket"))
     )
-    return top_k_per_group(
-        scored,
-        partition_keys=["query_id"],
-        order=[F.desc("cosine"), F.col("candidate_id")],
-        k=k,
-        rank_alias="rank",
-    )
+    return _rerank(c, q, k, on="bucket")
 
 
 def ivf_topk(
@@ -230,10 +281,7 @@ def ivf_topk(
     Recall < 1 when a true neighbor lives in an unprobed cell; raising
     ``n_probe`` trades scan cost for recall (n_probe == n_cells is
     exact brute force)."""
-    # ensure_scan_width (round-12): cell assignment is n_cells dot
-    # products per corpus row — single-task on a narrow scan (q44
-    # dropped ~27% with the guard); no-op at scale
-    c = _prep(ensure_scan_width(corpus, id_col), id_col, vec_col)
+    c = _corpus(corpus, id_col, vec_col)
     # Coarse quantizer: the n_cells lowest-id corpus vectors by RANK,
     # not by value predicate — a value filter (id < n_cells) silently
     # yields an empty/short centroid set for sparse, offset, or
@@ -261,7 +309,7 @@ def ivf_topk(
         )
     )
 
-    def cell_structs() -> Column:
+    def cell_structs(v: str, nrm: str) -> Column:
         # one (csim, ~cid) struct per centroid: struct ordering compares
         # s first then c, so max/descending-sort picks highest cosine
         # then LOWEST cid — exactly the (desc csim, asc cid) row_number
@@ -278,9 +326,7 @@ def ivf_topk(
             F.transform(
                 F.col("cents"),
                 lambda z: F.struct(
-                    F.round(
-                        dot("v", z["cv"]) / (F.col("nrm") * z["cn"]), 6
-                    ).alias("s"),
+                    F.round(dot(v, z["cv"]) / (F.col(nrm) * z["cn"]), 6).alias("s"),
                     F.bitwise_not(z["cid"]).alias("c"),
                 ),
             ),
@@ -300,43 +346,28 @@ def ivf_topk(
     cells = (
         c.join(F.broadcast(cent))
         .withColumn(
-            "cell", F.bitwise_not(F.array_max(cell_structs()).getField("c"))
+            "cell", F.bitwise_not(F.array_max(cell_structs("v", "nrm")).getField("c"))
         )
         .drop("cents")
     )
     probed = (
-        _prep(queries, id_col, vec_col)
+        _queries(queries, id_col, vec_col)
         .join(F.broadcast(cent))
         .select(
-            F.col("id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
+            "query_id",
+            "qv",
+            "qn",
             # explode drops queries when the centroid array is empty
             # (empty corpus) — the result is then empty by construction
             F.explode(
-                F.slice(F.reverse(F.array_sort(cell_structs())), 1, n_probe)
+                F.slice(F.reverse(F.array_sort(cell_structs("qv", "qn"))), 1, n_probe)
             ).alias("__p"),
         )
         .select(
             "query_id", "qv", "qn", F.bitwise_not(F.col("__p.c")).alias("cell")
         )
     )
-    scored = (
-        cells.join(F.broadcast(probed), on="cell")
-        .filter(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm", scale=6).alias("cosine"),
-        )
-    )
-    return top_k_per_group(
-        scored,
-        partition_keys=["query_id"],
-        order=[F.desc("cosine"), F.col("candidate_id")],
-        k=k,
-        rank_alias="rank",
-    )
+    return _rerank(cells, probed, k, on="cell")
 
 
 def embedding_near_dup_pairs(
@@ -434,24 +465,6 @@ def label_centroid_cohesion(
     )
 
 
-#: Euclidean training-domain norm ceiling for the k-means/PQ family
-#: (round-8 hazard class, found by the |x|=1e10 dirty probe): every
-#: engine-parity tie-break in this family stabilizes cross-engine float
-#: association noise by ROUNDING distances to 6 decimals — but
-#: ``round(x, 6)`` only collapses ulp noise while ``ulp(x) < 1e-6``,
-#: i.e. ``|x| < 2^52 · 1e-6 ≈ 4.5e9``. A finite huge-magnitude vector
-#: pushes squared distances past that envelope, the rounding grid
-#: becomes coarser than the ulp, engines rank-flip on surviving ulp
-#: differences, and the trained codebooks diverge (measured live:
-#: q180's err_ratio 1.01 vs 0.0 with one [1e10]*64 vector). Bounding
-#: the vector norm at 1e4 keeps every squared distance under ~4e8 —
-#: an order of magnitude inside the stabilizable envelope — and is
-#: mirrored verbatim in every family oracle. Real embedding norms are
-#: O(1-100); a 1e4-norm vector is outside any meaningful training
-#: corpus the same way a NaN is.
-EUCLID_NORM_BOUND = 1.0e4
-
-
 def kmeans_lloyd(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -484,14 +497,9 @@ def kmeans_lloyd(
     # EUCLID_NORM_BOUND): past it the 6-decimal tie-break stops
     # collapsing cross-engine float noise and codebooks diverge.
     v = as_double_array(vec_col)
-    clean = (
-        df.select(F.col(id_col), v.alias("__v"), l2_norm(v).alias("__nrm"))
-        .filter(
-            F.col("__nrm").isNotNull()
-            & ~F.isnan(F.col("__nrm"))
-            & (F.col("__nrm") < F.lit(EUCLID_NORM_BOUND))
-        )
-    )
+    clean = df.select(
+        F.col(id_col), v.alias("__v"), l2_norm(v).alias("__nrm")
+    ).filter(vector_domain(F.col("__nrm"), keep_zero=True, bound=EUCLID_NORM_BOUND))
     # persist the exploded relation: every iteration references it
     # TWICE (assignment join + centroid update), so an unpersisted
     # lineage re-scans and re-explodes the source 2x per iteration —
@@ -618,6 +626,30 @@ def _block_pairs(
     return a.join(b, (F.col("da") == F.col("db")) & (F.col("ba") <= F.col("bb")))
 
 
+def _block_cosines(row):
+    """The GEMM block kernel of the blocked all-pairs operators, run per
+    joined block pair inside their pandas workers. Returns the two
+    blocks' ids, the cosine matrix rounded at 6 decimals HALF AWAY FROM
+    ZERO (Spark's and DuckDB's round on doubles; ``np.round`` is
+    banker's, and ``np.floor(x*1e6+0.5)`` alone rounds negative
+    half-ties toward +inf), and the pair mask: on the diagonal block
+    only ``id_a < id_b`` keeps each unordered pair once, across blocks
+    every combination is already unique."""
+    import numpy as np
+
+    ids_a = np.asarray(row.ids_a)
+    ids_b = np.asarray(row.ids_b)
+    cos = (np.vstack(row.vs_a) @ np.vstack(row.vs_b).T) / np.outer(
+        np.asarray(row.ns_a), np.asarray(row.ns_b)
+    )
+    rounded = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
+    if row.ba == row.bb:
+        pair = ids_a[:, None] < ids_b[None, :]
+    else:
+        pair = np.ones(cos.shape, dtype=bool)
+    return ids_a, ids_b, rounded, pair
+
+
 def blocked_cosine_histogram(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -648,22 +680,8 @@ def blocked_cosine_histogram(
         for pdf in batches:
             counts: dict[int, int] = {}
             for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a)
-                ids_b = np.asarray(row.ids_b)
-                va = np.vstack(row.vs_a)
-                vb = np.vstack(row.vs_b)
-                cos = (va @ vb.T) / np.outer(np.asarray(row.ns_a), np.asarray(row.ns_b))
-                if row.ba == row.bb:
-                    keep = ids_a[:, None] < ids_b[None, :]
-                else:
-                    keep = np.ones_like(cos, dtype=bool)
-                # mirror F.round (HALF_UP = half away from zero) then
-                # floor into 0.1 buckets; np.floor(x*1e6+0.5) alone
-                # rounds half-ties toward +inf, which diverges from
-                # Spark for negative cosines exactly on a half-ulp
-                c = cos[keep]
-                rounded = np.sign(c) * np.floor(np.abs(c) * 1e6 + 0.5) / 1e6
-                vals = np.floor(rounded * 10)
+                _, _, rounded, pair = _block_cosines(row)
+                vals = np.floor(rounded[pair] * 10)
                 for bucket, cnt in zip(*np.unique(vals, return_counts=True)):
                     counts[int(bucket)] = counts.get(int(bucket), 0) + int(cnt)
             yield pd.DataFrame(
@@ -711,16 +729,8 @@ def cosine_pairs(
             out_b: list[int] = []
             out_c: list[float] = []
             for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a)
-                ids_b = np.asarray(row.ids_b)
-                va = np.vstack(row.vs_a)
-                vb = np.vstack(row.vs_b)
-                cos = (va @ vb.T) / np.outer(np.asarray(row.ns_a), np.asarray(row.ns_b))
-                # round half away from zero (Spark/DuckDB double semantics)
-                rounded = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-                keep = rounded >= threshold
-                if row.ba == row.bb:
-                    keep &= ids_a[:, None] < ids_b[None, :]
+                ids_a, ids_b, rounded, pair = _block_cosines(row)
+                keep = pair & (rounded >= threshold)
                 ia, ib = np.nonzero(keep)
                 if ia.size:
                     left = ids_a[ia]
@@ -736,11 +746,16 @@ def cosine_pairs(
     return pairs.mapInPandas(gemm, "id_a long, id_b long, cosine double")
 
 
+#: Row sample of :func:`sampled_cosine_histogram`: keep rows whose
+#: ``md5(id)`` first hex digit is below this one, i.e. p = 4/16 of the
+#: rows and p² = 1/16 of the pairs.
+_SAMPLE_HEX_LT = "4"
+
+
 def sampled_cosine_histogram(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_hex_lt: str = "4",
     n_blocks: int = 10,
 ) -> DataFrame:
     """Estimated all-pairs cosine histogram from a DETERMINISTIC row
@@ -752,35 +767,29 @@ def sampled_cosine_histogram(
     concentrate, where should the near-dup threshold sit?") only needs
     the DISTRIBUTION, which a uniform pair sample estimates with
     ±1/sqrt(count) relative error per bucket. So: keep rows whose
-    ``md5(id)`` first hex digit is < ``sample_hex_lt`` (rate p = h/16
-    for h = int(sample_hex_lt, 16) — content-addressed, layout- and
-    engine-invariant, replayable by the DuckDB oracle), run the exact
-    blocked histogram on the sample, and scale each bucket count by
-    1/p² (a pair survives iff both endpoints do, independently under
-    md5). ``est_pairs`` is an unbiased estimator of the exact bucket
-    count; relative CI half-width ≈ 1.96/sqrt(n_sampled) per bucket.
+    ``md5(id)`` first hex digit is < ``_SAMPLE_HEX_LT`` (rate p = 1/4 —
+    content-addressed, layout- and engine-invariant, replayable by the
+    DuckDB oracle), run the exact blocked histogram on the sample, and
+    scale each bucket count by 1/p² = 16 (a pair survives iff both
+    endpoints do, independently under md5). ``est_pairs`` is an
+    unbiased estimator of the exact bucket count; relative CI
+    half-width ≈ 1.96/sqrt(n_sampled) per bucket.
 
     When to use which at 100 TB: this sampled variant for threshold
-    profiling (cost O((pn)²) — p = 1/16 cuts the GEMM work 256×;
-    smaller p for bigger corpora); the exact variant only when every
-    pair is genuinely needed downstream, i.e. never at full corpus
-    scale — route exact pair enumeration through the LSH/banded
-    operators instead, which bound cost by collision structure.
+    profiling (cost O((pn)²) — the GEMM work falls 16×); the exact
+    variant only when every pair is genuinely needed downstream, i.e.
+    never at full corpus scale — route exact pair enumeration through
+    the LSH/banded operators instead, which bound cost by collision
+    structure.
     """
-    p_num = int(sample_hex_lt, 16)
-    inv_p2 = (16 * 16) // (p_num * p_num) if (16 % p_num == 0) else None
     sample = df.filter(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 1) < sample_hex_lt
+        F.substring(F.md5(F.col(id_col).cast("string")), 1, 1) < _SAMPLE_HEX_LT
     )
     hist = blocked_cosine_histogram(sample, id_col, vec_col, n_blocks)
-    if inv_p2 is not None:
-        est = (F.col("n_pairs") * F.lit(inv_p2)).cast("long")
-    else:
-        est = F.round(F.col("n_pairs") * F.lit(256.0 / (p_num * p_num))).cast("long")
     return hist.select(
         "bucket",
         F.col("n_pairs").alias("n_sampled"),
-        est.alias("est_pairs"),
+        (F.col("n_pairs") * F.lit(16)).cast("long").alias("est_pairs"),
     ).orderBy("bucket")
 
 
@@ -826,10 +835,10 @@ def pca_gram_moments(
     driver materialization anywhere — the result is a lazy ~d²/2-row
     DataFrame regardless of corpus size.
 
-    Domain: :func:`_prep` with ``keep_zero=True`` — UNDEFINED vectors
-    (NULL vector/element, NaN/Inf norm) are dropped, but zero vectors
-    are KEPT (round-9 advisor: zero is a defined moment input — it
-    shifts the mean and covariance exactly as MLlib RowMatrix would;
+    Domain: :func:`vector_domain` with ``keep_zero=True`` — UNDEFINED
+    vectors (NULL vector/element, NaN/Inf norm) are dropped, but zero
+    vectors are KEPT (round-9 advisor: zero is a defined moment input —
+    it shifts the mean and covariance exactly as MLlib RowMatrix would;
     only the cosine divide is undefined on it) — RESTRICTED to
     ``max(|x|) < 16`` (the moment-domain
     bound, enforced identically in the oracle). The bound is what keeps
@@ -848,65 +857,36 @@ def pca_gram_moments(
 
     S = float(1 << scale_bits)
 
-    def part(batches):
-        import pandas as pd
-
-        n = 0
-        s = None
-        g = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            if M.shape[1] != dim:
-                raise ValueError(
-                    f"pca_gram_moments: expected dim={dim}, got {M.shape[1]}"
-                )
-            for lo in range(0, len(M), 256):
-                B = M[lo : lo + 256]
-                gg = (
-                    np.floor(B[:, :, None] * B[:, None, :] * S)
-                    .astype(np.int64)
-                    .sum(axis=0)
-                )
-                ss = np.floor(B * S).astype(np.int64).sum(axis=0)
-                if s is None:
-                    s, g = ss, gg
-                else:
-                    s += ss
-                    g += gg
-                n += len(B)
-        if n:
-            yield pd.DataFrame(
-                {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
+    def quantized(M):
+        if M.shape[1] != dim:
+            raise ValueError(f"pca_gram_moments: expected dim={dim}, got {M.shape[1]}")
+        s = np.zeros(dim, dtype=np.int64)
+        g = np.zeros((dim, dim), dtype=np.int64)
+        for lo in range(0, len(M), 256):
+            B = M[lo : lo + 256]
+            g += (
+                np.floor(B[:, :, None] * B[:, None, :] * S).astype(np.int64).sum(axis=0)
             )
+            s += np.floor(B * S).astype(np.int64).sum(axis=0)
+        return s, g
 
-    parts = (
-        # ensure_scan_width (round-12): one fixed-size partial row per
-        # partition — a narrow scan ran the whole quantized-product
-        # pass through one task. Integer per-cell sums are associative,
-        # so the partial split cannot change any value (the docstring's
-        # quantization contract); re-verified against the oracle.
-        _prep(ensure_scan_width(emb, id_col), id_col, vec_col, keep_zero=True)
-        .filter(
-            # moment domain: |x| < 16 (integer-encoding exactness, see
-            # docstring) AND the declared dimension — a deviant-dim
-            # vector is not a d-dim moment input, and a ragged batch
-            # crashes np.stack (round-10 dimension probe: one 16-dim
-            # row in the 64-dim corpus). Enforced identically in the
-            # oracle; the in-worker dim ValueError stays as the
-            # defense-in-depth backstop for direct library callers.
-            (F.size("v") == F.lit(dim))
-            & (F.array_max(F.transform("v", lambda x: F.abs(x))) < F.lit(16.0))
-        )
-        .select("v")
-        .mapInPandas(part, schema="n bigint, s array<bigint>, g array<bigint>")
-        .persist()  # three branches read it; caller owns the lifetime
-    )
+    # moment domain: |x| < 16 (integer-encoding exactness, see
+    # docstring) AND the declared dimension — a deviant-dim vector is
+    # not a d-dim moment input, and a ragged batch crashes np.stack
+    # (round-10 dimension probe: one 16-dim row in the 64-dim corpus).
+    # Enforced identically in the oracle; the in-worker dim ValueError
+    # stays as the defense-in-depth backstop for direct library callers.
+    parts = _moment_partials(
+        emb,
+        vec_col,
+        (F.size("v") == F.lit(dim))
+        & (F.array_max(F.transform("v", lambda x: F.abs(x))) < F.lit(16.0)),
+        quantized,
+        "bigint",
+        id_col,
+    )  # three branches read it; caller owns the lifetime
     gram = (
-        parts.select(F.posexplode("g").alias("pos", "pv"))
-        .groupBy("pos")
-        .agg(F.sum("pv").alias("val"))
+        _positional_sums(parts, "g")
         .select(
             F.expr(f"CAST(pos DIV {dim} AS INT)").alias("i"),
             F.expr(f"CAST(pos % {dim} AS INT)").alias("j"),
@@ -914,11 +894,8 @@ def pca_gram_moments(
         )
         .filter(F.col("i") <= F.col("j"))
     )
-    sums = (
-        parts.select(F.posexplode("s").alias("pos", "pv"))
-        .groupBy("pos")
-        .agg(F.sum("pv").alias("val"))
-        .select(F.col("pos").cast("int").alias("i"), F.lit(-1).alias("j"), "val")
+    sums = _positional_sums(parts, "s").select(
+        F.col("pos").cast("int").alias("i"), F.lit(-1).alias("j"), "val"
     )
     cnt = parts.agg(
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("val")
@@ -926,6 +903,73 @@ def pca_gram_moments(
         F.lit(-1).cast("int").alias("i"), F.lit(-1).cast("int").alias("j"), "val"
     )
     return gram.unionByName(sums).unionByName(cnt).orderBy("i", "j")
+
+
+def _moment_partials(
+    emb: DataFrame,
+    vec_col: str,
+    in_domain: Column,
+    moments: Callable,
+    elem: str,
+    *keys: str,
+) -> DataFrame:
+    """The per-partition moment accumulator of both PCA operators: one
+    ``(n, s, g)`` row per non-empty partition — the row count, the
+    coordinate sums and the flattened d×d second moments of its vectors.
+    ``moments(M)`` maps one Arrow batch's (rows × d) float64 matrix to
+    its ``(s, g)`` contribution (numpy arrays of the ``elem`` SQL
+    type); the accumulator adds them up. Input: the vectors of
+    :func:`vector_domain` with ``keep_zero=True`` that satisfy
+    ``in_domain`` (over the ``v`` column). Persisted: several reductions
+    read it, and without the cache each re-runs the whole pass (the
+    caller owns its lifetime).
+
+    ensure_scan_width (round-12): the pass is one numpy accumulation per
+    input partition — a narrow scan ran the whole corpus through one
+    task. Widening only multiplies the partial rows, which
+    :func:`_positional_sums` absorbs. ``keys`` is the hash key of the
+    widening; without one it is round-robin, which
+    spark.sql.execution.sortBeforeRepartition (on by default) keeps
+    retry-deterministic."""
+    v = as_double_array(vec_col)
+
+    def part(batches):
+        import numpy as np
+        import pandas as pd
+
+        n, s, g = 0, None, None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            ss, gg = moments(M)
+            s, g = (ss, gg) if s is None else (s + ss, g + gg)
+            n += len(M)
+        if n:
+            yield pd.DataFrame(
+                {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
+            )
+
+    return (
+        ensure_scan_width(emb, *keys)
+        .select(v.alias("v"), l2_norm(v).alias("nrm"))
+        .filter(vector_domain(F.col("nrm"), keep_zero=True) & in_domain)
+        .select("v")
+        .mapInPandas(part, schema=f"n bigint, s array<{elem}>, g array<{elem}>")
+        .persist()
+    )
+
+
+def _positional_sums(parts: DataFrame, col: str) -> DataFrame:
+    """``(pos, val)``: the element-wise sum of the array column ``col``
+    over all partial rows, reduced inside Spark by posexplode +
+    groupBy-position (the partial relation is <= numPartitions rows —
+    trivially small)."""
+    return (
+        parts.select(F.posexplode(col).alias("pos", "pv"))
+        .groupBy("pos")
+        .agg(F.sum("pv").alias("val"))
+    )
 
 
 def pca_variance_profile(
@@ -952,13 +996,13 @@ def pca_variance_profile(
     tests/test_ordered.py.
 
     Domain (round-8 robustness fix, round-9 zero-vector correction):
-    the input routes through :func:`_prep` with ``keep_zero=True`` —
-    ONE NULL embedding (or a NULL/NaN element) used to crash the whole
-    distributed pass inside ``np.stack``/BLAS, the "one dirty row kills
-    a 100 TB job" class; an undefined vector cannot contribute to a
-    covariance. Zero vectors are KEPT: unlike a cosine, a covariance is
-    perfectly defined on them (they shift the mean), matching MLlib
-    RowMatrix semantics. Clean corpora are unaffected either way.
+    :func:`vector_domain` with ``keep_zero=True`` — ONE NULL embedding
+    (or a NULL/NaN element) used to crash the whole distributed pass
+    inside ``np.stack``/BLAS, the "one dirty row kills a 100 TB job"
+    class; an undefined vector cannot contribute to a covariance. Zero
+    vectors are KEPT: unlike a cosine, a covariance is perfectly defined
+    on them (they shift the mean), matching MLlib RowMatrix semantics.
+    Clean corpora are unaffected either way.
 
     ``dim`` (when given) pins the corpus's vector space: a vector of
     any OTHER length (including the empty array ``[]``) is not an
@@ -974,81 +1018,32 @@ def pca_variance_profile(
     """
     import numpy as np
 
-    def part(batches):
-        import pandas as pd
-
-        n = 0
-        s = None
-        g = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if s is None:
-                s = M.sum(axis=0)
-                g = M.T @ M
-            else:
-                s += M.sum(axis=0)
-                g += M.T @ M
-            n += len(M)
-        if n:
-            yield pd.DataFrame(
-                {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
-            )
-
-    # persist: three actions (n, s, g) read this relation, and without
-    # the cache each one re-runs the full distributed mean+Gram pass
-    # over the corpus (advisor finding, round 2)
-    parts = (
-        _prep(
-            # ensure_scan_width (round-12): the mean+Gram pass is one
-            # numpy accumulation per input partition — a narrow scan ran
-            # the whole corpus through one task. Widening multiplies the
-            # partial rows (one per partition), which the posexplode
-            # reduction absorbs. Keyless (round-robin) on purpose: this
-            # operator takes no id column; sortBeforeRepartition (on by
-            # default) keeps the assignment retry-deterministic.
-            ensure_scan_width(emb).withColumn(
-                "__row_id", F.monotonically_increasing_id()
-            ),
-            "__row_id",
-            vec_col,
-            keep_zero=True,
-        )
-        .filter(F.size("v") == dim if dim is not None else F.lit(True))
-        .select(F.col("v").alias(vec_col))
-        .mapInPandas(part, schema="n bigint, s array<double>, g array<double>")
-        .persist()
+    parts = _moment_partials(
+        emb,
+        vec_col,
+        F.size("v") == dim if dim is not None else F.lit(True),
+        lambda M: (M.sum(axis=0), M.T @ M),
+        "double",
     )
-    # reduce the per-partition partials to ONE row inside Spark: counts
-    # as a plain sum, the two arrays element-wise via posexplode (the
-    # partial relation is <= numPartitions rows — trivially small)
-    summed = (
-        parts.select("n", F.posexplode("g").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("v"))
-    )
-    svec = (
-        parts.select(F.posexplode("s").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("v"))
-    )
-    n_total = parts.agg(F.sum("n").alias("n"))
 
     # the ONLY driver materialization: one d² + one d + one scalar row —
     # fixed-size final aggregates (see docstring). try/finally so a
     # failing collect can't leak the persisted partials in a long-lived
     # session (round-3 advisor finding).
     try:
-        n = n_total.first()["n"]
+        n = parts.agg(F.sum("n").alias("n")).first()["n"]
         if not n:
             raise ValueError(
                 "pca_variance_profile: input relation has no rows with a "
                 f"non-null '{vec_col}' — covariance is undefined on an "
                 "empty corpus"
             )
-        s = np.array([r["v"] for r in svec.orderBy("pos").collect()])
-        g_flat = np.array([r["v"] for r in summed.orderBy("pos").collect()])
+        s, g_flat = (
+            np.array(
+                [r["val"] for r in _positional_sums(parts, c).orderBy("pos").collect()]
+            )
+            for c in ("s", "g")
+        )
     finally:
         parts.unpersist()
     d = s.shape[0]
@@ -1108,7 +1103,6 @@ def pq_encode(
     # (wave-5 Inf-probe finding). The EUCLID_NORM_BOUND ceiling is the
     # round-8 ulp-vs-rounding-grid bound; applied to the FULL norm so
     # every slice inherits it.
-    full = as_double_array(vec_col)
     # persist the domain-filtered vectors: all m subspace slices read
     # the same relation — unpersisted, each slice re-derives the whole
     # upstream (for residual inputs that is the entire coarse-assign
@@ -1118,12 +1112,9 @@ def pq_encode(
     # narrow scan every slice's whole pipeline was single-task. This is
     # the one place to widen: kmeans_lloyd's guard sees a cache read
     # and leaves each slice at the width chosen here.
+    nrm = l2_norm(as_double_array(vec_col))
     df = ensure_scan_width(
-        df.filter(
-            l2_norm(full).isNotNull()
-            & ~F.isnan(l2_norm(full))
-            & (l2_norm(full) < F.lit(EUCLID_NORM_BOUND))
-        ),
+        df.filter(vector_domain(nrm, keep_zero=True, bound=EUCLID_NORM_BOUND)),
         id_col,
     ).persist()
     parts = []
@@ -1173,8 +1164,6 @@ def pq_adc_topk(
     per vector), never the float vectors, which is the entire point of
     PQ: at 100 TB the corpus-side state is ~1% of raw embeddings and the
     search is a broadcast join + keyed sum."""
-    from pyspark.sql.window import Window
-
     codes = pq_encode(df, id_col, vec_col, m, sub_dim, k, iterations).persist()
     e = df.select(
         F.col(id_col), F.posexplode(as_double_array(vec_col)).alias("pos", "val")
@@ -1202,11 +1191,9 @@ def pq_adc_topk(
         .agg(F.sum("qd2").alias("adc_dist2"))
         .filter(F.col("qid") != F.col(id_col))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.round("adc_dist2", 6).asc(), F.col(id_col).asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top)
-        .select("qid", "rank", F.col(id_col), F.round("adc_dist2", 4).alias("adc_dist2"))
-    )
+    return top_k_per_group(
+        adc,
+        partition_keys=["qid"],
+        order=[F.round("adc_dist2", 6).asc(), F.col(id_col).asc()],
+        k=top,
+    ).select("qid", "rank", F.col(id_col), F.round("adc_dist2", 4).alias("adc_dist2"))

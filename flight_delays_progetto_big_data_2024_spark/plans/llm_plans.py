@@ -390,7 +390,7 @@ def q188_hll_error_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key_col")
 
 
-#: Mirror of similarity._prep's defined-cosine subspace: NULL vectors
+#: Mirror of similarity.vector_domain's cosine domain: NULL vectors
 #: and vectors with NULL elements are dropped BEFORE the dot product
 #: (DuckDB list_inner_product hard-errors on NULL elements where Spark
 #: aggregate() yields NULL), then zero/NaN/Inf norms are dropped —
@@ -416,7 +416,7 @@ _EMB_PREP_SQL = """
 #: Moment-domain variant (PCA/q187): identical to _EMB_PREP_SQL except
 #: zero-norm vectors are KEPT — zero is a defined input to mean/Gram
 #: moments (it shifts them, MLlib RowMatrix semantics); only the cosine
-#: divide is undefined on it. Mirrors similarity._prep(keep_zero=True).
+#: divide is undefined on it. Mirrors vector_domain(keep_zero=True).
 _EMB_MOMENT_PREP_SQL = _EMB_PREP_SQL.replace(
     "isfinite(nrm) AND nrm > 0", "isfinite(nrm) AND nrm >= 0"
 )
@@ -4127,63 +4127,30 @@ def q172_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the high-similarity wrong-class examples a triplet/contrastive loss
     needs. The label filter applies BEFORE ranking (exclude-then-top-k,
     not top-k-then-filter, which under-delivers negatives near label
-    clusters); search is the broadcast-anchors × one-corpus-pass shape
-    of cosine_topk with the label anti-predicate pushed into the join.
-    Per-label counts and negative-similarity stats are value-checked."""
+    clusters); search is cosine_topk's shared re-rank with the label
+    anti-predicate as its candidate condition, so it stays one
+    broadcast-anchors × corpus pass. Per-label counts and
+    negative-similarity stats are value-checked."""
     from flight_delays_progetto_big_data_2024_spark.operators.similarity import (
-        _prep,
-        cosine_prenormed,
+        _corpus,
+        _queries,
+        _rerank,
     )
-    from pyspark.sql.window import Window as W
 
-    cat = Catalog(spark, sf_dir)
-    emb = cat.embeddings
+    emb = Catalog(spark, sf_dir).embeddings
     labels = emb.select("vec_id", "label")
-    # ensure_scan_width (round-12): |anchors| dot products per corpus
-    # row ran single-task on the narrow scan (3.5s -> 1.2s at sf0.1);
-    # no-op at scale — same guard as cosine_topk's corpus side
-    c = _prep(ensure_scan_width(emb, "vec_id"), "vec_id", "embedding").join(
+    c = _corpus(emb, "vec_id", "embedding").join(
         labels.select(F.col("vec_id").alias("id"), F.col("label").alias("c_label")),
         "id",
     )
-    q = (
-        _prep(emb.filter(F.col("vec_id") % 20 == 0), "vec_id", "embedding")
-        .join(
-            labels.select(
-                F.col("vec_id").alias("id"), F.col("label").alias("q_label")
-            ),
-            "id",
-        )
-        .select(
-            F.col("id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            "q_label",
-        )
+    q = _queries(emb.filter(F.col("vec_id") % 20 == 0), "vec_id", "embedding").join(
+        labels.select(
+            F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
+        ),
+        "query_id",
     )
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("id") != F.col("query_id"))
-            & (F.col("c_label") != F.col("q_label")),
-        )
-        .select(
-            "query_id",
-            "q_label",
-            F.col("id").alias("candidate_id"),
-            cosine_prenormed("qv", "v", "qn", "nrm").alias("cosine"),
-        )
-        # pair-level dimension domain (round-10 probe): a cross-dim
-        # pair's cosine is NULL (zip_with pads) — desc sorts NULLs
-        # LAST, so junk rows still took rank 2-3 whenever a query had
-        # fewer than k same-dim negatives, inflating count(*) in the
-        # average's denominator (the oracle's len-equality join never
-        # produces them). NULL cannot be ranked — wave-5 rule.
-        .filter(F.col("cosine").isNotNull())
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("candidate_id"))
-    topk = scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= 3
+    topk = _rerank(
+        c, q, 3, on=F.col("c_label") != F.col("q_label"), carry=["q_label"]
     )
     return (
         topk.groupBy(F.col("q_label").alias("label"))

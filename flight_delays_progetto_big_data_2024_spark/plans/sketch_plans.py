@@ -1028,6 +1028,7 @@ def q180_residual_quantization_gain(spark: SparkSession, sf_dir: str) -> DataFra
         as_double_array,
         l2_norm,
         pq_encode,
+        vector_domain,
     )
 
     cat = Catalog(spark, sf_dir)
@@ -1036,7 +1037,6 @@ def q180_residual_quantization_gain(spark: SparkSession, sf_dir: str) -> DataFra
     # residual relation is born in-domain — pq_encode re-applies the
     # same filter, but a huge-magnitude vector must not reach the
     # coarse assignment either (its oracle mirrors this WHERE)
-    v = as_double_array("embedding")
     # domain: PQ's Euclidean rules (finite, under the round-8 norm
     # ceiling) PLUS nrm > 0 — the coarse stage is a COSINE assignment,
     # undefined on a zero vector (round-9: the planted zero-vector
@@ -1044,10 +1044,7 @@ def q180_residual_quantization_gain(spark: SparkSession, sf_dir: str) -> DataFra
     # silently parked the row in the lowest cell; no coarse cell ⇒
     # outside the residual pipeline, both engines)
     emb = cat.embeddings.filter(
-        l2_norm(v).isNotNull()
-        & ~F.isnan(l2_norm(v))
-        & (l2_norm(v) < F.lit(EUCLID_NORM_BOUND))
-        & (l2_norm(v) > 0)
+        vector_domain(l2_norm(as_double_array("embedding")), bound=EUCLID_NORM_BOUND)
     )
     e = emb.select(
         "vec_id", F.posexplode(as_double_array("embedding")).alias("pos0", "val")

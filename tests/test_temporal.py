@@ -10,7 +10,11 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from flight_delays_progetto_big_data_2024_spark.operators.similarity import ivf_topk
+from flight_delays_progetto_big_data_2024_spark.operators.similarity import (
+    cosine_topk,
+    ivf_topk,
+    lsh_topk,
+)
 from flight_delays_progetto_big_data_2024_spark.operators.temporal import (
     asof_join,
     session_windows,
@@ -95,19 +99,38 @@ def test_asof_join_carries_right_timestamp(spark):
     assert row["ts_right"] == _ts(11) and row["value_right"] == 5.0
 
 
-def test_ivf_topk_probe_all_cells_is_exact(spark):
-    from flight_delays_progetto_big_data_2024_spark.operators.similarity import (
-        cosine_topk,
-    )
+@pytest.mark.parametrize(
+    "search",
+    [
+        # n_probe == n_cells degenerates to brute force
+        pytest.param(
+            lambda emb, q: ivf_topk(emb, q, k=3, n_cells=8, n_probe=8),
+            id="ivf_topk",
+        ),
+        # one plane: a query's bucket and its 1-bit flip are both buckets
+        pytest.param(
+            lambda emb, q: lsh_topk(emb, q, k=3, n_planes=1), id="lsh_topk"
+        ),
+    ],
+)
+def test_ivf_topk_probe_all_cells_is_exact(spark, search):
+    """A search path that probes every candidate cell or bucket returns
+    exactly cosine_topk's ranking: same candidate and same score at
+    every (query, rank)."""
     from flight_delays_progetto_big_data_2024_spark.sources.readers import Catalog
 
     emb = Catalog(spark, _SF).embeddings
     q = emb.filter(F.col("vec_id") < 3)
-    exact = {(r["query_id"], r["rank"]): r["candidate_id"]
-             for r in cosine_topk(emb, q, k=3).collect()}
-    ivf_all = {(r["query_id"], r["rank"]): r["candidate_id"]
-               for r in ivf_topk(emb, q, k=3, n_cells=8, n_probe=8).collect()}
-    assert ivf_all == exact  # n_probe == n_cells degenerates to brute force
+
+    def ranked(df):
+        return {
+            (r["query_id"], r["rank"]): (r["candidate_id"], r["cosine"])
+            for r in df.collect()
+        }
+
+    exact = ranked(cosine_topk(emb, q, k=3))
+    assert len(exact) == 9
+    assert ranked(search(emb, q)) == exact
 
 
 def test_sessionize_stream_closes_on_gap_and_timeout(spark, tmp_path):
