@@ -14,7 +14,11 @@ the SQL executions one build plus one write adds (the most any pass
 saw): 1 means the builder launched no hidden action. ``build_jobs``
 counts, per query, the Spark jobs launched while the query is built
 (the most any pass saw), through a per-build job group: it also sees
-jobs that run outside any SQL execution.
+jobs that run outside any SQL execution. ``compiles`` counts, per
+query, the classes Janino compiled during one build plus one write (the
+most any pass after the first saw; null with ``--passes 1``): above 0,
+the query's generated code changes from run to run, or the session's
+codegen cache is too small to hold a pass.
 
 Usage::
 
@@ -41,6 +45,7 @@ def main() -> int:
 
     from flight_delays_progetto_big_data_2024_spark.plans import registry
     from flight_delays_progetto_big_data_2024_spark.session import (
+        codegen_compiles,
         get_spark,
         last_sql_execution_id,
         release_caches,
@@ -68,18 +73,23 @@ def main() -> int:
     samples: dict[str, list[float]] = {n: [] for n in names}
     executions: dict[str, int] = dict.fromkeys(names, 0)
     build_jobs: dict[str, int] = dict.fromkeys(names, 0)
+    compiles: dict[str, int | None] = dict.fromkeys(names)
     for p in range(args.passes):
         for name in names:
             fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
             group = f"noop-build-{p}-{name}"
             sc.setJobGroup(group, f"noop: {name}")
             before = last_sql_execution_id(spark)
+            compiled_before = codegen_compiles(spark)
             start = time.perf_counter()
             df = fn(spark, sf_dir)
             # the write's jobs stay out of the build's group
             sc.setLocalProperty("spark.jobGroup.id", None)
             df.write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - start, 3))
+            if p:
+                compiled = codegen_compiles(spark) - compiled_before
+                compiles[name] = max(compiles[name] or 0, compiled)
             # last_sql_execution_id drains the listener bus, so the
             # status tracker has seen every job the build started
             executions[name] = max(
@@ -106,6 +116,7 @@ def main() -> int:
                 "samples": samples,
                 "sql_executions": executions,
                 "build_jobs": build_jobs,
+                "compiles": compiles,
             }
         )
     )
