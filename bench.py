@@ -70,6 +70,7 @@ Policies (rounds 3-10):
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -78,6 +79,7 @@ import shutil
 import sys
 import tempfile
 import time
+from collections.abc import Iterator
 
 #: Headline set: one per operator family — core join+agg shapes, window
 #: top-k, graph (PageRank/triangles), dedup (exact/Jaccard/MinHash/
@@ -472,36 +474,33 @@ def _driver_json_line(
     return line
 
 
-def _executor_task_time_ms(spark) -> int | None:
-    """Cumulative executor run time (ms) over all stages so far, read
-    from the driver's AppStatusStore (available with the UI disabled).
-    Monotone within a session — the caller diffs readings taken before
-    and after a query to get that query's total task time.
+@contextlib.contextmanager
+def _observed(spark, name: str, columns: dict[str, dict[str, list]]) -> Iterator:
+    """Scope one sample with ``observe`` and append its executor run
+    time to ``columns["task_time_ms"][name]`` and its executor CPU time
+    to ``columns["task_cpu_ms"][name]``. A sample whose jobs or stages
+    the status store already dropped records None in both."""
+    from flight_delays_progetto_big_data_2024_spark.observe import (
+        StatusEvicted,
+        observe,
+    )
 
-    WHY (round-12 judge item 3): at sf0.1, 20 of 21 headline queries
-    run no faster on 32 cores than on 8 (BENCH_r12_c8.json) — their
-    wall clock is scheduling/overhead-bound, so round-over-round wall
-    deltas are mostly box drift. Task time sums the actual executor
-    compute across all cores, which IS the CPU-signal the optimization
-    rounds target; it rides the samples artifact as an additional
-    column, never the driver stdout line. Guarded: if the internal
-    status-store accessor moves, the bench degrades to wall-clock-only
-    instead of failing."""
     try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        gw = sc._gateway
-        empty = gw.jvm.java.util.ArrayList()
-        no_quantiles = gw.new_array(gw.jvm.double, 0)
-        # Spark 4 signature: stageList(statuses, details, withSummaries,
-        # unsortedQuantiles, taskStatus)
-        it = store.stageList(empty, False, False, no_quantiles, empty).iterator()
-        total = 0
-        while it.hasNext():
-            total += it.next().executorRunTime()
-        return int(total)
-    except Exception:  # pragma: no cover - JVM-internal rename guard
-        return None
+        with observe(spark) as rec:
+            yield rec
+        run_ms, cpu_ms = rec.task_run_ms, rec.task_cpu_ms
+    except StatusEvicted:
+        run_ms = cpu_ms = None
+    columns["task_time_ms"].setdefault(name, []).append(run_ms)
+    columns["task_cpu_ms"].setdefault(name, []).append(cpu_ms)
+
+
+def _medians_ms(column: dict[str, list[int | None]]) -> dict[str, float]:
+    return {
+        n: _lower_median([v for v in s if v is not None])
+        for n, s in column.items()
+        if any(v is not None for v in s)
+    }
 
 
 def _unload_state_stores(spark) -> None:
@@ -526,7 +525,7 @@ def _unload_state_stores(spark) -> None:
         pass
 
 
-def _streaming_runners(spark, sf_dir: str, tmp: str, task_times=None):
+def _streaming_runners(spark, sf_dir: str, tmp: str, columns):
     """(name, run) pairs that wall-time the streaming family as it
     actually runs: availableNow micro-batch over a file-source drop
     directory with a checkpoint, writing to the noop sink (tumbling +
@@ -556,33 +555,27 @@ def _streaming_runners(spark, sf_dir: str, tmp: str, task_times=None):
 
     def make_runner(name, build, mode):
         def run(sample_idx: int) -> float:
-            tt_before = _executor_task_time_ms(spark)
-            start = time.perf_counter()
-            stream = read_event_stream(spark, src, raw_schema, ts_is_nanos_long=True)
-            query = (
-                build(stream)
-                .writeStream.format("noop")
-                .outputMode(mode)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(tmp, f"{name}_ckpt_{sample_idx}"),
+            with _observed(spark, name, columns) as rec:
+                start = time.perf_counter()
+                stream = read_event_stream(spark, src, raw_schema, ts_is_nanos_long=True)
+                query = (
+                    build(stream)
+                    .writeStream.format("noop")
+                    .outputMode(mode)
+                    .option(
+                        "checkpointLocation",
+                        os.path.join(tmp, f"{name}_ckpt_{sample_idx}"),
+                    )
+                    .trigger(availableNow=True)
+                    .start()
                 )
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = query.awaitTermination(600)
-            elapsed = time.perf_counter() - start
-            tt_after = _executor_task_time_ms(spark)
-            if task_times is not None:
-                task_times.setdefault(name, []).append(
-                    tt_after - tt_before
-                    if tt_before is not None and tt_after is not None
-                    and tt_after >= tt_before
-                    else None
-                )
-            if not finished:
-                query.stop()
-                print(f"WARNING: {name} hit the 600s cap", file=sys.stderr)
+                # micro-batch jobs run under the stream's run id
+                rec.add_group(query.runId)
+                finished = query.awaitTermination(600)
+                elapsed = time.perf_counter() - start
+                if not finished:
+                    query.stop()
+                    print(f"WARNING: {name} hit the 600s cap", file=sys.stderr)
             # keep samples independent: drop this run's state-store
             # providers so they can't GC-pressure the next sample
             _unload_state_stores(spark)
@@ -617,16 +610,7 @@ def main() -> int:
     from flight_delays_progetto_big_data_2024_spark.plans import registry
     from flight_delays_progetto_big_data_2024_spark.session import get_spark
 
-    # retainedStages must outlast the whole run for the task-time
-    # column: _executor_task_time_ms diffs a CUMULATIVE stage total,
-    # and the default 1000-stage eviction would silently subtract old
-    # stages from later readings (a bench run executes ~10k stages).
-    # Timing-neutral: the status listener runs either way.
-    spark = get_spark(
-        "flight-delays-spark-bench",
-        cpus=cpus,
-        extra_conf={"spark.ui.retainedStages": "100000"},
-    )
+    spark = get_spark("flight-delays-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     # untimed warm-up: JVM JIT, parquet footer reads + file listings for
@@ -651,27 +635,19 @@ def main() -> int:
 
     from flight_delays_progetto_big_data_2024_spark.session import release_caches
 
-    # per-sample executor task-time deltas (round-12 judge item 3: the
-    # CPU-signal column wall clock can't provide at sf0.1) — a side
-    # table the runners fill, committed in the samples artifact only
-    task_times: dict[str, list[int | None]] = {}
+    # per-sample executor run and CPU time, committed in the samples
+    # artifact only (the stdout line keeps its shape)
+    columns: dict[str, dict[str, list[int | None]]] = {
+        "task_time_ms": {},
+        "task_cpu_ms": {},
+    }
 
     def make_batch_runner(name, fn):
         def run(sample_idx: int) -> float:
-            tt_before = _executor_task_time_ms(spark)
-            start = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            elapsed = time.perf_counter() - start
-            tt_after = _executor_task_time_ms(spark)
-            task_times.setdefault(name, []).append(
-                tt_after - tt_before
-                # a negative diff means stage eviction outran retention
-                # (see the retainedStages note in main) — record the
-                # unknown rather than a corrupt number
-                if tt_before is not None and tt_after is not None
-                and tt_after >= tt_before
-                else None
-            )
+            with _observed(spark, name, columns):
+                start = time.perf_counter()
+                fn(spark, sf_dir).collect()
+                elapsed = time.perf_counter() - start
             # caller-owned cache lifetime (see session.release_caches):
             # drop this run's persisted blocks so they can't skew the
             # next sample or the next query
@@ -685,7 +661,7 @@ def main() -> int:
         runners = [
             (name, make_batch_runner(name, BENCH_OVERRIDES.get(name, registry.QUERIES[name])))
             for name in HEADLINE
-        ] + _streaming_runners(spark, sf_dir, tmp, task_times)
+        ] + _streaming_runners(spark, sf_dir, tmp, columns)
         all_samples, loads = _collect_interleaved(runners)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -743,19 +719,15 @@ def main() -> int:
                 "loadavg_per_pass": loads,
                 "load_contamination_threshold": cores
                 * LOAD_CONTAMINATION_FACTOR,
-                # CPU-signal column (round-12 judge item 3): total
-                # executor task time per sample, diffed from the
-                # AppStatusStore around each run. Wall clock at
-                # sf0.1 is scheduling-bound (8-core ≈ 32-core on
-                # 20/21 queries); task time is the cross-round
-                # comparator that actually moves with plan work.
-                # None = status store unavailable that sample.
-                "task_time_ms": task_times,
-                "task_time_medians_ms": {
-                    n: _lower_median([v for v in s if v is not None])
-                    for n, s in task_times.items()
-                    if any(v is not None for v in s)
-                },
+                # CPU-signal columns, per sample from the sample's
+                # observe() scope: executor run time (kept for
+                # cross-round comparison; it grows with the core count
+                # at the same wall clock) and executor CPU time (the
+                # work). None = the status store had already dropped
+                # that sample's jobs or stages.
+                **columns,
+                "task_time_medians_ms": _medians_ms(columns["task_time_ms"]),
+                "task_cpu_medians_ms": _medians_ms(columns["task_cpu_ms"]),
             },
         )
     except OSError as exc:

@@ -26,8 +26,7 @@ partitioning, no Arrow. This factory turns those on by default:
   its queries in a cycle, so nearly every lookup missed and every warm
   pass recompiled its classes with Janino, which the JIT then compiled
   again. The conf is static: it binds only when set before the JVM's
-  first codegen, which is why :func:`codegen_compiles` (what Janino
-  compiled, not the conf read back) is what the tests pin.
+  first codegen.
 """
 
 from __future__ import annotations
@@ -139,25 +138,3 @@ def release_caches(spark: SparkSession) -> int:
     for rdd in rdds:
         rdd.unpersist(False)
     return len(rdds)
-
-
-def last_sql_execution_id(spark: SparkSession) -> int:
-    """Id of the newest SQL execution (-1 before the first), read from
-    the SQL status store once the listener bus has drained. Ids count up
-    by one per execution, and retention evicts only the oldest, so the
-    difference of two readings is the number of executions started in
-    between — the check that a query build launched no hidden action."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    recent = store.executionsList(max(store.executionsCount() - 3, 0), 3)
-    return recent.last().executionId() if recent.size() else -1
-
-
-def codegen_compiles(spark: SparkSession) -> int:
-    """Number of classes Janino has compiled in this JVM so far (Spark's
-    ``CodegenMetrics`` compilation-time histogram counts one sample per
-    compile; cache hits add none). The difference of two readings is the
-    number of compiles in between, so a warm pass that adds 0 reused
-    every generated class from the codegen cache."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()

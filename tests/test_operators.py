@@ -546,7 +546,7 @@ def test_scan_width_guard_widens_scans_only(spark, tmp_path):
     from flight_delays_progetto_big_data_2024_spark.sources.readers import (
         ensure_scan_width,
     )
-    from tests.job_groups import job_group, jobs_in_group
+    from flight_delays_progetto_big_data_2024_spark.observe import observe
 
     slots = spark.sparkContext.defaultParallelism
     narrow_path = str(tmp_path / "narrow")
@@ -555,10 +555,9 @@ def test_scan_width_guard_widens_scans_only(spark, tmp_path):
     spark.range(64).repartition(slots).write.parquet(wide_path)
 
     def guarded(df, *keys):
-        group = f"width-guard-{id(df)}"
-        with job_group(spark, group):
+        with observe(spark) as rec:
             out = ensure_scan_width(df, *keys)
-        assert jobs_in_group(spark, group) == 0
+        assert rec.jobs == 0
         return out
 
     scan = spark.read.parquet(narrow_path)

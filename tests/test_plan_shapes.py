@@ -11,6 +11,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from flight_delays_progetto_big_data_2024_spark.graph import algorithms
+from flight_delays_progetto_big_data_2024_spark.observe import observe
 from flight_delays_progetto_big_data_2024_spark.operators import similarity
 from flight_delays_progetto_big_data_2024_spark.plans import registry
 from flight_delays_progetto_big_data_2024_spark.sources.readers import Catalog
@@ -319,17 +320,15 @@ BUILD_JOB_OPERATORS = (
 )
 
 
-def _run_build_job_operators_apart(spark, monkeypatch, group: str) -> None:
+def _run_build_job_operators_apart(spark, monkeypatch) -> None:
     """Rebind every BUILD_JOB_OPERATORS function, wherever a package
-    module bound it, to a wrapper that runs it under ``group``: its jobs
-    then stay out of the calling query's build group."""
+    module bound it, to a wrapper that runs it in a nested observe
+    scope: its jobs then stay out of the calling query's build record."""
     import sys
-
-    from tests.job_groups import job_group
 
     def apart(fn):
         def run(*args, **kwargs):
-            with job_group(spark, group):
+            with observe(spark):
                 return fn(*args, **kwargs)
 
         return run
@@ -352,8 +351,8 @@ def test_no_query_plans_cartesian_or_rowwise_python(spark, monkeypatch):
       enters plans through Arrow (ArrowEvalPython / MapInPandas /
       FlatMapGroupsInPandas);
     - building the query launches no Spark job outside the
-      BUILD_JOB_OPERATORS, which run under a job group of their own. A
-      query's build is counted through a job group per build, after
+      BUILD_JOB_OPERATORS, which run in an observe scope of their own. A
+      query's build is counted by an observe scope per build, after
       every table is loaded (a first ``spark.read.parquet`` runs a
       schema job that is not the builder's).
 
@@ -369,22 +368,19 @@ def test_no_query_plans_cartesian_or_rowwise_python(spark, monkeypatch):
     from flight_delays_progetto_big_data_2024_spark.sources.readers import (
         TESTDATA_TABLES,
     )
-    from tests.job_groups import job_group, jobs_in_group
 
     catalog = Catalog(spark, SF)
     for table in TESTDATA_TABLES:
         catalog.table(table)
-    _run_build_job_operators_apart(spark, monkeypatch, "build-job-operators")
+    _run_build_job_operators_apart(spark, monkeypatch)
     offenders = {}
     build_jobs = {}
     try:
         for name, fn in registry.QUERIES.items():
-            group = f"build-{name}"
-            with job_group(spark, group):
+            with observe(spark) as built:
                 df = fn(spark, SF)
-            jobs = jobs_in_group(spark, group)
-            if jobs:
-                build_jobs[name] = jobs
+            if built.jobs:
+                build_jobs[name] = built.jobs
             plan = _plan(df)
             bad = [
                 marker
@@ -490,39 +486,25 @@ LAZY_BUILD_EXPLODES = {
 }
 
 
-def _final_plan_node_names(spark, execution_id: int) -> list[str]:
-    """Operator names of one SQL execution's final AQE plan graph, as
-    the status store keeps it: query stages are unwrapped and a reused
-    exchange links to its first copy instead of repeating its subtree."""
-    nodes = spark._jsparkSession.sharedState().statusStore().planGraph(
-        execution_id
-    ).allNodes()
-    return [nodes.apply(i).name() for i in range(nodes.size())]
-
-
 def test_query_builders_stay_lazy(spark):
     """Building a non-iterative query launches no Spark job: the builder
     adds no SQL execution, one noop write adds exactly one, and that
     execution's final plan explodes the corpus as often as
     LAZY_BUILD_EXPLODES says — the shared term relation is read by one
     plan, not recomputed per consumer and not cut by a checkpoint."""
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        last_sql_execution_id,
-        release_caches,
-    )
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
 
     # warm-up: the documents listing and footer reads
     Catalog(spark, SF).documents.write.format("noop").mode("overwrite").save()
     got = {}
     try:
         for name in LAZY_BUILD_EXPLODES:
-            before = last_sql_execution_id(spark)
-            df = registry.QUERIES[name](spark, SF)
-            built = last_sql_execution_id(spark)
-            df.write.format("noop").mode("overwrite").save()
-            written = last_sql_execution_id(spark)
-            explodes = _final_plan_node_names(spark, written).count("Generate")
-            got[name] = (built - before, written - built, explodes)
+            with observe(spark) as built:
+                df = registry.QUERIES[name](spark, SF)
+            with observe(spark) as written:
+                df.write.format("noop").mode("overwrite").save()
+            explodes = written.plan_nodes().count("Generate")
+            got[name] = (built.sql_executions, written.sql_executions, explodes)
     finally:
         release_caches(spark)
     want = {name: (0, 1, n) for name, n in LAZY_BUILD_EXPLODES.items()}
@@ -588,18 +570,15 @@ def test_containment_persists_nothing(spark):
     """q56's cross-corpus containment carries the bench set size on its
     postings: building it and running one noop write leaves no cached
     relation, and the executed plan reads no cache."""
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        last_sql_execution_id,
-        release_caches,
-    )
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
 
     release_caches(spark)
     try:
-        df = registry.QUERIES["q56_benchmark_decontamination"](spark, SF)
-        df.write.format("noop").mode("overwrite").save()
-        written = last_sql_execution_id(spark)
+        with observe(spark) as written:
+            df = registry.QUERIES["q56_benchmark_decontamination"](spark, SF)
+            df.write.format("noop").mode("overwrite").save()
         cached = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        scans = _final_plan_node_names(spark, written).count("InMemoryTableScan")
+        scans = written.plan_nodes().count("InMemoryTableScan")
     finally:
         release_caches(spark)
     assert (cached, scans) == (False, 0), (cached, scans)
@@ -609,10 +588,7 @@ def test_small_graph_builds_run_one_probe(spark):
     """The nation-graph queries pay exactly one build-time SQL
     execution: pagerank's / triangle_count's bounded collect of the edge
     relation, after which the 25-vertex loop runs on the driver."""
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        last_sql_execution_id,
-        release_caches,
-    )
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
 
     names = (
         "q20_nation_pagerank",
@@ -622,9 +598,9 @@ def test_small_graph_builds_run_one_probe(spark):
     got = {}
     try:
         for name in names:
-            before = last_sql_execution_id(spark)
-            registry.QUERIES[name](spark, SF)
-            got[name] = last_sql_execution_id(spark) - before
+            with observe(spark) as built:
+                registry.QUERIES[name](spark, SF)
+            got[name] = built.sql_executions
     finally:
         release_caches(spark)
     assert got == dict.fromkeys(names, 1), got

@@ -3,10 +3,10 @@ partition per task slot unless an ``extra_conf`` entry or the context's
 SparkConf names a width; and its codegen cache, which must hold a warm
 pass's generated classes."""
 
+from flight_delays_progetto_big_data_2024_spark.observe import observe
 from flight_delays_progetto_big_data_2024_spark.plans import registry
 from flight_delays_progetto_big_data_2024_spark.session import (
     SHUFFLE_PARTITIONS,
-    codegen_compiles,
     get_spark,
     release_caches,
     shuffle_width,
@@ -72,13 +72,13 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
     conf that binds only if set before the JVM's first codegen."""
 
     def noop_pass() -> int:
-        before = codegen_compiles(spark)
-        for name in WARM_SUBSET:
-            registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            release_caches(spark)
-        return codegen_compiles(spark) - before
+        with observe(spark) as rec:
+            for name in WARM_SUBSET:
+                registry.QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                release_caches(spark)
+        return rec.compiles
 
     noop_pass()
     assert noop_pass() == 0

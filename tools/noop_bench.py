@@ -13,12 +13,12 @@ the width the session resolved. ``sql_executions`` counts, per query,
 the SQL executions one build plus one write adds (the most any pass
 saw): 1 means the builder launched no hidden action. ``build_jobs``
 counts, per query, the Spark jobs launched while the query is built
-(the most any pass saw), through a per-build job group: it also sees
-jobs that run outside any SQL execution. ``compiles`` counts, per
-query, the classes Janino compiled during one build plus one write (the
-most any pass after the first saw; null with ``--passes 1``): above 0,
-the query's generated code changes from run to run, or the session's
-codegen cache is too small to hold a pass.
+(the most any pass saw), through the build's own ``observe`` scope: it
+also sees jobs that run outside any SQL execution. ``compiles`` counts,
+per query, the classes Janino compiled during one build plus one write
+(the most any pass after the first saw; null with ``--passes 1``):
+above 0, the query's generated code changes from run to run, or the
+session's codegen cache is too small to hold a pass.
 
 Usage::
 
@@ -43,11 +43,10 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from bench import HEADLINE, BENCH_OVERRIDES, _lower_median
 
+    from flight_delays_progetto_big_data_2024_spark.observe import observe
     from flight_delays_progetto_big_data_2024_spark.plans import registry
     from flight_delays_progetto_big_data_2024_spark.session import (
-        codegen_compiles,
         get_spark,
-        last_sql_execution_id,
         release_caches,
     )
     from flight_delays_progetto_big_data_2024_spark.sources.readers import (
@@ -69,7 +68,6 @@ def main() -> int:
     release_caches(spark)
     spark.range(2).mapInPandas(lambda it: it, "id long").collect()
 
-    sc = spark.sparkContext
     samples: dict[str, list[float]] = {n: [] for n in names}
     executions: dict[str, int] = dict.fromkeys(names, 0)
     build_jobs: dict[str, int] = dict.fromkeys(names, 0)
@@ -77,29 +75,22 @@ def main() -> int:
     for p in range(args.passes):
         for name in names:
             fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
-            group = f"noop-build-{p}-{name}"
-            sc.setJobGroup(group, f"noop: {name}")
-            before = last_sql_execution_id(spark)
-            compiled_before = codegen_compiles(spark)
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            # the write's jobs stay out of the build's group
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(round(time.perf_counter() - start, 3))
+            # the build's scope is nested, so the write's jobs stay out
+            # of build.jobs; the timed spans leave its exit out
+            with observe(spark) as rec:
+                with observe(spark) as build:
+                    start = time.perf_counter()
+                    df = fn(spark, sf_dir)
+                    elapsed = time.perf_counter() - start
+                start = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                elapsed += time.perf_counter() - start
+            samples[name].append(round(elapsed, 3))
             if p:
-                compiled = codegen_compiles(spark) - compiled_before
-                compiles[name] = max(compiles[name] or 0, compiled)
-            # last_sql_execution_id drains the listener bus, so the
-            # status tracker has seen every job the build started
-            executions[name] = max(
-                executions[name], last_sql_execution_id(spark) - before
-            )
-            build_jobs[name] = max(
-                build_jobs[name], len(sc.statusTracker().getJobIdsForGroup(group))
-            )
+                compiles[name] = max(compiles[name] or 0, rec.compiles)
+            executions[name] = max(executions[name], rec.sql_executions)
+            build_jobs[name] = max(build_jobs[name], build.jobs)
             release_caches(spark)
-            sc.setJobDescription(None)
 
     medians = {n: _lower_median(s) for n, s in samples.items()}
     print(
