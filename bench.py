@@ -495,6 +495,52 @@ def _observed(spark, name: str, columns: dict[str, dict[str, list]]) -> Iterator
     columns["task_cpu_ms"].setdefault(name, []).append(cpu_ms)
 
 
+def make_batch_runner(spark, name, fn, sf_dir: str, columns):
+    """``run(sample_idx) -> seconds`` for :func:`_collect_interleaved`:
+    one timed ``fn(spark, sf_dir).collect()`` inside an ``_observed``
+    scope recording into ``columns``, then the run's persisted blocks
+    are released (caller-owned cache lifetime, see
+    session.release_caches) so they can't skew the next sample or the
+    next query."""
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
+
+    def run(sample_idx: int) -> float:
+        with _observed(spark, name, columns):
+            start = time.perf_counter()
+            fn(spark, sf_dir).collect()
+            elapsed = time.perf_counter() - start
+        release_caches(spark)
+        return elapsed
+
+    return run
+
+
+def warm_up(spark, sf_dirs, query=None) -> None:
+    """Untimed warm-up: writes every table each directory holds to the
+    noop sink (JVM JIT, footer reads, file listings and the page cache
+    for EVERY column — count() prunes them all, which left the first
+    text/embedding-reading query paying the cold read and made
+    per-query times order-dependent), runs ``query`` end-to-end on each
+    directory when given, then spins up the Python/Arrow worker pool
+    (kept alive by spark.python.worker.reuse), whose ~1-2s fork + Arrow
+    init is session cold-start, not the first Arrow query's cost."""
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
+    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
+        TESTDATA_TABLES,
+        Catalog,
+    )
+
+    for sf_dir in sf_dirs:
+        cat = Catalog(spark, sf_dir)
+        for table in TESTDATA_TABLES:
+            if os.path.exists(os.path.join(sf_dir, f"{table}.parquet")):
+                cat.table(table).write.format("noop").mode("overwrite").save()
+        if query is not None:
+            query(spark, sf_dir).collect()
+            release_caches(spark)
+    spark.range(2).mapInPandas(lambda it: it, "id long").collect()
+
+
 def _medians_ms(column: dict[str, list[int | None]]) -> dict[str, float]:
     return {
         n: _lower_median([v for v in s if v is not None])
@@ -613,27 +659,7 @@ def main() -> int:
     spark = get_spark("flight-delays-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # untimed warm-up: JVM JIT, parquet footer reads + file listings for
-    # every table, and one representative query end-to-end
-    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
-        TESTDATA_TABLES,
-        Catalog,
-    )
-
-    cat = Catalog(spark, sf_dir)
-    for table in TESTDATA_TABLES:
-        # noop write materializes EVERY column (count() prunes them all,
-        # which left the first text/embedding-reading query paying the
-        # cold page-cache read and made per-query times order-dependent)
-        cat.table(table).write.format("noop").mode("overwrite").save()
-    registry.QUERIES[HEADLINE[0]](spark, sf_dir).collect()
-    # spin up the Python/Arrow worker pool (spark.python.worker.reuse
-    # keeps it alive): otherwise the FIRST Arrow-batched query in the
-    # run pays ~1-2s of worker fork + Arrow init that is session
-    # cold-start, not that query's cost
-    spark.range(2).mapInPandas(lambda it: it, "id long").collect()
-
-    from flight_delays_progetto_big_data_2024_spark.session import release_caches
+    warm_up(spark, [sf_dir], registry.QUERIES[HEADLINE[0]])
 
     # per-sample executor run and CPU time, committed in the samples
     # artifact only (the stdout line keeps its shape)
@@ -642,25 +668,11 @@ def main() -> int:
         "task_cpu_ms": {},
     }
 
-    def make_batch_runner(name, fn):
-        def run(sample_idx: int) -> float:
-            with _observed(spark, name, columns):
-                start = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                elapsed = time.perf_counter() - start
-            # caller-owned cache lifetime (see session.release_caches):
-            # drop this run's persisted blocks so they can't skew the
-            # next sample or the next query
-            release_caches(spark)
-            return elapsed
-
-        return run
-
     tmp = tempfile.mkdtemp(prefix="bench_stream_")
     try:
         runners = [
-            (name, make_batch_runner(name, BENCH_OVERRIDES.get(name, registry.QUERIES[name])))
-            for name in HEADLINE
+            (n, make_batch_runner(spark, n, BENCH_OVERRIDES.get(n, registry.QUERIES[n]), sf_dir, columns))
+            for n in HEADLINE
         ] + _streaming_runners(spark, sf_dir, tmp, columns)
         all_samples, loads = _collect_interleaved(runners)
     finally:

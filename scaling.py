@@ -1,13 +1,12 @@
 #!/usr/bin/env python
-"""Scaling-curve harness: measures the headline + dedup/ANN queries at
-every available scale factor (sf0.001 / sf0.01 / sf0.1 — a 100x span)
-and records per-decade growth exponents, converting the repo's
-"— scales" design claims into committed evidence (SCALING.md +
-SCALING.json; round-4 verdict item 1).
+"""Scaling-curve harness: measures growth exponents across real data
+decades and commits them as evidence (SCALING.json + SCALING.md),
+converting the repo's "— scales" design claims into numbers the gates
+in tests/test_scaling_evidence.py check.
 
-The exponent for a decade (sf_lo, sf_hi) is
+The exponent for a decade (t_lo, t_hi) is
 
-    alpha = log10( t(sf_hi) / t(sf_lo) )
+    alpha = log10( t_hi / t_lo )
 
 i.e. t ~ sf^alpha across that decade. Reading the numbers honestly:
 
@@ -17,30 +16,57 @@ i.e. t ~ sf^alpha across that decade. Reading the numbers honestly:
   and only approach their true exponent on the 0.01 -> 0.1 decade —
   the floor DEFLATES alpha. An alpha near or above 2 therefore cannot
   be blamed on overhead; it is real superlinear growth, which is why
-  the gate (tests/test_scaling_evidence.py) can sit above the
-  measured value with margin and still catch a silent quadratic
-  blowup (a filter that stopped pushing, a prefix filter that stopped
-  pruning) the moment it happens.
-* Timing policy is bench.py's: untimed session + Arrow warmup, caches
-  released between samples, lower median of the uniform N_PASSES
-  sample count (round-11; only a >=30s first sample stays single-shot).
+  the gate can sit above the measured value with margin and still
+  catch a silent quadratic blowup (a filter that stopped pushing, a
+  prefix filter that stopped pruning) the moment it happens.
+* Timing is bench.py's own code: one untimed ``bench.warm_up`` over
+  every scale point's tables, then ``bench._collect_interleaved`` over
+  ``bench.make_batch_runner`` runners — interleaved passes over every
+  (query, scale point), caches released after each sample, the lower
+  median of N_PASSES samples (a >=30s first sample stays single-shot).
   Streaming-named queries time their registered batch analogs (same
   plan family).
 
-Run it ALONE (bench rule: concurrent load makes the numbers garbage):
+Every measuring mode is one :class:`Decade` — its query list, corpus
+builder, bound table and section prose — run by :func:`run_decade` and
+written by :func:`write_block`, which merges the mode's block into
+SCALING.json and re-renders the mode's section of SCALING.md, leaving
+every other block and section as it was. Run measuring modes ALONE
+(bench rule: concurrent load makes the numbers garbage):
 
-    python scaling.py            # writes SCALING.md + SCALING.json
+    python scaling.py                 # sf0.001/0.01/0.1 grid: headline + EXTRA
+    python scaling.py --sf1           # Σdf² family, sf0.1 -> 50k-doc resample
+    python scaling.py --sf1-headline  # 21 headline queries, sf0.1 -> full sf1
+    python scaling.py --heaps         # Σdf² family on Heaps-law text, 5k -> 50k docs
+    python scaling.py --reannotate    # re-derive every block from its stored times
 """
 
 from __future__ import annotations
 
+import bisect
+import dataclasses
+import hashlib
+import itertools
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
+from collections import defaultdict
+from collections.abc import Callable
 
-from bench import BENCH_OVERRIDES, HEADLINE, _needs_more_samples
+from bench import (
+    BENCH_OVERRIDES,
+    HEADLINE,
+    _collect_interleaved,
+    _lower_median,
+    make_batch_runner,
+    warm_up,
+)
+
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 #: Queries measured: the 21 headline queries plus the sub-quadratic-
 #: claimed dedup/ANN long poles the round-4 verdict named.
@@ -55,6 +81,7 @@ EXTRA = [
 ]
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
+SF01_DIR = SF_DIRS[-1]
 
 #: Documented upper bound on the TOP-decade exponent (sf0.01 -> sf0.1)
 #: per query, with the complexity claim it certifies. The gate test
@@ -196,311 +223,135 @@ HEAPS_ZIPF_S = 1.05
 HEAPS_GENERATOR_VERSION = "heaps-zipf-v1"
 
 
+def _frac(key: str) -> int:
+    """md5-keyed draw in [0, 1e9): the generators' only randomness (no
+    RNG, so every corpus is a pure function of its keys)."""
+    return int(hashlib.md5(key.encode()).hexdigest()[:12], 16) % 10**9
+
+
+def _write_documents(
+    out_dir: str,
+    n_docs: int,
+    tag: str,
+    words: Callable[[int, int], list[str]],
+) -> str:
+    """The documents synthesizers' shared core: doc d takes its token
+    count from the sf0.1 empirical length law at md5("{tag}:d:len"),
+    its tokens from ``words(d, n)`` (each generator keeps its own
+    draw; called in doc order), its lang from the sf0.1 lang mixture at
+    md5("{tag}:d:lang") and source = src{d % 20} (the testdata's own
+    mapping). Writes ``out_dir/documents.parquet`` and returns the md5
+    digest of the text column, so committed evidence can be pinned to
+    the corpus."""
+    import duckdb
+    import pandas as pd
+
+    src = os.path.join(SF01_DIR, "documents.parquet")
+    with duckdb.connect() as con:
+        lens = sorted(
+            r[0]
+            for r in con.execute(
+                f"SELECT len(string_split(text,' ')) FROM read_parquet('{src}')"
+            ).fetchall()
+        )
+        langs = con.execute(
+            f"SELECT lang, count(*) FROM read_parquet('{src}') GROUP BY lang ORDER BY lang"
+        ).fetchall()
+        lcum = list(itertools.accumulate(c for _, c in langs))
+        digest = hashlib.md5()
+        rows = []
+        for d in range(n_docs):
+            text = " ".join(words(d, lens[_frac(f"{tag}:{d}:len") % len(lens)]))
+            digest.update(text.encode())
+            lang = langs[bisect.bisect_right(lcum, _frac(f"{tag}:{d}:lang") % lcum[-1])][0]
+            rows.append((d, text, lang, f"src{d % 20}", len(text)))
+        con.register(
+            "docs",
+            pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source", "n_chars"]),
+        )
+        out = os.path.join(out_dir, "documents.parquet")
+        con.execute(
+            "COPY (SELECT doc_id::BIGINT AS doc_id, text, lang, source, "
+            f"n_chars::BIGINT AS n_chars FROM docs) TO '{out}' (FORMAT parquet)"
+        )
+    return digest.hexdigest()
+
+
 def build_heaps_documents(out_dir: str, n_docs: int) -> tuple[str, int]:
     """Synthesize a documents corpus with realistic vocabulary
-    statistics (judge round-12 item 1): token (d, j) draws a RANK by
-    md5-keyed inverse-CDF from a Zipf(s=1.05) distribution truncated to
-    the type universe available at its stream position — V(i) = 1000 +
-    8·floor(i^0.62), so new types enter at the rare tail for the whole
-    stream (Heaps-law accumulation) while the head stays stationary
-    (stopwords). Types render as 7-char hex-tagged words ("w" +
-    md5(rank)[:6]) so char-5-gram rarity tracks type rarity like real
-    orthography (the unit-gate convention). Doc lengths follow the
-    sf0.1 empirical length law; every 40th doc is an exact COPY of its
+    statistics: token (d, j) draws a RANK by md5-keyed inverse-CDF from
+    a Zipf(s=1.05) distribution truncated to the type universe
+    available at its stream position — V(i) = 1000 + 8·floor(i^0.62),
+    so new types enter at the rare tail for the whole stream (Heaps-law
+    accumulation) while the head stays stationary (stopwords). Types
+    render as 7-char hex-tagged words ("w" + md5(rank)[:6]) so
+    char-5-gram rarity tracks type rarity like real orthography (the
+    unit-gate convention). Every 40th doc is an exact COPY of its
     predecessor and every 37th a 6-token PREFIX (true near-dup /
-    containment positives at every size). lang/source mix mirrors the
-    sf1 resampler. Returns (text md5 digest, distinct type count)."""
-    import bisect
-    import hashlib
-
-    import duckdb
+    containment positives at every size). Length and lang laws come
+    from :func:`_write_documents`. Returns (text md5 digest, distinct
+    type count)."""
     import numpy as np
-
-    con = duckdb.connect()
-    src01 = "/root/testdata/sf0.1/documents.parquet"
-    lens = sorted(
-        r[0]
-        for r in con.execute(
-            f"SELECT len(string_split(text,' ')) FROM read_parquet('{src01}')"
-        ).fetchall()
-    )
-    langs = con.execute(
-        f"SELECT lang, count(*) FROM read_parquet('{src01}') GROUP BY lang ORDER BY lang"
-    ).fetchall()
-    lgs = [l for l, _ in langs]
-    lcum, lacc = [], 0
-    for _, c in langs:
-        lacc += c
-        lcum.append(lacc)
 
     # Zipf cumulative weights over the FULL rank universe; a draw over
     # the position-i universe V(i) is inverse-CDF against cum[:V(i)]
-    w = np.arange(1, HEAPS_V_MAX + 1, dtype=np.float64) ** (-HEAPS_ZIPF_S)
-    cum = np.cumsum(w)
-
-    def frac(key: str, mod: int = 10**9) -> int:
-        return int(hashlib.md5(key.encode()).hexdigest()[:12], 16) % mod
-
+    cum = np.cumsum(np.arange(1, HEAPS_V_MAX + 1, dtype=np.float64) ** (-HEAPS_ZIPF_S))
     tok_cache: dict[int, str] = {}
-
-    def tok(rank: int) -> str:
-        t = tok_cache.get(rank)
-        if t is None:
-            t = "w" + hashlib.md5(f"t{rank}".encode()).hexdigest()[:6]
-            tok_cache[rank] = t
-        return t
-
-    rows = []
-    texts: list[str] = []
-    digest = hashlib.md5()
     pos = 0  # global stream position (type universe grows with it)
-    seen_ranks: set[int] = set()
-    for d in range(n_docs):
-        n_tok = lens[frac(f"hp:{d}:len") % len(lens)]
-        words = []
+    prev: list[str] = []
+
+    def words(d: int, n_tok: int) -> list[str]:
+        nonlocal pos, prev
+        out = []
         for j in range(n_tok):
             v_i = min(HEAPS_V_MAX, 1000 + 8 * int(pos**0.62))
-            u = frac(f"hp:{d}:{j}") / 1e9
-            rank = int(np.searchsorted(cum, u * cum[v_i - 1], side="right"))
-            rank = min(rank, v_i - 1)
-            seen_ranks.add(rank)
-            words.append(tok(rank))
+            u = _frac(f"hp:{d}:{j}") / 1e9
+            rank = min(int(np.searchsorted(cum, u * cum[v_i - 1], side="right")), v_i - 1)
+            if rank not in tok_cache:
+                tok_cache[rank] = "w" + hashlib.md5(f"t{rank}".encode()).hexdigest()[:6]
+            out.append(tok_cache[rank])
             pos += 1
-        texts.append(" ".join(words))
-    for d in range(n_docs):
+        # planted positives replace the drawn tokens, which still
+        # advanced the stream position
         if d % 40 == 39:
-            texts[d] = texts[d - 1]
+            out = prev
         elif d % 37 == 36:
-            texts[d] = " ".join(texts[d - 1].split()[:6])
-    for d, text in enumerate(texts):
-        digest.update(text.encode())
-        rows.append(
-            (
-                d,
-                text,
-                lgs[bisect.bisect_right(lcum, frac(f"hp:{d}:lang") % lacc)],
-                f"src{d % 20}",
-                len(text),
-            )
-        )
+            out = prev[:6]
+        prev = out
+        return out
 
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
-    )
-    con.register("heaps_docs", pdf)
-    out = os.path.join(out_dir, "documents.parquet")
-    con.execute(
-        "COPY (SELECT doc_id::BIGINT AS doc_id, text, lang, source, "
-        f"n_chars::BIGINT AS n_chars FROM heaps_docs) TO '{out}' (FORMAT parquet)"
-    )
-    con.close()
-    return digest.hexdigest(), len(seen_ranks)
-
-
-def run_heaps_decade() -> int:
-    """Measure HEAPS_QUERIES at 5k and 50k docs of the Heaps-law corpus
-    in ONE warmed session (bench timing policy) and merge a
-    ``heaps_decade`` block into SCALING.json / a '## Heaps decade'
-    section into SCALING.md. Gate: tests/test_scaling_evidence.py
-    checks the committed exponents against HEAPS_BOUNDS, the generator
-    version, and the Heaps statistics (≥50k types at the hi point,
-    real vocabulary growth across the decade)."""
-    import tempfile
-
-    from flight_delays_progetto_big_data_2024_spark.plans import registry
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        get_spark,
-        release_caches,
-    )
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("flight-delays-spark-scaling-heaps", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    lo_dir = tempfile.mkdtemp(prefix="heaps_lo_")
-    hi_dir = tempfile.mkdtemp(prefix="heaps_hi_")
-    try:
-        t0 = time.perf_counter()
-        lo_digest, lo_types = build_heaps_documents(lo_dir, HEAPS_N_DOCS_LO)
-        hi_digest, hi_types = build_heaps_documents(hi_dir, HEAPS_N_DOCS_HI)
-        print(
-            f"heaps corpora built in {time.perf_counter() - t0:.1f}s "
-            f"(lo {lo_digest} V={lo_types}, hi {hi_digest} V={hi_types})",
-            file=sys.stderr,
-        )
-        for d in (lo_dir, hi_dir):
-            spark.read.parquet(os.path.join(d, "documents.parquet")).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        spark.range(2).mapInPandas(lambda it: it, "id long").collect()
-
-        results: dict[str, dict] = {}
-        for name in HEAPS_QUERIES:
-            fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
-            t_lo = measure(spark, fn, lo_dir, release_caches)
-            print(f"{name} heaps-5k: {t_lo}s", file=sys.stderr)
-            t_hi = measure(spark, fn, hi_dir, release_caches)
-            print(f"{name} heaps-50k: {t_hi}s", file=sys.stderr)
-            bound, claim = HEAPS_BOUNDS[name]
-            alpha = round(math.log10(t_hi / t_lo), 3)
-            results[name] = {
-                "t_5k": t_lo,
-                "t_50k": t_hi,
-                "alpha": alpha,
-                "bound": bound,
-                "claim": claim,
-                "within_bound": alpha <= bound,
-            }
-    finally:
-        import shutil as _shutil
-
-        _shutil.rmtree(lo_dir, ignore_errors=True)
-        _shutil.rmtree(hi_dir, ignore_errors=True)
-
-    return _write_heaps(
-        results,
-        {
-            "lo_digest": lo_digest, "hi_digest": hi_digest,
-            "lo_types": lo_types, "hi_types": hi_types,
-            "beta_types": round(math.log10(hi_types / lo_types), 3),
-        },
-    )
-
-
-def _write_heaps(results: dict[str, dict], stats: dict) -> int:
-    repo = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(repo, "SCALING.json")
-    with open(path) as fh:
-        record = json.load(fh)
-    record["heaps_decade"] = {
-        "generator": HEAPS_GENERATOR_VERSION,
-        "n_docs": [HEAPS_N_DOCS_LO, HEAPS_N_DOCS_HI],
-        "zipf_s": HEAPS_ZIPF_S,
-        **stats,
-        "queries": results,
-    }
-    with open(path, "w") as fh:
-        json.dump(record, fh, indent=1, sort_keys=True)
-
-    over = [n for n, r in results.items() if not r["within_bound"]]
-    md_lines = [
-        "",
-        "## Heaps decade (round 12): the Σdf² family on REALISTIC text",
-        "",
-        "Corpus: Zipf(s=1.05) rank-frequency over a type universe that",
-        "GROWS with stream position (Heaps-law accumulation; novel types",
-        "enter at the rare tail, the stopword head stays stationary) —",
-        f"`scaling.py::build_heaps_documents`, md5-keyed, no RNG. {HEAPS_N_DOCS_LO}",
-        f"docs: {stats['lo_types']} distinct types (digest `{stats['lo_digest']}`);",
-        f"{HEAPS_N_DOCS_HI} docs: {stats['hi_types']} distinct types (digest",
-        f"`{stats['hi_digest']}`); type-growth exponent beta =",
-        f"{stats['beta_types']} across the decade. This REPLACES the",
-        "unit-test-gated sub-quadratic claim with a measured one: the",
-        "committed sf1-decade block above runs the documented DEGENERATE",
-        "~31-type regime, this block runs the realistic-vocabulary regime",
-        "the 100 TB story actually depends on. Bounds are the queries'",
-        "sub-quadratic claims (2.0 / 1.7), not the 2.4 degenerate",
-        "ceilings. Both scale points in one warmed session, bench policy.",
-        "",
-        "| query | t(5k docs) | t(50k docs) | alpha | bound | claim |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name in HEAPS_QUERIES:
-        r = results[name]
-        flag = "" if r["within_bound"] else " **OVER**"
-        md_lines.append(
-            f"| {name} | {r['t_5k']} | {r['t_50k']} | {r['alpha']}{flag} "
-            f"| {r['bound']} | {r['claim']} |"
-        )
-    md_lines += ["", f"Heaps-decade queries over bound: {over or 'none'}.", ""]
-    _replace_md_section(repo, "\n## Heaps decade", md_lines)
-    print(json.dumps({"heaps_over_bound": over, "n": len(HEAPS_QUERIES)}))
-    return 1 if over else 0
+    digest = _write_documents(out_dir, n_docs, "hp", words)
+    return digest, len(tok_cache)
 
 
 def build_sf1_documents(out_dir: str, n_docs: int = SF1_N_DOCS) -> str:
     """Synthesize the NEXT DECADE of the testdata documents corpus
-    (50k docs ~ sf1) by DETERMINISTIC empirical resampling of
-    /root/testdata/sf0.1/documents.parquet — the driver provides no sf1
-    testdata, and the judge's item 6 asks for a real decade on the SAME
-    corpus family, which for q54/q156/q34/q85 means the same degenerate
-    ~31-word vocabulary, the same 10-100-token length law, and the same
+    (50k docs ~ sf1) by DETERMINISTIC empirical resampling of the sf0.1
+    documents — the testdata has no sf1, and a real decade on the SAME
+    corpus family means, for q54/q156/q34/q85, the same degenerate
+    ~31-word vocabulary, the same 10-100-token length law and the same
     source/lang mixture (that degenerate regime is exactly the
-    documented hard case the ceilings certify). Everything is md5-keyed
-    off the doc index (no RNG): token j of doc d is the empirical
-    unigram inverse-CDF at md5("sf1:d:j"), doc length the empirical
-    length inverse-CDF at md5("sf1:d"), source = src{d % 20} (the
-    testdata's own mapping), lang the empirical lang inverse-CDF.
-    Returns the md5 digest of the generated text column so committed
-    evidence can be pinned to this exact corpus."""
-    import bisect
-    import hashlib
-
+    documented hard case the ceilings certify). Token j of doc d is the
+    empirical unigram inverse-CDF at md5("sf1:d:j"); length, lang and
+    source come from :func:`_write_documents`. Returns the text digest."""
     import duckdb
 
-    con = duckdb.connect()
-    src01 = "/root/testdata/sf0.1/documents.parquet"
-    uni = con.execute(
-        "SELECT t, count(*) c FROM (SELECT unnest(string_split(text,' ')) t "
-        f"FROM read_parquet('{src01}')) GROUP BY t ORDER BY t"
-    ).fetchall()
-    lens = sorted(
-        r[0]
-        for r in con.execute(
-            f"SELECT len(string_split(text,' ')) FROM read_parquet('{src01}')"
+    with duckdb.connect() as con:
+        uni = con.execute(
+            "SELECT t, count(*) c FROM (SELECT unnest(string_split(text,' ')) t "
+            f"FROM read_parquet('{os.path.join(SF01_DIR, 'documents.parquet')}')) "
+            "GROUP BY t ORDER BY t"
         ).fetchall()
-    )
-    langs = con.execute(
-        f"SELECT lang, count(*) FROM read_parquet('{src01}') GROUP BY lang ORDER BY lang"
-    ).fetchall()
-
     toks = [t for t, _ in uni]
-    cum, acc = [], 0
-    for _, c in uni:
-        acc += c
-        cum.append(acc)
-    lcum, lacc = [], 0
-    lgs = [l for l, _ in langs]
-    for _, c in langs:
-        lacc += c
-        lcum.append(lacc)
+    cum = list(itertools.accumulate(c for _, c in uni))
 
-    def frac(key: str, mod: int = 10**9) -> int:
-        return int(hashlib.md5(key.encode()).hexdigest()[:12], 16) % mod
-
-    rows = []
-    digest = hashlib.md5()
-    for d in range(n_docs):
-        n_tok = lens[frac(f"sf1:{d}:len") % len(lens)]
-        words = [
-            toks[bisect.bisect_right(cum, frac(f"sf1:{d}:{j}") % acc)]
+    def words(d: int, n_tok: int) -> list[str]:
+        return [
+            toks[bisect.bisect_right(cum, _frac(f"sf1:{d}:{j}") % cum[-1])]
             for j in range(n_tok)
         ]
-        text = " ".join(words)
-        digest.update(text.encode())
-        rows.append(
-            (
-                d,
-                text,
-                lgs[bisect.bisect_right(lcum, frac(f"sf1:{d}:lang") % lacc)],
-                f"src{d % 20}",
-                len(text),
-            )
-        )
-    import pandas as pd
 
-    pdf = pd.DataFrame(
-        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
-    )
-    con.register("sf1_docs", pdf)
-    out = os.path.join(out_dir, "documents.parquet")
-    con.execute(
-        "COPY (SELECT doc_id::BIGINT AS doc_id, text, lang, source, "
-        f"n_chars::BIGINT AS n_chars FROM sf1_docs) TO '{out}' (FORMAT parquet)"
-    )
-    return digest.hexdigest()
+    return _write_documents(out_dir, n_docs, "sf1", words)
 
 
 #: round-10 judge item 4: the FULL headline set over a real sf0.1→sf1
@@ -570,13 +421,11 @@ def build_sf1_tables(out_dir: str) -> str:
     here — the sf1 run measures TIME, and correctness is the driver
     oracle's job at sf0.01. Returns a digest binding the committed
     evidence to this generator + the documents text digest."""
-    import hashlib
-
     import duckdb
 
     doc_digest = build_sf1_documents(out_dir)
     con = duckdb.connect()
-    src = "/root/testdata/sf0.1"
+    src = SF01_DIR
     for t in ("nation", "region"):
         con.execute(
             f"COPY (SELECT * FROM read_parquet('{src}/{t}.parquet')) "
@@ -631,413 +480,337 @@ def build_sf1_tables(out_dir: str) -> str:
     return digest.hexdigest()
 
 
-def run_sf1_headline() -> int:
-    """Round-10 judge item 4: measure ALL 21 headline queries at sf0.1
-    and the full synthesized sf1 (:func:`build_sf1_tables`) in ONE
-    warmed session under the bench timing policy, and merge an
-    ``sf1_headline`` block into SCALING.json / an '## sf1 headline'
-    section into SCALING.md. Gate: tests/test_scaling_evidence.py
-    checks the committed exponents against EXPONENT_BOUNDS (with the
-    documented SF1_HEADLINE_BOUND_OVERRIDES) and the digest against
-    the live generator version."""
-    import tempfile
+@dataclasses.dataclass(frozen=True)
+class Decade:
+    """One measuring mode. ``key`` names its SCALING.json block and
+    ``marker`` its SCALING.md section; both are None for the grid,
+    whose per-query records sit at the top level of SCALING.json and
+    whose table is the head of SCALING.md. ``points`` label the scale
+    points low to high, ``build(spark, tmp)`` returns one testdata
+    directory per point (a synthesized corpus goes under ``tmp``) and
+    the block's corpus metadata, ``columns`` head the times and
+    exponents in the table, and ``prose(block)`` is the section text
+    above it."""
 
-    from flight_delays_progetto_big_data_2024_spark.plans import registry
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        get_spark,
-        release_caches,
-    )
-    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
-        TESTDATA_TABLES,
-        Catalog,
-    )
+    key: str | None
+    marker: str | None
+    queries: list[str]
+    points: tuple[str, ...]
+    columns: tuple[str, ...]
+    bounds: dict[str, tuple[float, str]]
+    build: Callable[[object, str], tuple[list[str], dict]]
+    prose: Callable[[dict], list[str]]
+    over_label: str
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("flight-delays-spark-scaling-sf1h", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
 
-    sf1_dir = tempfile.mkdtemp(prefix="sf1_all_")
-    try:
-        t0 = time.perf_counter()
-        corpus_digest = build_sf1_tables(sf1_dir)
-        print(
-            f"sf1 full corpus built in {time.perf_counter() - t0:.1f}s "
-            f"(digest {corpus_digest})",
-            file=sys.stderr,
-        )
-        for d in ("/root/testdata/sf0.1", sf1_dir):
-            cat = Catalog(spark, d)
-            for t in TESTDATA_TABLES:
-                cat.table(t).write.format("noop").mode("overwrite").save()
-        spark.range(2).mapInPandas(lambda it: it, "id long").collect()
+def _record(d: Decade, name: str, times: list[float]) -> dict:
+    """One query's stored record: its times, the exponent of every
+    consecutive pair of points, and the annotation of the top exponent
+    against ``d.bounds``."""
+    alphas = [round(math.log10(hi / lo), 3) for lo, hi in zip(times, times[1:])]
+    bound, claim = d.bounds[name]
+    if d.key is None:
+        rec = {"t": dict(zip(d.points, times)), "alpha_low": alphas[0], "alpha_top": alphas[-1]}
+    else:
+        rec = {**{f"t_{p}": t for p, t in zip(d.points, times)}, "alpha": alphas[0]}
+    return {**rec, "bound": bound, "claim": claim, "within_bound": alphas[-1] <= bound}
 
-        results: dict[str, dict] = {}
-        for name in HEADLINE:
-            fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
-            t_01 = measure(spark, fn, "/root/testdata/sf0.1", release_caches)
-            print(f"{name} sf0.1: {t_01}s", file=sys.stderr)
-            t_1 = measure(spark, fn, sf1_dir, release_caches)
-            print(f"{name} sf1: {t_1}s", file=sys.stderr)
-            bound, claim = SF1_HEADLINE_BOUND_OVERRIDES.get(
-                name, EXPONENT_BOUNDS[name]
-            )
-            alpha = round(math.log10(t_1 / t_01), 3)
-            results[name] = {
-                "t_sf0.1": t_01,
-                "t_sf1": t_1,
-                "alpha": alpha,
-                "bound": bound,
-                "claim": claim,
-                "within_bound": alpha <= bound,
-            }
-    finally:
-        import shutil as _shutil
 
-        _shutil.rmtree(sf1_dir, ignore_errors=True)
+def _times(d: Decade, rec: dict) -> list[float]:
+    return [rec["t"][p] if d.key is None else rec[f"t_{p}"] for p in d.points]
 
-    box = {
-        "cpus": spark.sparkContext.defaultParallelism,
-        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+
+def _alphas(d: Decade, rec: dict) -> list[float]:
+    return [rec["alpha_low"], rec["alpha_top"]] if d.key is None else [rec["alpha"]]
+
+
+def _queries(d: Decade, block: dict) -> dict[str, dict]:
+    return block if d.key is None else block["queries"]
+
+
+def _block(d: Decade, meta: dict, queries: dict[str, dict]) -> dict:
+    return queries if d.key is None else {**meta, "queries": queries}
+
+
+def _over(d: Decade, block: dict) -> list[str]:
+    queries = _queries(d, block)
+    return [n for n in d.queries if not queries[n]["within_bound"]]
+
+
+def render(d: Decade, block: dict) -> str:
+    """``d``'s SCALING.md section for ``block`` (the file head for the
+    grid): prose, the per-query table, the over-bound line."""
+    queries = _queries(d, block)
+    lines = [
+        *d.prose(block),
+        "",
+        "| " + " | ".join(["query", *d.columns, "bound", "claim"]) + " |",
+        "|---" * (len(d.columns) + 3) + "|",
+    ]
+    for name in d.queries:
+        r = queries[name]
+        *lower, top = _alphas(d, r)
+        flag = "" if r["within_bound"] else " **OVER**"
+        cells = [name, *_times(d, r), *lower, f"{top}{flag}", r["bound"], r["claim"]]
+        lines.append("| " + " | ".join(map(str, cells)) + " |")
+    lines += ["", f"{d.over_label} over bound: {_over(d, block) or 'none'}."]
+    body = "\n".join(lines) + "\n"
+    return body if d.marker is None else "\n" + body
+
+
+def _md_sections(md: str) -> tuple[str, dict[str, str]]:
+    """Split SCALING.md into (the grid's head, {marker: section text})
+    for the named decades' sections, in file order. A writer replaces
+    ITS part and keeps every other one verbatim."""
+    markers = [d.marker for d in DECADES.values() if d.marker]
+    found = sorted((md.index(m), m) for m in markers if m in md)
+    if not found:
+        return md, {}
+    sections = {
+        m: md[start:nxt]
+        for (start, m), (nxt, _) in zip(found, found[1:] + [(len(md), None)])
     }
-    return _write_sf1_headline(results, corpus_digest, box)
+    return md[: found[0][0]], sections
 
 
-def _write_sf1_headline(
-    results: dict[str, dict], corpus_digest: str, box: dict[str, int]
-) -> int:
-    repo = os.path.dirname(os.path.abspath(__file__))
+def _write_json(d: Decade, block: dict, repo: str) -> None:
+    """Merge ``block`` into ``repo``/SCALING.json; every other block
+    stays as stored."""
     path = os.path.join(repo, "SCALING.json")
-    with open(path) as fh:
-        record = json.load(fh)
-    record["sf1_headline"] = {
-        "generator": SF1_TABLES_GENERATOR_VERSION,
-        "corpus_digest": corpus_digest,
-        **box,
-        "queries": results,
-    }
+    record: dict = {}
+    if os.path.exists(path):
+        with open(path) as fh:
+            record = json.load(fh)
+    if d.key is None:
+        named = {m.key for m in DECADES.values() if m.key}
+        record = {k: v for k, v in record.items() if k in named} | block
+    else:
+        record[d.key] = block
     with open(path, "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
 
-    over = [n for n, r in results.items() if not r["within_bound"]]
-    md_lines = [
+
+def _write_md(d: Decade, block: dict, repo: str) -> None:
+    """Re-render ``d``'s part of ``repo``/SCALING.md from ``block``;
+    every other section stays verbatim, in its current order."""
+    path = os.path.join(repo, "SCALING.md")
+    md = ""
+    if os.path.exists(path):
+        with open(path) as fh:
+            md = fh.read()
+    head, sections = _md_sections(md)
+    if d.marker is None:
+        head = render(d, block)
+    else:
+        sections[d.marker] = render(d, block)
+    with open(path, "w") as fh:
+        fh.write(head.rstrip("\n") + "\n" + "".join(sections.values()))
+
+
+def write_block(d: Decade, block: dict, repo: str = REPO) -> int:
+    """Commit one decade's block to both evidence files; exit status 1
+    when a query's top exponent is over its bound."""
+    _write_json(d, block, repo)
+    _write_md(d, block, repo)
+    over = _over(d, block)
+    print(json.dumps({"block": d.key or "grid", "over_bound": over, "n": len(d.queries)}))
+    return 1 if over else 0
+
+
+def run_decade(spark, d: Decade, repo: str = REPO) -> int:
+    """Measure every query of ``d`` at every scale point in one warmed
+    session on bench.py's sampler, then :func:`write_block`."""
+    from flight_delays_progetto_big_data_2024_spark.plans import registry
+
+    tmp = tempfile.mkdtemp(prefix="scaling_")
+    try:
+        t0 = time.perf_counter()
+        dirs, meta = d.build(spark, tmp)
+        print(f"corpus ready in {time.perf_counter() - t0:.1f}s {meta}", file=sys.stderr)
+        warm_up(spark, dirs)
+        # per-sample task times: the bench's samples file keeps them,
+        # SCALING.json does not
+        columns: defaultdict = defaultdict(dict)
+        samples, _loads = _collect_interleaved([
+            ((name, point), make_batch_runner(
+                spark, name, BENCH_OVERRIDES.get(name, registry.QUERIES[name]), sf_dir, columns
+            ))
+            for name in d.queries
+            for point, sf_dir in zip(d.points, dirs)
+        ])
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    queries = {
+        name: _record(d, name, [_lower_median(samples[name, p]) for p in d.points])
+        for name in d.queries
+    }
+    return write_block(d, _block(d, meta, queries), repo)
+
+
+def reannotate(repo: str = REPO) -> int:
+    """Re-derive every stored block's exponents and bound/claim/
+    within_bound annotations from its stored times and the CURRENT
+    bound tables, and re-render both files through
+    :func:`write_block` — no time changes. Used when a bound or claim
+    is re-documented; tests/test_scaling_evidence.py checks that the
+    committed files equal this derivation."""
+    with open(os.path.join(repo, "SCALING.json")) as fh:
+        record = json.load(fh)
+    rc = 0
+    for d in DECADES.values():
+        if d.key is not None and d.key not in record:
+            continue
+        stored = record if d.key is None else record[d.key]
+        meta = {k: v for k, v in stored.items() if k != "queries"}
+        queries = {
+            name: _record(d, name, _times(d, _queries(d, stored)[name]))
+            for name in d.queries
+        }
+        rc |= write_block(d, _block(d, meta, queries), repo)
+    return rc
+
+
+def _grid_dirs(spark, tmp: str) -> tuple[list[str], dict]:
+    return SF_DIRS, {}
+
+
+def _sf1_docs(spark, tmp: str) -> tuple[list[str], dict]:
+    meta = {"generator": SF1_GENERATOR_VERSION, "n_docs": SF1_N_DOCS}
+    return [SF01_DIR, tmp], {**meta, "corpus_digest": build_sf1_documents(tmp)}
+
+
+def _sf1_tables(spark, tmp: str) -> tuple[list[str], dict]:
+    return [SF01_DIR, tmp], {
+        "generator": SF1_TABLES_GENERATOR_VERSION,
+        "corpus_digest": build_sf1_tables(tmp),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
+
+
+def _heaps_docs(spark, tmp: str) -> tuple[list[str], dict]:
+    meta: dict = {
+        "generator": HEAPS_GENERATOR_VERSION,
+        "n_docs": [HEAPS_N_DOCS_LO, HEAPS_N_DOCS_HI],
+        "zipf_s": HEAPS_ZIPF_S,
+    }
+    dirs = [os.path.join(tmp, side) for side in ("lo", "hi")]
+    for side, sf_dir, n_docs in zip(("lo", "hi"), dirs, meta["n_docs"]):
+        os.makedirs(sf_dir)
+        meta[f"{side}_digest"], meta[f"{side}_types"] = build_heaps_documents(sf_dir, n_docs)
+    meta["beta_types"] = round(math.log10(meta["hi_types"] / meta["lo_types"]), 3)
+    return dirs, meta
+
+
+def _grid_prose(block: dict) -> list[str]:
+    return [
+        "# SCALING — measured growth curves (round 5)",
         "",
+        "`python scaling.py`, run alone, on local[32]. `t(sf)` is the",
+        "bench-policy lower median of 5 cold-cache samples. `alpha` is the",
+        "per-decade exponent `log10(t_hi/t_lo)`; the fixed ~0.1-0.5s",
+        "scheduling floor DEFLATES alpha at these sizes, so a linear",
+        "operator reads below 1 and anything near 2 is genuinely",
+        "quadratic. `bound` is the documented ceiling enforced by",
+        "tests/test_scaling_evidence.py against this committed file.",
+    ]
+
+
+def _sf1_prose(block: dict) -> list[str]:
+    return [
+        "## sf1 decade (round 8): the Σdf² family on a REAL 10× decade",
+        "",
+        f"Corpus: {block['n_docs']} docs synthesized by deterministic empirical",
+        "resampling of the sf0.1 documents generator statistics (same",
+        "degenerate ~31-word vocabulary, length law, source/lang mixture —",
+        "`scaling.py::build_sf1_documents`, md5-keyed, no RNG; digest",
+        f"`{block['corpus_digest']}`). Both scale points measured in one warmed",
+        "session under the bench timing policy.",
+    ]
+
+
+def _sf1_headline_prose(block: dict) -> list[str]:
+    return [
         "## sf1 headline: ALL 21 headline queries on a REAL 10× decade",
         "",
         "Corpus: the full sf1 table set — documents by the round-8",
         "empirical resampler, dimensions fixed, every fact/entity table",
         "as 10 key-shifted replicas with referential integrity",
         "(`scaling.py::build_sf1_tables`, deterministic, no RNG; digest",
-        f"`{corpus_digest}`). Both scale points in one warmed session",
-        f"on local[{box['cpus']}] at {box['shuffle_partitions']} shuffle partitions,",
+        f"`{block['corpus_digest']}`). Both scale points in one warmed session",
+        f"on local[{block['cpus']}] at {block['shuffle_partitions']} shuffle partitions,",
         "under the bench timing policy. Doc-pair queries run in the",
         "resample's documented degenerate-vocabulary regime (bounds",
         "annotated); their sub-quadratic claims are gated on the",
         "Heaps-law corpus in tests/test_scaling_evidence.py.",
-        "",
-        "| query | t(sf0.1) | t(sf1) | alpha 0.1→1 | bound | claim |",
-        "|---|---|---|---|---|---|",
     ]
-    for name in HEADLINE:
-        r = results[name]
-        flag = "" if r["within_bound"] else " **OVER**"
-        md_lines.append(
-            f"| {name} | {r['t_sf0.1']} | {r['t_sf1']} | {r['alpha']}{flag} "
-            f"| {r['bound']} | {r['claim']} |"
-        )
-    md_lines += ["", f"sf1 headline queries over bound: {over or 'none'}.", ""]
-    _replace_md_section(repo, "\n## sf1 headline", md_lines)
-    print(json.dumps({"sf1_headline_over_bound": over, "n": len(HEADLINE)}))
-    return 1 if over else 0
 
 
-def _replace_md_section(repo: str, marker: str, md_lines: list[str]) -> None:
-    """Rewrite SCALING.md with ``marker``'s section replaced by
-    ``md_lines`` and every OTHER special section preserved verbatim in
-    its current order (see _md_sections)."""
-    md_path = os.path.join(repo, "SCALING.md")
-    with open(md_path) as fh:
-        md = fh.read()
-    head, sections = _md_sections(md)
-    sections[marker] = "\n" + "\n".join(md_lines).strip("\n") + "\n"
-    with open(md_path, "w") as fh:
-        fh.write(
-            head.rstrip("\n")
-            + "\n"
-            + "".join(sections[m] for m in sections)
-        )
+def _heaps_prose(block: dict) -> list[str]:
+    lo, hi = block["n_docs"]
+    return [
+        "## Heaps decade (round 12): the Σdf² family on REALISTIC text",
+        "",
+        "Corpus: Zipf(s=1.05) rank-frequency over a type universe that",
+        "GROWS with stream position (Heaps-law accumulation; novel types",
+        "enter at the rare tail, the stopword head stays stationary) —",
+        f"`scaling.py::build_heaps_documents`, md5-keyed, no RNG. {lo}",
+        f"docs: {block['lo_types']} distinct types (digest `{block['lo_digest']}`);",
+        f"{hi} docs: {block['hi_types']} distinct types (digest",
+        f"`{block['hi_digest']}`); type-growth exponent beta =",
+        f"{block['beta_types']} across the decade. This REPLACES the",
+        "unit-test-gated sub-quadratic claim with a measured one: the",
+        "committed sf1-decade block above runs the documented DEGENERATE",
+        "~31-type regime, this block runs the realistic-vocabulary regime",
+        "the 100 TB story actually depends on. Bounds are the queries'",
+        "sub-quadratic claims (2.0 / 1.7), not the 2.4 degenerate",
+        "ceilings. Both scale points in one warmed session, bench policy.",
+    ]
 
 
-def run_sf1_decade() -> int:
-    """Measure SF1_QUERIES at sf0.1 and the synthesized sf1 in ONE
-    warmed session (bench timing policy) and MERGE an 'sf1_decade'
-    block into the committed SCALING.json / an sf1 section into
-    SCALING.md. Gate: tests/test_scaling_evidence.py checks the
-    committed exponents against SF1_BOUNDS and the corpus digest
-    against the live generator version."""
-    import tempfile
+SF1_POINTS = ("sf0.1", "sf1")
+SF1_COLUMNS = ("t(sf0.1)", "t(sf1)", "alpha 0.1→1")
 
-    from flight_delays_progetto_big_data_2024_spark.plans import registry
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        get_spark,
-        release_caches,
+#: The five modes: ``python scaling.py [flag]`` runs DECADES[flag];
+#: ``--reannotate`` re-derives every stored block.
+DECADES: dict[str, Decade] = {
+    "": Decade(
+        None, None, [*HEADLINE, *EXTRA], ("0.001", "0.01", "0.1"),
+        ("t(0.001)", "t(0.01)", "t(0.1)", "alpha 0.001→0.01", "alpha 0.01→0.1"),
+        EXPONENT_BOUNDS, _grid_dirs, _grid_prose, "Queries",
+    ),
+    "--sf1": Decade(
+        "sf1_decade", "\n## sf1 decade", SF1_QUERIES, SF1_POINTS, SF1_COLUMNS,
+        SF1_BOUNDS, _sf1_docs, _sf1_prose, "sf1 queries",
+    ),
+    "--sf1-headline": Decade(
+        "sf1_headline", "\n## sf1 headline", HEADLINE, SF1_POINTS, SF1_COLUMNS,
+        {**EXPONENT_BOUNDS, **SF1_HEADLINE_BOUND_OVERRIDES}, _sf1_tables,
+        _sf1_headline_prose, "sf1 headline queries",
+    ),
+    "--heaps": Decade(
+        "heaps_decade", "\n## Heaps decade", HEAPS_QUERIES, ("5k", "50k"),
+        ("t(5k docs)", "t(50k docs)", "alpha"),
+        HEAPS_BOUNDS, _heaps_docs, _heaps_prose, "Heaps-decade queries",
+    ),
+}
+
+
+def main(argv: list[str]) -> int:
+    flag = argv[0] if argv else ""
+    if flag == "--reannotate":
+        return reannotate()
+    if flag not in DECADES:
+        print(__doc__, file=sys.stderr)
+        return 2
+    from flight_delays_progetto_big_data_2024_spark.session import get_spark
+
+    spark = get_spark(
+        "flight-delays-spark-scaling", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("flight-delays-spark-scaling-sf1", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    sf1_dir = tempfile.mkdtemp(prefix="sf1_docs_")
-    try:
-        t0 = time.perf_counter()
-        corpus_digest = build_sf1_documents(sf1_dir)
-        print(
-            f"sf1 corpus built in {time.perf_counter() - t0:.1f}s "
-            f"(digest {corpus_digest})",
-            file=sys.stderr,
-        )
-
-        # warmup: page-cache both corpora's documents + Arrow workers
-        for d in ("/root/testdata/sf0.1", sf1_dir):
-            spark.read.parquet(os.path.join(d, "documents.parquet")).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        spark.range(2).mapInPandas(lambda it: it, "id long").collect()
-
-        results: dict[str, dict] = {}
-        for name in SF1_QUERIES:
-            fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
-            t_01 = measure(spark, fn, "/root/testdata/sf0.1", release_caches)
-            print(f"{name} sf0.1: {t_01}s", file=sys.stderr)
-            t_1 = measure(spark, fn, sf1_dir, release_caches)
-            print(f"{name} sf1: {t_1}s", file=sys.stderr)
-            bound, claim = SF1_BOUNDS[name]
-            alpha = round(math.log10(t_1 / t_01), 3)
-            results[name] = {
-                "t_sf0.1": t_01,
-                "t_sf1": t_1,
-                "alpha": alpha,
-                "bound": bound,
-                "claim": claim,
-                "within_bound": alpha <= bound,
-            }
-    finally:
-        import shutil as _shutil
-
-        _shutil.rmtree(sf1_dir, ignore_errors=True)
-
-    return _write_sf1(results, corpus_digest)
-
-
-def reannotate_sf1() -> int:
-    """Re-derive the bound/claim/within_bound annotations of the
-    committed sf1_decade block from the CURRENT SF1_BOUNDS without
-    re-measuring — the measured times and alphas are untouched. Used
-    when a bound is re-documented (e.g. the round-8 degenerate-regime
-    re-classification of q156/q85); reproducible, so the annotations
-    can never drift from scaling.py's constants."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(repo, "SCALING.json")) as fh:
-        stored = json.load(fh)["sf1_decade"]
-    results = {}
-    for name, r in stored["queries"].items():
-        bound, claim = SF1_BOUNDS[name]
-        alpha = round(math.log10(r["t_sf1"] / r["t_sf0.1"]), 3)
-        results[name] = {
-            "t_sf0.1": r["t_sf0.1"],
-            "t_sf1": r["t_sf1"],
-            "alpha": alpha,
-            "bound": bound,
-            "claim": claim,
-            "within_bound": alpha <= bound,
-        }
-    return _write_sf1(results, stored["corpus_digest"])
-
-
-def _md_sections(md: str) -> tuple[str, dict[str, str]]:
-    """Split SCALING.md into (everything before the first '## ' special
-    section, {marker: section text}) for the independently-written
-    sections ('## sf1 decade', '## sf1 headline', '## Heaps decade').
-    Each writer replaces ITS section and re-appends the others — the
-    previous truncate-at-marker forms silently dropped any section that
-    happened to sort after the one being rewritten."""
-    markers = ["\n## sf1 decade", "\n## sf1 headline", "\n## Heaps decade"]
-    found = sorted(
-        (md.index(m), m) for m in markers if m in md
-    )
-    if not found:
-        return md, {}
-    head = md[: found[0][0]]
-    sections: dict[str, str] = {}
-    for (start, m), nxt in zip(found, found[1:] + [(len(md), None)]):
-        sections[m] = md[start: nxt[0]]
-    return head, sections
-
-
-def _write_sf1(results: dict[str, dict], corpus_digest: str) -> int:
-    repo = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(repo, "SCALING.json")
-    with open(path) as fh:
-        record = json.load(fh)
-    record["sf1_decade"] = {
-        "generator": SF1_GENERATOR_VERSION,
-        "n_docs": SF1_N_DOCS,
-        "corpus_digest": corpus_digest,
-        "queries": results,
-    }
-    with open(path, "w") as fh:
-        json.dump(record, fh, indent=1, sort_keys=True)
-
-    over = [n for n, r in results.items() if not r["within_bound"]]
-    md_lines = [
-        "",
-        "## sf1 decade (round 8): the Σdf² family on a REAL 10× decade",
-        "",
-        f"Corpus: {SF1_N_DOCS} docs synthesized by deterministic empirical",
-        "resampling of the sf0.1 documents generator statistics (same",
-        "degenerate ~31-word vocabulary, length law, source/lang mixture —",
-        "`scaling.py::build_sf1_documents`, md5-keyed, no RNG; digest",
-        f"`{corpus_digest}`). Both scale points measured in one warmed",
-        "session under the bench timing policy.",
-        "",
-        "| query | t(sf0.1) | t(sf1) | alpha 0.1→1 | bound | claim |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name in SF1_QUERIES:
-        r = results[name]
-        flag = "" if r["within_bound"] else " **OVER**"
-        md_lines.append(
-            f"| {name} | {r['t_sf0.1']} | {r['t_sf1']} | {r['alpha']}{flag} "
-            f"| {r['bound']} | {r['claim']} |"
-        )
-    md_lines += ["", f"sf1 queries over bound: {over or 'none'}.", ""]
-    _replace_md_section(repo, "\n## sf1 decade", md_lines)
-    print(json.dumps({"sf1_over_bound": over, "n": len(SF1_QUERIES)}))
-    return 1 if over else 0
-
-
-def measure(spark, fn, sf_dir: str, release) -> float:
-    samples: list[float] = []
-    while True:
-        start = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        samples.append(time.perf_counter() - start)
-        release(spark)
-        if not _needs_more_samples(samples):
-            break
-    return round(sorted(samples)[(len(samples) - 1) // 2], 3)
-
-
-def main() -> int:
-    from flight_delays_progetto_big_data_2024_spark.plans import registry
-    from flight_delays_progetto_big_data_2024_spark.session import (
-        get_spark,
-        release_caches,
-    )
-    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
-        TESTDATA_TABLES,
-        Catalog,
-    )
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("flight-delays-spark-scaling", cpus=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    names = [*HEADLINE, *EXTRA]
-    results: dict[str, dict] = {n: {"t": {}} for n in names}
-
-    for sf_dir in SF_DIRS:
-        sf = sf_dir.rsplit("sf", 1)[1]
-        # same untimed warmup as bench.py: footer reads + Arrow workers
-        cat = Catalog(spark, sf_dir)
-        for t in TESTDATA_TABLES:
-            getattr(cat, t).count()
-        registry.QUERIES[HEADLINE[0]](spark, sf_dir).collect()
-        spark.range(2).mapInPandas(lambda it: it, "id long").collect()
-        release_caches(spark)
-        for name in names:
-            fn = BENCH_OVERRIDES.get(name, registry.QUERIES[name])
-            results[name]["t"][sf] = measure(spark, fn, sf_dir, release_caches)
-            print(f"{name} sf{sf}: {results[name]['t'][sf]}s", file=sys.stderr)
-
-    for name, rec in results.items():
-        t = rec["t"]
-        rec["alpha_low"] = round(math.log10(t["0.01"] / t["0.001"]), 3)
-        rec["alpha_top"] = round(math.log10(t["0.1"] / t["0.01"]), 3)
-        bound, claim = EXPONENT_BOUNDS[name]
-        rec["bound"] = bound
-        rec["claim"] = claim
-        rec["within_bound"] = rec["alpha_top"] <= bound
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    # MERGE into the committed record: the sf1_decade block is measured
-    # by a separate ~40-min `--sf1` run — a plain dump here would
-    # silently destroy that stored evidence (and with it the
-    # `--sf1-reannotate` path, which re-derives annotations from the
-    # stored times). Found round 9, before it ever fired.
-    json_path = os.path.join(repo, "SCALING.json")
-    merged: dict = {}
-    if os.path.exists(json_path):
-        with open(json_path) as fh:
-            merged = json.load(fh)
-    merged = {
-        k: merged[k] for k in ("sf1_decade", "sf1_headline") if k in merged
-    }
-    merged.update(results)
-    with open(json_path, "w") as fh:
-        json.dump(merged, fh, indent=1, sort_keys=True)
-
-    lines = [
-        "# SCALING — measured growth curves (round 5)",
-        "",
-        "`python scaling.py`, run alone, on local[32]. `t(sf)` is the",
-        "bench-policy median (cold caches, rep tiers). `alpha` is the",
-        "per-decade exponent `log10(t_hi/t_lo)`; the fixed ~0.1-0.5s",
-        "scheduling floor DEFLATES alpha at these sizes, so a linear",
-        "operator reads below 1 and anything near 2 is genuinely",
-        "quadratic. `bound` is the documented ceiling enforced by",
-        "tests/test_scaling_evidence.py against this committed file.",
-        "",
-        "| query | t(0.001) | t(0.01) | t(0.1) | alpha 0.001→0.01 | alpha 0.01→0.1 | bound | claim |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    for name in names:
-        r = results[name]
-        t = r["t"]
-        flag = "" if r["within_bound"] else " **OVER**"
-        lines.append(
-            f"| {name} | {t['0.001']} | {t['0.01']} | {t['0.1']} "
-            f"| {r['alpha_low']} | {r['alpha_top']}{flag} | {r['bound']} | {r['claim']} |"
-        )
-    over = [n for n, r in results.items() if not r["within_bound"]]
-    lines += [
-        "",
-        f"Queries over bound: {over or 'none'}.",
-        "",
-    ]
-    # preserve the committed sf1-decade section (written only by the
-    # separate --sf1 run) — same destructive-rewrite hazard as the JSON
-    md_path = os.path.join(repo, "SCALING.md")
-    sf1_tail = ""
-    if os.path.exists(md_path):
-        with open(md_path) as fh:
-            old_md = fh.read()
-        for marker in ("\n## sf1 decade", "\n## sf1 headline"):
-            if marker in old_md:
-                sf1_tail = old_md[old_md.index(marker):]
-                break
-    with open(md_path, "w") as fh:
-        fh.write("\n".join(lines).rstrip("\n") + "\n" + sf1_tail)
-    print(json.dumps({"over_bound": over, "n": len(names)}))
-    return 1 if over else 0
+    return run_decade(spark, DECADES[flag])
 
 
 if __name__ == "__main__":
-    if "--sf1-reannotate" in sys.argv:
-        sys.exit(reannotate_sf1())
-    if "--sf1-headline" in sys.argv:
-        sys.exit(run_sf1_headline())
-    if "--sf1" in sys.argv:
-        sys.exit(run_sf1_decade())
-    if "--heaps" in sys.argv:
-        sys.exit(run_heaps_decade())
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

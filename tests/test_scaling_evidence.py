@@ -450,3 +450,121 @@ def test_heaps_corpus_candidates_grow_subquadratically(spark):
                 hi / lo
             )
             assert beta < 2.0, (counts, lo, hi, beta)
+
+
+def _evidence_copy(dst) -> str:
+    import shutil
+
+    os.makedirs(dst, exist_ok=True)
+    for name in ("SCALING.json", "SCALING.md"):
+        shutil.copy(os.path.join(REPO, name), dst)
+    return str(dst)
+
+
+def _read(repo: str, name: str):
+    with open(os.path.join(repo, name)) as fh:
+        return json.load(fh) if name.endswith(".json") else fh.read()
+
+
+def test_evidence_equals_its_derivation_from_stored_times(tmp_path):
+    """Staleness gate: every block's exponents and bound/claim/
+    within_bound annotations must equal what the current bound tables
+    derive from the stored times, and SCALING.md must equal the render
+    of SCALING.json. Re-documenting a bound or claim without
+    re-deriving the evidence (`python scaling.py --reannotate`) fails
+    here even when the bound's value is unchanged."""
+    import scaling
+
+    repo = _evidence_copy(tmp_path)
+    scaling.reannotate(repo)
+    for name in ("SCALING.json", "SCALING.md"):
+        assert _read(repo, name) == _read(REPO, name), (
+            f"{name} is stale against scaling.py — run `python scaling.py "
+            "--reannotate` and commit the result"
+        )
+
+
+def test_writing_one_block_leaves_every_other_block_and_section(tmp_path):
+    """Each mode writes only its own block of SCALING.json and its own
+    part of SCALING.md: the grid included, a write leaves every other
+    block and section byte-identical (a grid run once dropped the
+    heaps_decade block)."""
+    import scaling
+
+    committed_json = _read(REPO, "SCALING.json")
+    committed_head, committed_sections = scaling._md_sections(_read(REPO, "SCALING.md"))
+    named = [d.key for d in scaling.DECADES.values() if d.key]
+    for flag, d in scaling.DECADES.items():
+        repo = _evidence_copy(tmp_path / (flag or "grid"))
+        stored = committed_json if d.key is None else committed_json[d.key]
+        queries = {
+            name: scaling._record(
+                d, name, [2 * t for t in scaling._times(d, scaling._queries(d, stored)[name])]
+            )
+            for name in d.queries
+        }
+        block = scaling._block(d, {k: v for k, v in stored.items() if k != "queries"}, queries)
+        scaling.write_block(d, block, repo)
+
+        record = _read(repo, "SCALING.json")
+        head, sections = scaling._md_sections(_read(repo, "SCALING.md"))
+        assert list(sections) == list(committed_sections)
+        for key in named:
+            expected = block if key == d.key else committed_json[key]
+            assert record[key] == expected, (flag, key)
+        grid = {k: v for k, v in record.items() if k not in named}
+        assert grid == (block if d.key is None else _scaling_record()), flag
+        assert head == (scaling.render(d, block) if d.key is None else committed_head)
+        for marker, text in sections.items():
+            expected = scaling.render(d, block) if marker == d.marker else committed_sections[marker]
+            assert text == expected, (flag, marker)
+
+
+def test_decade_runner_smoke(spark, tmp_path, monkeypatch):
+    """The one decade runner end to end on a tiny decade (sf0.001 ->
+    sf0.01, two cheap headline queries, two passes) into a temp copy of
+    the evidence files: the block carries the stored keys and its
+    SCALING.md section is the render of that block."""
+    import dataclasses
+
+    import bench
+    import scaling
+
+    monkeypatch.setattr(bench, "N_PASSES", 2)
+    meta = {"generator": "smoke", "n_docs": 0, "corpus_digest": "smoke"}
+    d = dataclasses.replace(
+        scaling.DECADES["--sf1"],
+        queries=["q13_return_ratio_by_priority", "q23_dedup_exact_documents"],
+        points=("0.001", "0.01"),
+        columns=("t(0.001)", "t(0.01)", "alpha 0.001→0.01"),
+        bounds=scaling.EXPONENT_BOUNDS,
+        build=lambda spark, tmp: (scaling.SF_DIRS[:2], meta),
+    )
+    repo = _evidence_copy(tmp_path)
+    rc = scaling.run_decade(spark, d, repo)
+
+    block = _read(repo, "SCALING.json")[d.key]
+    assert {k: v for k, v in block.items() if k != "queries"} == meta
+    assert list(block["queries"]) == sorted(d.queries)
+    for name, r in block["queries"].items():
+        assert set(r) == {"t_0.001", "t_0.01", "alpha", "bound", "claim", "within_bound"}
+        assert r["t_0.001"] > 0 and r["t_0.01"] > 0, (name, r)
+        assert (r["bound"], r["claim"]) == scaling.EXPONENT_BOUNDS[name]
+    assert rc == (1 if scaling._over(d, block) else 0)
+    _head, sections = scaling._md_sections(_read(repo, "SCALING.md"))
+    assert sections[d.marker] == scaling.render(d, block)
+    assert "| q13_return_ratio_by_priority | " in sections[d.marker]
+
+
+def test_committed_corpus_digests_match_the_live_generators(tmp_path):
+    """The synthesized corpora behind the sf1 and Heaps decades are pure
+    functions of their generators: the committed digests (and the
+    Heaps lo point's type count) must be what the live code builds, so
+    an edit to a generator invalidates its evidence."""
+    import scaling
+
+    rec = _read(REPO, "SCALING.json")
+    heaps = rec["heaps_decade"]
+    lo = scaling.build_heaps_documents(str(tmp_path), scaling.HEAPS_N_DOCS_LO)
+    assert lo == (heaps["lo_digest"], heaps["lo_types"])
+    assert scaling.build_sf1_documents(str(tmp_path)) == rec["sf1_decade"]["corpus_digest"]

@@ -41,7 +41,7 @@ def main() -> int:
     args = parser.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from bench import HEADLINE, BENCH_OVERRIDES, _lower_median
+    from bench import BENCH_OVERRIDES, HEADLINE, _lower_median, warm_up
 
     from flight_delays_progetto_big_data_2024_spark.observe import observe
     from flight_delays_progetto_big_data_2024_spark.plans import registry
@@ -49,24 +49,11 @@ def main() -> int:
         get_spark,
         release_caches,
     )
-    from flight_delays_progetto_big_data_2024_spark.sources.readers import (
-        TESTDATA_TABLES,
-        Catalog,
-    )
 
     names = args.queries or list(HEADLINE)
     spark = get_spark("noop-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # same warm-up as bench.py: page cache + JIT + Arrow worker pool
-    cat = Catalog(spark, sf_dir)
-    for table in TESTDATA_TABLES:
-        cat.table(table).write.format("noop").mode("overwrite").save()
-    registry.QUERIES[names[0]](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    release_caches(spark)
-    spark.range(2).mapInPandas(lambda it: it, "id long").collect()
+    warm_up(spark, [sf_dir], registry.QUERIES[names[0]])
 
     samples: dict[str, list[float]] = {n: [] for n in names}
     executions: dict[str, int] = dict.fromkeys(names, 0)
