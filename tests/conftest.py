@@ -30,3 +30,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def oracle(sf_dir):
+    """DuckDB views over the parity-test tables."""
+    from tests.oracle_utils import oracle_connection
+
+    with oracle_connection(sf_dir) as con:
+        yield con

@@ -18,16 +18,36 @@ import pandas as pd
 from flight_delays_progetto_big_data_2024_spark.sources.readers import TESTDATA_TABLES
 
 
-def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table over the
+    parquet files in ``sf_dir``; the caller closes it."""
     con = duckdb.connect()
-    try:
-        for t in TESTDATA_TABLES:
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
+    with oracle_connection(sf_dir) as con:
         return con.execute(sql).fetchdf()
+
+
+def assert_query_parity(spark, name: str, sf_dir: str, con) -> int:
+    """Run registered query ``name`` on ``sf_dir`` and its oracle on
+    ``con`` (an ``oracle_connection`` over the same directory), release
+    the session's caches whatever happened, then assert parity. Returns
+    the row count. The release keeps a later query from reading a
+    relation this one persisted (``session.release_caches``)."""
+    from flight_delays_progetto_big_data_2024_spark.plans import registry
+    from flight_delays_progetto_big_data_2024_spark.session import release_caches
+
+    try:
+        got = registry.QUERIES[name](spark, sf_dir).toPandas()
+        want = con.execute(registry.ORACLE[name]).fetchdf()
     finally:
-        con.close()
+        release_caches(spark)
+    assert_pandas_parity(got, want)
+    return len(got)
 
 
 def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -139,9 +159,3 @@ def assert_pandas_parity(
         atol=atol,
     )
     assert_zero_sign_parity(actual, expected)
-
-
-def assert_parity(spark_df, sql: str, sf_dir: str, rtol: float = 1e-9, atol: float = 1e-9) -> None:
-    assert_pandas_parity(
-        spark_df.toPandas(), run_oracle(sql, sf_dir), rtol=rtol, atol=atol
-    )

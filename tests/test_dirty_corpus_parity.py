@@ -18,13 +18,13 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from pathlib import Path
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry
-from tests.oracle_utils import assert_pandas_parity
-from tools.dirty_sweep import DIRTY, TABLES, build_dirty
+from tests.oracle_utils import assert_query_parity, oracle_connection
+from tools.dirty_sweep import DIRTY, build_dirty
 
 #: query -> the wave-5 defect class it pins
 PINNED = {
@@ -74,15 +74,9 @@ PINNED = {
 @pytest.fixture(scope="module")
 def dirty_env():
     tmp = tempfile.mkdtemp(prefix="dirty_parity_")
-    build_dirty(__import__("pathlib").Path(tmp))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{tmp}/{t}.parquet')"
-        )
-    yield tmp, con
-    con.close()
+    build_dirty(Path(tmp))
+    with oracle_connection(tmp) as con:
+        yield tmp, con
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -106,9 +100,7 @@ def test_planted_nan_survives_parquet(dirty_env):
 @pytest.mark.parametrize("name", sorted(PINNED))
 def test_dirty_corpus_engine_parity(spark, dirty_env, name):
     tmp, con = dirty_env
-    got = entry.queries()[name](spark, tmp).toPandas()
-    want = con.execute(entry.oracle_sql()[name]).fetchdf()
-    assert_pandas_parity(got, want)
+    assert_query_parity(spark, name, tmp, con)
 
 
 def test_positive_control_pairs_surface(spark, dirty_env):

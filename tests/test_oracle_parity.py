@@ -4,13 +4,12 @@ the local mirror of the driver's t2 correctness gate, at sf0.001."""
 import pytest
 
 from flight_delays_progetto_big_data_2024_spark.plans import registry
-from tests.oracle_utils import assert_parity
+from tests.oracle_utils import assert_query_parity
 
 
 @pytest.mark.parametrize("name", sorted(registry.ORACLE))
-def test_query_matches_oracle(spark, sf_dir, name):
-    result = registry.QUERIES[name](spark, sf_dir)
-    assert_parity(result, registry.ORACLE[name], sf_dir)
+def test_query_matches_oracle(spark, sf_dir, oracle, name):
+    assert_query_parity(spark, name, sf_dir, oracle)
 
 
 def test_comparator_distinguishes_negative_zero():

@@ -11,12 +11,10 @@ window-value functions) under the same layout.
 """
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-import __spark_entry__ as entry
-from tests.conftest import SF_DIR
-from tests.oracle_utils import assert_pandas_parity
+from tests.oracle_utils import assert_query_parity
+from tools.dirty_sweep import hostile_layout
 
 #: queries whose plans lean hardest on deterministic tie-breaks
 RISKY = [
@@ -32,43 +30,11 @@ RISKY = [
 
 
 @pytest.fixture(scope="module")
-def hostile_layout(spark):
-    saved = {
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.files.maxPartitionBytes": spark.conf.get(
-            "spark.sql.files.maxPartitionBytes"
-        ),
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+def hostile(spark):
+    with hostile_layout(spark):
         yield spark
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-
-
-@pytest.fixture(scope="module")
-def oracle():
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield con
-    con.close()
 
 
 @pytest.mark.parametrize("name", RISKY)
-def test_result_invariant_under_hostile_layout(hostile_layout, oracle, name):
-    got = entry.queries()[name](hostile_layout, SF_DIR).toPandas()
-    want = oracle.execute(entry.oracle_sql()[name]).fetchdf()
-    assert_pandas_parity(got, want)
+def test_result_invariant_under_hostile_layout(hostile, sf_dir, oracle, name):
+    assert_query_parity(hostile, name, sf_dir, oracle)

@@ -17,6 +17,7 @@ from flight_delays_progetto_big_data_2024_spark.operators.temporal import (
     session_windows,
 )
 from tests.graph_paths import PATHS, graph_path
+from tools.dirty_sweep import plant
 
 _SETTINGS = dict(
     max_examples=8,
@@ -653,67 +654,12 @@ _DIRTY_TEXTS = [
 ]
 
 
-def _write_dirty_sf(tmp, table, rows):
-    """sf0.001 with `rows` appended to `table`; all other tables
-    symlinked (both engines follow symlinks). NaN/Inf planted via
-    DuckDB SQL literals — the pandas->parquet path silently rewrites
-    NaN as NULL (wave-5 harness rule)."""
-    import os
-    from pathlib import Path
-
-    import duckdb
-
-    from tools.dirty_sweep import _sql_lit
-
-    src = "/root/testdata/sf0.001"
-    tmp = Path(tmp)
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        if t != table:
-            os.symlink(f"{src}/{t}.parquet", tmp / f"{t}.parquet")
-    con = duckdb.connect()
-    schema = con.execute(
-        f"DESCRIBE SELECT * FROM read_parquet('{src}/{table}.parquet')"
-    ).fetchall()
-    cols = [c[0] for c in schema]
-    types = {c[0]: c[1] for c in schema}
-    rows_sql = " UNION ALL ".join(
-        "SELECT " + ", ".join(
-            f"{_sql_lit(row.get(c), types[c])} AS {c}" for c in cols
-        )
-        for row in rows
-    )
-    sel = f"SELECT * FROM read_parquet('{src}/{table}.parquet')"
-    if rows:
-        sel += f" UNION ALL {rows_sql}"
-    con.execute(f"COPY ({sel}) TO '{tmp / (table + '.parquet')}' (FORMAT parquet)")
-    con.close()
-
-
 def _assert_queries_match_oracles(spark, sf_dir, names):
-    import duckdb
+    from tests.oracle_utils import assert_query_parity, oracle_connection
 
-    import __spark_entry__ as entry
-    from tests.oracle_utils import assert_pandas_parity
-
-    qs, osql = entry.queries(), entry.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    try:
+    with oracle_connection(sf_dir) as con:
         for name in names:
-            got = qs[name](spark, str(sf_dir)).toPandas()
-            want = con.execute(osql[name]).fetchdf()
-            assert_pandas_parity(got, want)
-    finally:
-        con.close()
+            assert_query_parity(spark, name, sf_dir, con)
 
 
 dirty_docs_strategy = st.lists(
@@ -742,8 +688,6 @@ def test_curation_funnel_composes_domain_rules_on_dirty_corpus(spark, docs):
     fabricated keys into downstream stages."""
     import tempfile
 
-    from flight_delays_progetto_big_data_2024_spark.session import release_caches
-
     rows = [
         {
             "doc_id": 991000 + off,
@@ -755,12 +699,11 @@ def test_curation_funnel_composes_domain_rules_on_dirty_corpus(spark, docs):
         for off, ti, lang, srcv, n_chars in docs
     ]
     with tempfile.TemporaryDirectory(prefix="dirty_prop_docs_") as tmp:
-        _write_dirty_sf(tmp, "documents", rows)
+        plant(tmp, {"documents": rows})
         _assert_queries_match_oracles(
             spark, tmp,
             ["q159_full_curation_pipeline", "q98_training_mixture_plan"],
         )
-    release_caches(spark)
 
 
 dirty_events_strategy = st.lists(
@@ -793,8 +736,6 @@ def test_session_pipeline_composes_domain_rules_on_dirty_events(
 
     import pandas as pd
 
-    from flight_delays_progetto_big_data_2024_spark.session import release_caches
-
     base = pd.Timestamp("2024-01-05 09:00:00")
     rows = [
         {
@@ -808,9 +749,8 @@ def test_session_pipeline_composes_domain_rules_on_dirty_events(
         for off, m, uid, etype, val, props in events
     ]
     with tempfile.TemporaryDirectory(prefix="dirty_prop_events_") as tmp:
-        _write_dirty_sf(tmp, "events", rows)
+        plant(tmp, {"events": rows})
         _assert_queries_match_oracles(
             spark, tmp,
             ["q41_user_session_windows", "q171_session_depth_conversion"],
         )
-    release_caches(spark)
