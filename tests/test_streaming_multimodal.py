@@ -2,6 +2,7 @@
 the same files) and multimodal mapInPandas plumbing tests."""
 
 import shutil
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -384,6 +385,117 @@ def test_checkpoint_pins_its_state_width(spark, sf_dir, tmp_path):
     )
     assert len(want) > 0
     assert_pandas_parity(got, want)
+
+
+@contextmanager
+def process_launches(spark, tmp_path):
+    """Record the commands the session's JVM launches inside the block
+    (JFR ``jdk.ProcessStart``). The yielded list is filled on exit."""
+    jvm = spark.sparkContext._jvm
+    commands = []
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        yield commands
+    finally:
+        recording.stop()
+        dump = jvm.java.io.File(str(tmp_path / "launches.jfr")).toPath()
+        recording.dump(dump)
+        recording.close()
+        events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+        commands.extend(e.getString("command") for e in events)
+
+
+_EVENTS = "event_id long, ts timestamp, user_id long, value double"
+
+
+def _readlinks(commands):
+    return [c for c in commands if c.startswith("readlink")]
+
+
+def _hourly_stream(spark, src, ckpt, emitted):
+    """Update-mode hourly counts over ``src`` (one file per micro-batch),
+    each emitted row tagged with its batch id."""
+    stream = spark.readStream.schema(_EVENTS).option("maxFilesPerTrigger", "1").parquet(src)
+    agg = stream_tumbling_counts(stream, window="1 hour", watermark="30 minutes")
+    q = (
+        agg.writeStream.outputMode("update")
+        .foreachBatch(lambda df, i: emitted.extend((i, *r) for r in df.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "stream did not finish in 120s"
+
+
+def _drop(spark, src, name, hours_minutes):
+    """One parquet file of 1.0-valued events at 2024-01-01 ``h:m``, newer
+    than every earlier drop."""
+    import glob
+    import os
+    import time
+    from datetime import datetime
+
+    rows = [(i, datetime(2024, 1, 1, h, m), 1, 1.0) for i, (h, m) in enumerate(hours_minutes)]
+    staging = f"{src}-{name}"
+    spark.createDataFrame(rows, _EVENTS).coalesce(1).write.parquet(staging)
+    (part,) = glob.glob(f"{staging}/part-*.parquet")
+    dest = f"{src}/{name}.parquet"
+    shutil.move(part, dest)
+    # the file source admits drops in modification-time order
+    mtime = time.time() - 100 + len(os.listdir(src))
+    os.utime(dest, (mtime, mtime))
+
+
+def test_checkpoint_writes_fork_no_readlink(spark, tmp_path):
+    """The session's checkpoint file manager renames with rename(2):
+    a two-drop windowed aggregation commits its offset log, commit log
+    and state-store deltas without launching one ``readlink``. Spark's
+    default FileContext manager forks one per path checked when no
+    native Hadoop library is loaded (472 for this stream at 8 state
+    partitions)."""
+    src, ckpt = tmp_path / "in", str(tmp_path / "ckpt")
+    src.mkdir()
+    _drop(spark, src, "d1", [(10, 10), (10, 20)])
+    _drop(spark, src, "d2", [(10, 40), (11, 5)])
+    emitted = []
+    with process_launches(spark, tmp_path) as commands:
+        _hourly_stream(spark, str(src), ckpt, emitted)
+    last = {r[1]: r[2] for r in sorted(emitted)}
+    assert last == {"2024-01-01 10:00:00": 3, "2024-01-01 11:00:00": 1}
+    assert _readlinks(commands) == []
+
+
+def test_legacy_checkpoint_manager_restarts_under_session_default(spark, tmp_path):
+    """A checkpoint first written by Spark's default FileContext manager
+    (which forks ``readlink`` here) restarts under the session's manager
+    and continues its state: the restart runs only new batches and the
+    10:00 window adds to the count from before the restart."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    src, ckpt = tmp_path / "in", str(tmp_path / "ckpt")
+    src.mkdir()
+    first, second = [], []
+    prev = spark.conf.get(key)
+    _drop(spark, src, "d1", [(10, 10), (10, 20)])
+    spark.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    try:
+        with process_launches(spark, tmp_path) as legacy:
+            _hourly_stream(spark, str(src), ckpt, first)
+    finally:
+        spark.conf.set(key, prev)
+    assert _readlinks(legacy)
+
+    _drop(spark, src, "d2", [(10, 40), (11, 5)])
+    with process_launches(spark, tmp_path) as restarted:
+        _hourly_stream(spark, str(src), ckpt, second)
+    assert _readlinks(restarted) == []
+    assert {r[1:3] for r in first} == {("2024-01-01 10:00:00", 2)}
+    assert min(r[0] for r in second) > max(r[0] for r in first)
+    assert {r[1:3] for r in second} == {("2024-01-01 10:00:00", 3), ("2024-01-01 11:00:00", 1)}
 
 
 def test_extract_features_array_output_and_null_skip(spark):
